@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.store.Store
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Each entry is one operator/capability from SURVEY.md §2, expressed
@@ -1145,7 +1147,7 @@ object SparkEntry {
   }
 
   // Persisted-index ANN: the corpus signature pass is paid once into a
-  // parquet (id, band, bucket) table + a _params side table; the query
+  // parquet (id, band, bucket) table + a params side table; the query
   // reads the index instead of recomputing signatures. Same exact-re-rank
   // argument as s2 → same brute-force window oracle.
   define("s5_ann_lsh_persisted",
@@ -1170,7 +1172,7 @@ object SparkEntry {
   // (8 B/vector vs 256 B float32 — 32×), queries score codes via ADC
   // lookup tables, exact cosine re-ranks the top-192 candidates. Candidate
   // coverage of the true top-5 is total at these parameters (PipelineSpec
-  // asserts it independently; tools.PqSweep measured the recall curve), so
+  // asserts it independently; NOTES.md records the recall curve), so
   // the exact re-rank reproduces the brute-force answer and the same
   // window oracle applies.
   define("s6_ann_pq",
@@ -1200,7 +1202,7 @@ object SparkEntry {
   }
 
   // Persisted PQ index: train+encode once to parquet (codebook + codes +
-  // _params), query from the stored codes — no per-batch train or encode.
+  // params), query from the stored codes — no per-batch train or encode.
   // Same parameters as s6, so the same candidate-coverage argument makes
   // the brute-force window oracle apply.
   define("s9_ann_pq_persisted",
@@ -1460,7 +1462,7 @@ object SparkEntry {
         emb.filter(col("vec_id") >= 250 && col("vec_id") % 2 === 1),
         "embedding", "vec_id", p, compactFileThreshold = 1)
       val live = java.nio.file.Paths
-        .get(Similarity.resolveDataDir(p, "cells")).getFileName.toString
+        .get(Store.resolveDataDir(p, "cells")).getFileName.toString
       require(live.startsWith("cells.g"),
         s"auto-compaction never fired on the ANN append path: live dir is $live")
     }
@@ -1878,7 +1880,7 @@ object SparkEntry {
   // + member-mean centroids stored once; queries probe stored centroids
   // and touch only probed cells' rows. The build CALIBRATES the index
   // (calibrateIvfIndex, recall target 1.0 measured on the full query
-  // set vs brute force) and stores cal_nprobe in _params; the serve uses
+  // set vs brute force) and stores cal_nprobe in params; the serve uses
   // the stored value by default — the knob is index metadata, not a
   // caller literal. Exactness transfer: the calibration sample IS this
   // gate's query set, so target-1.0 recall vs brute force on it makes
@@ -1912,7 +1914,7 @@ object SparkEntry {
   // cells AND scores M-byte codes within them. The build CALIBRATES both
   // knobs (calibrateIvfPqIndex: smallest nprobe at the rerank ceiling,
   // then smallest rerank at that nprobe, recall target 1.0 measured on
-  // the full query set vs brute force) into _params; the serve defaults
+  // the full query set vs brute force) into params; the serve defaults
   // to the stored values. Exactness transfer: the calibration sample IS
   // this gate's query set, so the stored knobs deliver the brute-force
   // pair set for it, and exact-cosine re-rank ordering makes the ranks
@@ -3026,7 +3028,7 @@ object SparkEntry {
   }
 
   // The serve half: train on the first 400 docs, PERSIST the model
-  // (classes + cond counts + `_params`, the same layout discipline as the
+  // (classes + cond counts + params, the same layout discipline as the
   // ANN indexes — a classifier is serving state), then load and score the
   // held-out slice. Laplace smoothing makes OOV tokens total: a token the
   // model never saw contributes ln(alpha / (n_tok_y + alpha·V)) for every
@@ -3630,7 +3632,7 @@ object SparkEntry {
         "group", "summary", "n_items", s"$p/hh", m, sliceId = "m2",
         compactSliceThreshold = 2)
       val live = java.nio.file.Paths
-        .get(Similarity.resolveDataDir(s"$p/hh", "summaries"))
+        .get(Store.resolveDataDir(s"$p/hh", "summaries"))
         .getFileName.toString
       require(live.startsWith("summaries.g"),
         s"auto-compaction never fired on append: live dir is $live")
@@ -4396,7 +4398,7 @@ object SparkEntry {
   }
 
   // The serve half: build the inverted index ONCE per JVM (postings +
-  // `_params` corpus stats/knobs as index metadata — the calibrated-ANN
+  // params corpus stats/knobs as index metadata — the calibrated-ANN
   // discipline), then score strictly from the persisted files. Serving
   // shuffles nothing corpus-sized: the query term set is broadcast against
   // the postings scan and only (q_id, n_id, score) rows reach the window.
@@ -4415,7 +4417,7 @@ object SparkEntry {
   // get one): the index is built on a THIRD of the corpus and grown to
   // full coverage by two appends. Because the v2 layout stores no df
   // (it re-derives per serve from the slice the serve touches) and the
-  // `_params` stats update as integer sums, the served answer provably
+  // params stats update as integer sums, the served answer provably
   // equals a from-scratch build over everything ingested — so the r1/r2
   // full-corpus oracle applies verbatim to the appended index. Appends
   // never read the existing corpus, let alone rewrite it: O(batch
@@ -4457,7 +4459,7 @@ object SparkEntry {
         docs.filter(col("doc_id") % 3 === 2), "text", "doc_id",
         s"$p/bm25", compactFileThreshold = 1)
       val live = java.nio.file.Paths
-        .get(Similarity.resolveDataDir(s"$p/bm25", "index"))
+        .get(Store.resolveDataDir(s"$p/bm25", "index"))
         .getFileName.toString
       require(live.startsWith("index.g"),
         s"auto-compaction never fired on append: live dir is $live")
@@ -5523,7 +5525,7 @@ object SparkEntry {
         evalSet.filter(col("doc_id") % 60 === 40), "text", "doc_id",
         s"$p/contam", compactFileThreshold = 1)
       val live = java.nio.file.Paths
-        .get(Similarity.resolveDataDir(s"$p/contam", "index"))
+        .get(Store.resolveDataDir(s"$p/contam", "index"))
         .getFileName.toString
       require(live.startsWith("index.g"),
         s"auto-compaction never fired on append: live dir is $live")
@@ -6433,7 +6435,7 @@ object SparkEntry {
         baseDir = Some(base.toString), compactSliceThreshold = 2)
       .select(col("group").as("lang"), col("value").cast("long").as("p50"))
     val live = java.nio.file.Paths
-      .get(Similarity.resolveDataDir(
+      .get(Store.resolveDataDir(
         base.resolve("qstore").toString, "hist"))
       .getFileName.toString
     require(live.startsWith("hist.g"),
@@ -6518,7 +6520,7 @@ object SparkEntry {
     val out = graft.streaming.Streaming.streamingLineDedup(s, d, "st34",
       baseDir = Some(base.toString), compactFileThreshold = 2)
     val live = java.nio.file.Paths
-      .get(Similarity.resolveDataDir(
+      .get(Store.resolveDataDir(
         base.resolve("lineidx").toString, "lines"))
       .getFileName.toString
     require(live.startsWith("lines.g"),
@@ -6583,7 +6585,7 @@ object SparkEntry {
     val out = graft.streaming.Streaming.streamingSpanDedup(s, d, "st35",
       baseDir = Some(base.toString), compactFileThreshold = 2)
     val live = java.nio.file.Paths
-      .get(Similarity.resolveDataDir(
+      .get(Store.resolveDataDir(
         base.resolve("winidx").toString, "wins"))
       .getFileName.toString
     require(live.startsWith("wins.g"),
@@ -6618,7 +6620,7 @@ object SparkEntry {
       urlFrontierCol, baseDir = Some(base.toString),
       compactFileThreshold = 2)
     val live = java.nio.file.Paths
-      .get(Similarity.resolveDataDir(
+      .get(Store.resolveDataDir(
         base.resolve("urlidx").toString, "urls"))
       .getFileName.toString
     require(live.startsWith("urls.g"),

@@ -230,11 +230,14 @@ object TextKernels {
     * — the codegen'd replacement for the
     * `array_sort` → `runStarts` → `runsFromStarts` HOF chain (and, for
     * n ≥ 2, for the zip_with window construction feeding it). Runs come
-    * out in ascending UTF8 byte order — the `array_sort` order — so the
-    * exploded row order (and with it every downstream double-accumulation
-    * order) is bit-identical to the HOF spelling. `total` is the window
-    * count after the optional empty/null-token drop (= the token count
-    * when n = 1, the caller's `dl`). */
+    * out in ascending UTF8 byte order — the `array_sort` order — so on
+    * NULL-FREE token arrays the exploded row order (and with it every
+    * downstream double-accumulation order) is bit-identical to the HOF
+    * spelling. A null token is not: without the drop, a window's gram
+    * joins its non-null tokens (`concat_ws`), where the zip_with spelling
+    * yields a null gram (the tokenizers never emit null tokens). `total`
+    * is the window count after the optional empty/null-token drop (= the
+    * token count when n = 1, the caller's `dl`). */
   def gramRuns(arr: ArrayData, n: Int, dropEmpty: Boolean): GenericInternalRow = {
     val t0 = arr.numElements()
     // gather tokens, optionally dropping ""/null (the `filter(t =!= "")`

@@ -226,7 +226,7 @@ case class RandomHyperplaneSignature(child: Expression, bits: Int, seed: Long)
 }
 
 object RandomHyperplaneSignature {
-  /** Hash-FAMILY tag recorded in persisted LSH index `_params` and
+  /** Hash-FAMILY tag recorded in persisted LSH index params and
     * validated on every read/append: signatures from different coefficient
     * families are incomparable (same bits/bands/seed notwithstanding), and
     * a cross-family probe does not fail — it silently collapses recall.

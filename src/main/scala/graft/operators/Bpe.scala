@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.store.Store
 
 /** Byte-pair-encoding tokenizer TRAINING as a Spark pass — the biggest
   * missing LLM-pipeline primitive after the round-8 additions: every
@@ -139,15 +140,13 @@ object Bpe {
   /** Persist a trained merge table — a tokenizer is a FROZEN artifact:
     * trained once on a representative corpus, then applied to every
     * later batch and stream (retraining mid-corpus would silently change
-    * token counts and packing downstream). Layout-tagged `_params` like
+    * token counts and packing downstream). Layout-tagged params like
     * every other persisted family. */
   def saveMerges(merges: DataFrame, path: String): Unit = {
-    val spark = merges.sparkSession
-    import spark.implicits._
-    merges.coalesce(1).write.mode("overwrite").parquet(s"$path/merges")
-    Seq((Layout, merges.count()))
-      .toDF("layout", "num_merges")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "merges",
+        Seq("layout" -> Layout, "num_merges" -> merges.count())) {
+      merges.coalesce(1).write.mode("overwrite").parquet(_)
+    }
   }
 
   /** Load persisted merges in rank order. Driver-side by design: the
@@ -156,7 +155,7 @@ object Bpe {
     * and [[encodeTokenCounts]] embeds it into the fold expression. */
   def loadMerges(spark: org.apache.spark.sql.SparkSession,
                  path: String): Seq[(String, String)] = {
-    val p = Similarity.readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     require(p.getAs[String]("layout") == Layout,
       s"index at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF}
+import graft.store.Store
 
 /** Multinomial Naive Bayes text classification — the train/serve pair a
   * curation pipeline uses for cheap model-based filtering (the fastText-
@@ -106,24 +107,22 @@ object NaiveBayes {
       .select(col("id").as(idCol), col("y").as("pred"), col("score"))
   }
 
-  /** Persist a model: `classes` + `cond` parquet tables and a `_params`
+  /** Persist a model: `classes` + `cond` parquet tables and a params
     * side table (vocab size + a layout tag), same layout discipline as the
     * ANN indexes — the model IS serving state, rebuilt never, loaded by
     * batch and streaming scorers alike. */
   def save(model: Model, path: String): Unit = {
-    model.classes.coalesce(1).write.mode("overwrite").parquet(s"$path/classes")
-    model.cond.write.mode("overwrite").parquet(s"$path/cond")
-    val spark = model.classes.sparkSession
-    import spark.implicits._
-    Seq(("nb_multinomial", model.vocabSize))
-      .toDF("layout", "vocab_size")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "classes", Seq("layout" -> "nb_multinomial",
+        "vocab_size" -> model.vocabSize)) { dir =>
+      model.classes.coalesce(1).write.mode("overwrite").parquet(dir)
+      model.cond.write.mode("overwrite").parquet(s"$path/cond")
+    }
   }
 
   /** Load a persisted model. Validates the layout tag so a foreign
     * directory fails fast instead of scoring garbage. */
   def load(spark: SparkSession, path: String): Model = {
-    val p = Similarity.readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     val layout = p.getAs[String]("layout")
     require(layout == "nb_multinomial",
       s"$path is not a NaiveBayes model dir (layout=$layout)")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{KmvSketch, TextFunctions => TF}
+import graft.store.Store
 
 /** Count-Min sketch (Cormode & Muthukrishnan'05) — point FREQUENCY
   * estimates over an unbounded item vocabulary, completing the repo's
@@ -200,18 +201,16 @@ object CountMin {
   /** Create a counter store at `path` from a [[cmBuild]] output. */
   def saveCm(counters: DataFrame, path: String, depth: Int,
              width: Int, sliceId: String = "s0"): Unit = {
-    val spark = counters.sparkSession
-    import spark.implicits._
-    Similarity.dropStalePointer(path, "counters")
-    counters.select(lit(sliceId).as("slice_id"),
-        col("row"), col("cell"), col("cnt"))
-      .write.mode("overwrite").parquet(s"$path/counters")
-    Seq((Layout, depth, width)).toDF("layout", "depth", "width")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "counters",
+        Seq("layout" -> Layout, "depth" -> depth, "width" -> width)) {
+      counters.select(lit(sliceId).as("slice_id"),
+          col("row"), col("cell"), col("cnt"))
+        .write.mode("overwrite").parquet(_)
+    }
   }
 
   private def readGeometry(spark: SparkSession, path: String): (Int, Int) = {
-    val p = Similarity.readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     require(p.getAs[String]("layout") == Layout,
       s"counter store at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")
@@ -228,10 +227,10 @@ object CountMin {
     require(d == depth && w == width,
       s"counter store at $path has geometry ${d}x$w, got ${depth}x$width" +
         " — different-geometry sketches do not merge")
-    Similarity.fencedSliceAppend(path, "counters") { dir =>
+    Store.append(counters.sparkSession, path, "counters") {
       counters.select(lit(sliceId).as("slice_id"),
           col("row"), col("cell"), col("cnt"))
-        .write.mode("append").parquet(dir)
+        .write.mode("append").parquet(_)
     }
   }
 
@@ -242,7 +241,7 @@ object CountMin {
     * [[cmEstimate]]. */
   def loadCm(spark: SparkSession, path: String): (DataFrame, Int, Int) = {
     val (d, w) = readGeometry(spark, path)
-    (spark.read.parquet(Similarity.resolveDataDir(path, "counters"))
+    (Store.read(spark, path, "counters")
       .dropDuplicates("slice_id", "row", "cell")
       .groupBy("row", "cell").agg(sum("cnt").as("cnt")), d, w)
   }
@@ -261,19 +260,17 @@ object CountMin {
   /** Create a grouped counter store from a [[cmBuildByGroup]] output. */
   def saveCmGroups(counters: DataFrame, path: String, depth: Int,
                    width: Int, sliceId: String = "s0"): Unit = {
-    val spark = counters.sparkSession
-    import spark.implicits._
-    Similarity.dropStalePointer(path, "counters")
-    counters.select(lit(sliceId).as("slice_id"),
-        col("group"), col("row"), col("cell"), col("cnt"))
-      .write.mode("overwrite").parquet(s"$path/counters")
-    Seq((GroupLayout, depth, width)).toDF("layout", "depth", "width")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "counters",
+        Seq("layout" -> GroupLayout, "depth" -> depth, "width" -> width)) {
+      counters.select(lit(sliceId).as("slice_id"),
+          col("group"), col("row"), col("cell"), col("cnt"))
+        .write.mode("overwrite").parquet(_)
+    }
   }
 
   private def readGroupGeometry(spark: SparkSession,
                                 path: String): (Int, Int) = {
-    val p = Similarity.readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     require(p.getAs[String]("layout") == GroupLayout,
       s"counter store at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $GroupLayout")
@@ -288,10 +285,10 @@ object CountMin {
     require(d == depth && w == width,
       s"counter store at $path has geometry ${d}x$w, got ${depth}x$width" +
         " — different-geometry sketches do not merge")
-    Similarity.fencedSliceAppend(path, "counters") { dir =>
+    Store.append(counters.sparkSession, path, "counters") {
       counters.select(lit(sliceId).as("slice_id"),
           col("group"), col("row"), col("cell"), col("cnt"))
-        .write.mode("append").parquet(dir)
+        .write.mode("append").parquet(_)
     }
   }
 
@@ -301,7 +298,7 @@ object CountMin {
   def loadCmGroups(spark: SparkSession,
                    path: String): (DataFrame, Int, Int) = {
     val (d, w) = readGroupGeometry(spark, path)
-    (spark.read.parquet(Similarity.resolveDataDir(path, "counters"))
+    (Store.read(spark, path, "counters")
       .dropDuplicates("slice_id", "group", "row", "cell")
       .groupBy("group", "row", "cell").agg(sum("cnt").as("cnt")), d, w)
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF}
+import graft.store.Store
 
 /** Benchmark decontamination as a SERVING family: persist the eval-suite
   * n-gram index once, then flag / strip contaminated training documents
@@ -63,10 +64,9 @@ object Decontaminate {
         array_distinct(TF.shingles(col(textCol), n)).as("sh"))
 
   /** Persist the eval-suite index: `index` = the (e_id, shingle) postings
-    * (compaction-managed via [[Similarity.compactIndex]]'s pointer
-    * lifecycle), `sizes` = (e_id, n_e) full shingle counts — the
+    * (compactable), `sizes` = (e_id, n_e) full shingle counts — the
     * containment DENOMINATOR is always the full |sh(e)|, stored so a
-    * pruned serve can never inflate a score — and `_params` = (layout,
+    * pruned serve can never inflate a score — and params = (layout,
     * shingle_n, hashed): the shingle width and keying are INDEX metadata,
     * so serving cannot accidentally score with a different tokenization
     * than the build. */
@@ -74,30 +74,24 @@ object Decontaminate {
                  path: String, shingleSize: Int = 3,
                  hashPostings: Boolean = true): Unit = {
     require(shingleSize > 0, "shingleSize must be positive")
-    val spark = eval.sparkSession
-    import spark.implicits._
     val ev = shingled(eval, textCol, idCol, "e_id", shingleSize)
-    Similarity.dropStalePointer(path, "index")
-    ev.select(col("e_id"), explode(col("sh")).as("__s"))
-      .select(col("e_id"), key(col("__s"), hashPostings).as("shingle"))
-      .write.mode("overwrite").parquet(s"$path/index")
-    ev.select(col("e_id"), size(col("sh")).as("n_e"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/sizes")
-    Seq((Layout, shingleSize, hashPostings))
-      .toDF("layout", "shingle_n", "hashed")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "index", Seq("layout" -> Layout,
+        "shingle_n" -> shingleSize, "hashed" -> hashPostings)) { dir =>
+      ev.select(col("e_id"), explode(col("sh")).as("__s"))
+        .select(col("e_id"), key(col("__s"), hashPostings).as("shingle"))
+        .write.mode("overwrite").parquet(dir)
+      ev.select(col("e_id"), size(col("sh")).as("n_e"))
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/sizes")
+    }
   }
 
   /** Append NEW eval items to a persisted index — benchmarks accrete
     * over time (a new suite version, a new task), and a full rebuild
-    * re-shingles every frozen suite for nothing. Same generation/pointer
-    * lifecycle as every other index family: posting slivers land in the
-    * LIVE `index` generation ([[Similarity.resolveDataDir]]), so an
-    * append immediately after a compaction joins the compacted lineage,
-    * and the next [[Similarity.compactIndex]] folds the slivers; `sizes`
-    * rows append alongside (eval-suite-sized — sliver count is never a
-    * problem there). Shingle width and keying come from the STORED
-    * `_params`, so an append can never mix tokenizations with the build.
+    * re-shingles every frozen suite for nothing. Posting slivers and
+    * `sizes` rows each go through the fenced [[graft.store.Store.append]]
+    * (`sizes` is eval-suite-sized, so it is never compacted). Shingle
+    * width and keying come from the STORED params, so an append can
+    * never mix tokenizations with the build.
     *
     * Ids must be NEW: a re-appended e_id would duplicate its `sizes` row
     * (multiplying its pairs through the serve-side join) and re-add its
@@ -107,7 +101,7 @@ object Decontaminate {
     * a rebuild.
     *
     * `compactFileThreshold` opts the append into the auto-compaction
-    * cadence ([[Similarity.maybeCompactIndex]]): once the live postings
+    * cadence ([[graft.store.Store.append]]): once the live postings
     * table has that many part files, the append folds the index itself
     * — benchmarks accrete one suite at a time, and without a cadence
     * every serve pays the accumulated small-file listing tax until
@@ -115,14 +109,14 @@ object Decontaminate {
   def appendToIndex(newEval: DataFrame, textCol: String, idCol: String,
                     path: String, compactFileThreshold: Int = 0): Unit = {
     val spark = newEval.sparkSession
-    val p = Similarity.readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     require(p.getAs[String]("layout") == Layout,
       s"index at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")
     val ev = shingled(newEval, textCol, idCol, "e_id",
       p.getAs[Int]("shingle_n"))
     val dup = ev.select("e_id").distinct()
-      .join(spark.read.parquet(s"$path/sizes").select("e_id"),
+      .join(Store.read(spark, path, "sizes").select("e_id"),
         Seq("e_id"), "left_semi")
       .limit(20).collect().map(_.get(0))
     require(dup.isEmpty,
@@ -132,14 +126,13 @@ object Decontaminate {
     val postings = ev.select(col("e_id"), explode(col("sh")).as("__s"))
       .select(col("e_id"),
         key(col("__s"), p.getAs[Boolean]("hashed")).as("shingle"))
-    Similarity.fencedSliceAppend(path, "index") { dir =>
-      postings.write.mode("append").parquet(dir)
+    Store.append(spark, path, "index", compactFileThreshold) {
+      postings.write.mode("append").parquet(_)
     }
-    // sizes is outside compactIndex's sub list (never generationed), so
-    // the plain path stays the consistent read/write target for it
-    ev.select(col("e_id"), size(col("sh")).as("n_e"))
-      .write.mode("append").parquet(s"$path/sizes")
-    Similarity.maybeCompactIndex(spark, path, "index", compactFileThreshold)
+    Store.append(spark, path, "sizes") {
+      ev.select(col("e_id"), size(col("sh")).as("n_e"))
+        .write.mode("append").parquet(_)
+    }
   }
 
   /** A loaded serving handle. Streaming serves load once, cache both
@@ -148,15 +141,15 @@ object Decontaminate {
                          shingleSize: Int, hashed: Boolean)
 
   /** Load a persisted index: postings via the compaction-aware pointer,
-    * shingle width / keying from `_params`. */
+    * shingle width / keying from params. */
   def loadIndex(spark: SparkSession, path: String): ContamIndex = {
-    val p = Similarity.readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     require(p.getAs[String]("layout") == Layout,
       s"index at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")
     ContamIndex(
-      spark.read.parquet(Similarity.resolveDataDir(path, "index")),
-      spark.read.parquet(s"$path/sizes"),
+      Store.read(spark, path, "index"),
+      Store.read(spark, path, "sizes"),
       p.getAs[Int]("shingle_n"), p.getAs[Boolean]("hashed"))
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
+import graft.store.Store
 
 /** Deduplication operators for large-scale corpus pipelines: exact,
   * MinHash+LSH, SimHash, exact n-gram Jaccard, and embedding-cosine
@@ -190,7 +191,7 @@ object Dedup {
     * historical-corpus half of incremental dedup. The corpus-wide shingling
     * + sketching pass is paid ONCE; every later ingest batch joins its own
     * (tiny) band table against the stored one instead of re-sketching
-    * 100 TB of history. A `_params` side table records (shingle_size,
+    * 100 TB of history. A params side table records (shingle_size,
     * num_hashes, bands) so batch-side sketches are provably computed with
     * the same hash family. Same layout stance as
     * [[graft.operators.Similarity.buildLshIndex]]. */
@@ -198,42 +199,34 @@ object Dedup {
                         path: String, shingleSize: Int = 3,
                         numHashes: Int = 128, bands: Int = 32): Unit = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    Similarity.dropStalePointer(path, "index") // rebuild = fresh lineage
-    minhashBandTable(docs, textCol, idCol, shingleSize, numHashes, bands)
-      .write.mode("overwrite").parquet(s"$path/index")
-    Seq((shingleSize, numHashes, bands))
-      .toDF("shingle_size", "num_hashes", "bands")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "index", Seq("shingle_size" -> shingleSize,
+        "num_hashes" -> numHashes, "bands" -> bands)) {
+      minhashBandTable(docs, textCol, idCol, shingleSize, numHashes, bands)
+        .write.mode("overwrite").parquet(_)
+    }
   }
 
   /** Append a new batch's band rows to an existing [[buildMinHashIndex]]
     * index — run AFTER the batch has been deduped via
     * [[nearDupAgainstIndex]], so the next batch sees it as history. Only
     * the new documents pay the sketch pass (additional parquet part files;
-    * the indexed corpus is untouched). Stored `_params` are reused, so
+    * the indexed corpus is untouched). Stored params are reused, so
     * appended rows come from the same hash family by construction. The
     * caller owns id uniqueness across appends. `compactFileThreshold`
     * opts into the auto-compaction cadence
-    * ([[Similarity.maybeCompactIndex]]): once the live band table has
+    * ([[graft.store.Store.append]]): once the live band table has
     * that many part files the append folds the index itself. */
   def appendToMinHashIndex(docs: DataFrame, textCol: String, idCol: String,
                            path: String,
                            compactFileThreshold: Int = 0): Unit = {
     val spark = docs.sparkSession
-    val p = Similarity.readParams(spark, path).head()
-    // pointer-resolved + fenced, like every other compactable index:
-    // the plain-path write this replaces would land appends in a dir a
-    // post-compaction sweep deletes (silent loss), and readers resolving
-    // the pointer would never see them at all
+    val p = Store.readParams(spark, path).head()
     val bandTable = minhashBandTable(docs, textCol, idCol,
       p.getAs[Int]("shingle_size"), p.getAs[Int]("num_hashes"),
       p.getAs[Int]("bands"))
-    Similarity.fencedSliceAppend(path, "index") { dir =>
-      bandTable.write.mode("append").parquet(dir)
+    Store.append(spark, path, "index", compactFileThreshold) {
+      bandTable.write.mode("append").parquet(_)
     }
-    Similarity.maybeCompactIndex(spark, path, "index", compactFileThreshold)
   }
 
   /** Incremental near-dup: score a NEW ingest batch against itself AND the
@@ -261,7 +254,7 @@ object Dedup {
                           threshold: Double)
                          (implicit scope: CacheScope = CacheScope.global): DataFrame = {
     val spark = docs.sparkSession
-    val p = Similarity.readParams(spark, indexPath).head()
+    val p = Store.readParams(spark, indexPath).head()
     val (shingleSize, numHashes, bands) = (p.getAs[Int]("shingle_size"),
       p.getAs[Int]("num_hashes"), p.getAs[Int]("bands"))
     // the batch's shingle sets feed BOTH the sketch and the verify stage —
@@ -276,8 +269,7 @@ object Dedup {
       newSh.select(col("id"),
         posexplode(VF.minhashBandHashes(col("sh"), numHashes, bands))
           .as(Seq("band", "bucket"))))
-    val idx = spark.read
-      .parquet(Similarity.resolveDataDir(indexPath, "index"))
+    val idx = Store.read(spark, indexPath, "index")
       .select(col("id").as("o_id"), col("band"), col("bucket"))
     val a = newBand.as("a")
     val b = newBand.as("b")
@@ -1002,8 +994,7 @@ object Dedup {
     // only (n_id, cell) — the v2 layout also stores vectors in the index,
     // which this path gets from `emb`; selecting the slim pair keeps
     // parquet column pruning in charge of not reading them twice
-    val cells = emb.sparkSession.read
-      .parquet(Similarity.resolveDataDir(indexPath, "cells"))
+    val cells = Store.read(emb.sparkSession, indexPath, "cells")
       .select("n_id", "cell")
     semanticDedupAssigned(
       emb.join(cells, emb(idCol) === cells("n_id")).drop("n_id"),
@@ -1034,7 +1025,7 @@ object Dedup {
     * transform) to match case-/punctuation-insensitively while still
     * OUTPUTTING the original lines — the CCNet preprocessing rule.
     * Build/append/query of a shared line index must all use the same
-    * normalizer (it is part of the hash family, like `_params`' seed). */
+    * normalizer (it is part of the hash family, like the params' seed). */
   val rawLine: Column => Column = identity
 
   /** CCNet-style line canonicalization for dedup matching: lowercase,
@@ -1084,9 +1075,10 @@ object Dedup {
     * buffers are not hash-able, so EVERY occurrence row sorts per
     * partition before even the partial agg — while the encoded min is
     * a plain HashAggregate. Same winner: (id, pos) lexicographic order
-    * ≡ numeric order of id·2³⁰ + pos while pos < 2³⁰ and |id| < 2³³ —
-    * the documented [[occEnc]] trade the span operators already make on
-    * the same id domain. Non-integral ids keep the struct spelling. */
+    * ≡ numeric order of id·2³⁰ + pos on [[occEnc]]'s checked domain
+    * (|id| < 2³³), which the span operators share; an id outside it
+    * fails the query instead of losing lines. Non-integral ids keep the
+    * struct spelling. */
   private def winnerMin(nonBlank: DataFrame,
                         idType: org.apache.spark.sql.types.DataType): DataFrame = {
     import org.apache.spark.sql.types._
@@ -1148,22 +1140,19 @@ object Dedup {
     * xxhash64 of every non-blank line the corpus has already claimed —
     * 8 B/row, the ONLY state continuous line dedup needs (at 100 TB of
     * text the index is ~1/1000th the corpus). The line unit is whatever
-    * the caller split by; `_params` pins the hash family. Blank lines are
+    * the caller split by; params pin the hash family. Blank lines are
     * never indexed (they are always kept, never claimable). The `lines`
-    * table participates in [[Similarity.compactIndex]]'s staged-swap
-    * generations — a per-trigger appender (st13) accumulates one part-set
-    * per batch, and compaction folds them without changing membership. */
+    * table is compactable — a per-trigger appender (st13) accumulates one
+    * part-set per batch, and compaction folds them without changing
+    * membership. */
   def buildLineIndex(df: DataFrame, linesCol: String, path: String,
                      normalize: Column => Column = rawLine): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    Similarity.dropStalePointer(path, "lines") // rebuild = fresh lineage
-    df.select(posexplode(col(linesCol)).as(Seq("__pos", "__line")))
-      .filter(trim(col("__line")) =!= "")
-      .select(xxhash64(normalize(col("__line"))).as("h")).distinct()
-      .write.mode("overwrite").parquet(s"$path/lines")
-    Seq(("xxhash64", 42)).toDF("family", "seed")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "lines", Seq("family" -> "xxhash64", "seed" -> 42)) {
+      df.select(posexplode(col(linesCol)).as(Seq("__pos", "__line")))
+        .filter(trim(col("__line")) =!= "")
+        .select(xxhash64(normalize(col("__line"))).as("h")).distinct()
+        .write.mode("overwrite").parquet(_)
+    }
   }
 
   /** Append a new batch's distinct line hashes to a [[buildLineIndex]]
@@ -1173,18 +1162,16 @@ object Dedup {
     * appends are harmless (append the batch's RAW lines for exactly-once
     * keep-first semantics: every line the batch carried, kept or dropped,
     * is claimed for all later batches). `compactFileThreshold` opts into
-    * the auto-compaction cadence ([[Similarity.maybeCompactIndex]]). */
+    * the auto-compaction cadence ([[graft.store.Store.append]]). */
   def appendToLineIndex(df: DataFrame, linesCol: String, path: String,
                         normalize: Column => Column = rawLine,
                         compactFileThreshold: Int = 0): Unit = {
-    Similarity.fencedSliceAppend(path, "lines") { dir =>
+    Store.append(df.sparkSession, path, "lines", compactFileThreshold) {
       df.select(posexplode(col(linesCol)).as(Seq("__pos", "__line")))
         .filter(trim(col("__line")) =!= "")
         .select(xxhash64(normalize(col("__line"))).as("h")).distinct()
-        .write.mode("append").parquet(dir)
+        .write.mode("append").parquet(_)
     }
-    Similarity.maybeCompactIndex(df.sparkSession, path, "lines",
-      compactFileThreshold)
   }
 
   /** Incremental [[keepFirstLines]]: dedup a NEW ingest batch against
@@ -1202,7 +1189,7 @@ object Dedup {
                              normalize: Column => Column = rawLine)
                             (implicit scope: CacheScope = CacheScope.global): DataFrame = {
     val spark = batch.sparkSession
-    val hist = spark.read.parquet(Similarity.resolveDataDir(indexPath, "lines"))
+    val hist = Store.read(spark, indexPath, "lines")
     val occ = lineOccurrences(batch, linesCol, idCol, normalize)
     val winners = winnerMin(
       occ.filter(!col("__blank"))
@@ -1240,14 +1227,11 @@ object Dedup {
     * URLs and the index can never disagree with the dedup about the
     * canonical form. */
   def buildUrlIndex(df: DataFrame, urlCol: String, path: String): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    Similarity.dropStalePointer(path, "urls") // rebuild = fresh lineage
-    df.select(xxhash64(UrlCanon.canonicalizeUrl(col(urlCol))).as("h"))
-      .distinct()
-      .write.mode("overwrite").parquet(s"$path/urls")
-    Seq(("xxhash64", 42)).toDF("family", "seed")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "urls", Seq("family" -> "xxhash64", "seed" -> 42)) {
+      df.select(xxhash64(UrlCanon.canonicalizeUrl(col(urlCol))).as("h"))
+        .distinct()
+        .write.mode("overwrite").parquet(_)
+    }
   }
 
   /** Keep-first URL dedup of a NEW ingest batch against itself AND the
@@ -1259,8 +1243,7 @@ object Dedup {
   def dedupUrlsAgainstIndex(batch: DataFrame, urlCol: String,
                             idCol: String, indexPath: String): DataFrame = {
     val spark = batch.sparkSession
-    val hist = spark.read.parquet(
-      Similarity.resolveDataDir(indexPath, "urls"))
+    val hist = Store.read(spark, indexPath, "urls")
     val first = batch
       .select(col(idCol),
         UrlCanon.canonicalizeUrl(col(urlCol)).as("canon_url"))
@@ -1276,16 +1259,14 @@ object Dedup {
     * exactly-once convention). Membership is anti-join-checked, so
     * hash rows duplicated across appends are harmless.
     * `compactFileThreshold` opts into the auto-compaction cadence
-    * ([[Similarity.maybeCompactIndex]]). */
+    * ([[graft.store.Store.append]]). */
   def appendToUrlIndex(df: DataFrame, urlCol: String, path: String,
                        compactFileThreshold: Int = 0): Unit = {
-    Similarity.fencedSliceAppend(path, "urls") { dir =>
+    Store.append(df.sparkSession, path, "urls", compactFileThreshold) {
       df.select(xxhash64(UrlCanon.canonicalizeUrl(col(urlCol))).as("h"))
         .distinct()
-        .write.mode("append").parquet(dir)
+        .write.mode("append").parquet(_)
     }
-    Similarity.maybeCompactIndex(df.sparkSession, path, "urls",
-      compactFileThreshold)
   }
 
   // ------------------------------------------------------------------
@@ -1302,10 +1283,18 @@ object Dedup {
 
   /** Global-order encoding of an occurrence (id, pos) as one long, so
     * the per-window winner is a plain `min` (map-side combinable)
-    * rather than a struct compare. Caps pos at <2³⁰ per doc — beyond
-    * any real document's token count. */
+    * rather than a struct compare. Order-preserving and decodable only
+    * on the domain −2³³ ≤ id < 2³³, 0 ≤ pos < 2³⁰; outside it the
+    * product wraps (or trips ANSI overflow) and the decoded winner would
+    * match no real occurrence, silently dropping every copy of the line.
+    * So the domain is checked inside the same projection — an
+    * out-of-domain row fails the query loudly, with no extra job. */
   private def occEnc(id: Column, pos: Column): Column =
-    id * lit(1L << 30) + pos
+    when(id >= lit(-(1L << 33)) && id < lit(1L << 33) &&
+        pos >= 0 && pos < lit(1 << 30), id * lit(1L << 30) + pos)
+      .otherwise(raise_error(concat(lit("occurrence encoding needs " +
+        "-2^33 <= id < 2^33 and 0 <= pos < 2^30; got id "),
+        id.cast("string"), lit(" pos "), pos.cast("string"))))
 
   /** Maximal duplicated token spans: every L-token window of every doc
     * is hashed; windows whose hash occurs more than once corpus-wide
@@ -1436,30 +1425,27 @@ object Dedup {
   /** Persist a window-hash index at `path` (parquet): the distinct
     * xxhash64 of every L-token window the corpus has claimed — 8 B/row,
     * the only state continuous substring dedup needs (distinct window
-    * hashes are a small fraction of a 100 TB corpus). `_params` pins the
+    * hashes are a small fraction of a 100 TB corpus). The params pin the
     * window size and hash family: querying with a different L would hash
     * different grams and silently match nothing, so readers validate
-    * both. The `wins` table participates in [[Similarity.compactIndex]]'s
-    * staged-swap generations, same as the line index. */
+    * both. The `wins` table is compactable, like the line index. */
   def buildWindowIndex(df: DataFrame, textCol: String, path: String,
                        windowTokens: Int = 8)
                       (implicit scope: CacheScope = CacheScope.global): Unit = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    Similarity.dropStalePointer(path, "wins") // rebuild = fresh lineage
-    windowOccurrences(df.select(lit(0L).as("__id0"), col(textCol)),
-        textCol, "__id0", windowTokens)
-      .select(col("__h").as("h")).distinct()
-      .write.mode("overwrite").parquet(s"$path/wins")
-    Seq((windowTokens, "xxhash64-cat1")).toDF("window_tokens", "family")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "wins", Seq("window_tokens" -> windowTokens,
+        "family" -> "xxhash64-cat1")) {
+      windowOccurrences(df.select(lit(0L).as("__id0"), col(textCol)),
+          textCol, "__id0", windowTokens)
+        .select(col("__h").as("h")).distinct()
+        .write.mode("overwrite").parquet(_)
+    }
   }
 
-  /** Read + validate a [[buildWindowIndex]] `_params` table: the stored
+  /** Read + validate a [[buildWindowIndex]] params table: the stored
     * hash family must match the code's; returns the stored window size. */
   private def windowIndexParams(spark: org.apache.spark.sql.SparkSession,
                                 path: String): Int = {
-    val p = Similarity.readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     require(p.getAs[String]("family") == "xxhash64-cat1",
       s"window index at $path uses hash family '${p.getAs[String]("family")}'" +
         " but this build computes 'xxhash64-cat1' — rebuild the index")
@@ -1473,23 +1459,22 @@ object Dedup {
     * kept or cut, is claimed for all later batches — the same
     * exactly-once keep-first convention as [[appendToLineIndex]].
     * Membership is checked by joins, so hash rows duplicated across
-    * appends are harmless; [[Similarity.compactIndex]] folds sliver
+    * appends are harmless; [[graft.store.Store.compactIndex]] folds sliver
     * files (round-15: `wins` is actually IN its sub list now — the
     * claim was aspirational before), and `compactFileThreshold` opts
     * into the auto-compaction cadence
-    * ([[Similarity.maybeCompactIndex]]). */
+    * ([[graft.store.Store.append]]). */
   def appendToWindowIndex(df: DataFrame, textCol: String, path: String,
                           compactFileThreshold: Int = 0)
                          (implicit scope: CacheScope = CacheScope.global): Unit = {
     val spark = df.sparkSession
     val l = windowIndexParams(spark, path)
-    Similarity.fencedSliceAppend(path, "wins") { dir =>
+    Store.append(spark, path, "wins", compactFileThreshold) {
       windowOccurrences(df.select(lit(0L).as("__id0"), col(textCol)),
           textCol, "__id0", l)
         .select(col("__h").as("h")).distinct()
-        .write.mode("append").parquet(dir)
+        .write.mode("append").parquet(_)
     }
-    Similarity.maybeCompactIndex(spark, path, "wins", compactFileThreshold)
   }
 
   /** Incremental [[duplicateWindowSpans]]: spans for a NEW ingest batch
@@ -1509,7 +1494,7 @@ object Dedup {
     val spark = batch.sparkSession
     val l = windowIndexParams(spark, indexPath)
     val wins = windowOccurrences(batch, textCol, idCol, l)
-    val hist = spark.read.parquet(Similarity.resolveDataDir(indexPath, "wins"))
+    val hist = Store.read(spark, indexPath, "wins")
     val markedByHistory = wins.join(hist, wins("__h") === hist("h"),
       "left_semi").select("__kid", "__pos")
     val batchDup = wins.join(hist, wins("__h") === hist("h"), "left_anti")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF}
+import graft.store.Store
 
 /** DSIR-style data selection — importance resampling with hashed n-gram
   * features (Xie et al., NeurIPS 2023, "Data Selection for Language
@@ -104,23 +105,21 @@ object Dsir {
     * [[Retrieval]]): the model is curation config, computed offline over
     * a reference corpus and FROZEN for serving. */
   def saveModel(lamDf: DataFrame, path: String): Unit = {
-    val spark = lamDf.sparkSession
-    import spark.implicits._
     val b = lamDf.count().toInt
-    lamDf.coalesce(1).write.mode("overwrite").parquet(s"$path/model")
-    Seq((Layout, b)).toDF("layout", "b")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "model", Seq("layout" -> Layout, "b" -> b)) {
+      lamDf.coalesce(1).write.mode("overwrite").parquet(_)
+    }
   }
 
   /** Load a persisted λ table, validating the layout tag. */
   def loadModel(spark: SparkSession, path: String): DsirModel = {
-    val p = Similarity.readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     require(p.getAs[String]("layout") == Layout,
       s"model at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")
     val m = modelFrom(spark.read.parquet(s"$path/model"))
     require(m.b == p.getAs[Int]("b"),
-      s"model at $path has ${m.b} buckets, _params says ${p.getAs[Int]("b")}")
+      s"model at $path has ${m.b} buckets, params say ${p.getAs[Int]("b")}")
     m
   }
 

@@ -309,7 +309,7 @@ object HeavyHitters {
     * ceil(φ·N_g) come from the STORED slice totals and ride a broadcast
     * join (no when-chain — a store has no small-group guarantee).
     * Exact per group because the folded deficit stays ≤ N_g/(m+1) < φN_g
-    * whenever m + 1 > 1/φ — validated against `_params`. Store slices
+    * whenever m + 1 > 1/φ — validated against params. Store slices
     * must partition `corpus`. Output: (group, item, cnt) ==
     * [[frequentItemsByGroup]] one-shot over the union. */
   def frequentItemsByGroupFromStore(corpus: DataFrame, groupCol: String,

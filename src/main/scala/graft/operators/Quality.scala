@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.store.Store
 
 /** Adaptive (per-group) quality thresholds for corpus curation.
   *
@@ -146,23 +147,21 @@ object Quality {
   private val Layout = "thresholds_v1"
 
   /** Persist a threshold table (the curation CONFIG: |groups| rows) with a
-    * `_params` layout tag — the index-persistence discipline
+    * params layout tag — the index-persistence discipline
     * ([[Similarity]] / [[graft.operators.Retrieval]]): thresholds are
     * computed offline over a reference corpus and FROZEN; a streaming
     * filter must apply the stored cutoffs, not re-derive them from each
     * micro-batch's skewed sample. */
   def saveThresholds(thr: DataFrame, path: String): Unit = {
-    val spark = thr.sparkSession
-    import spark.implicits._
-    thr.coalesce(1).write.mode("overwrite").parquet(s"$path/thresholds")
-    Seq(Layout).toDF("layout")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "thresholds", Seq("layout" -> Layout)) {
+      thr.coalesce(1).write.mode("overwrite").parquet(_)
+    }
   }
 
   /** Load a persisted threshold table, validating the layout tag. */
   def loadThresholds(spark: org.apache.spark.sql.SparkSession,
                      path: String): DataFrame = {
-    val p = Similarity.readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     require(p.getAs[String]("layout") == Layout,
       s"thresholds at $path have layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")

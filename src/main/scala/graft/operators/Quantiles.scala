@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.store.Store
 
 /** Exact distributed quantiles by iterative histogram refinement — the
   * RANK rung of the sketch suite (KMV = distinct counts, Misra–Gries =
@@ -329,7 +330,7 @@ object Quantiles {
   // ------------------------------------------------------------------
   // Persisted mergeable histograms — the quantile family's store rung,
   // in the cm_v2 discipline: slices histogram independently against a
-  // FIXED geometry (lo, hi, bins — stored in _params, validated on
+  // FIXED geometry (lo, hi, bins — stored in params, validated on
   // every append) and append (slice_id, group, bucket, cnt, mn, mx)
   // rows; the reader dedups per (slice, group, bucket) — making
   // at-least-once appends idempotent per slice — then merges per
@@ -403,19 +404,17 @@ object Quantiles {
   def saveHistogram(hist: DataFrame, path: String, lo: Double, hi: Double,
                     bins: Int, sliceId: String = "s0"): Unit = {
     require(bins >= 2 && lo < hi, s"bad geometry [$lo, $hi] x $bins")
-    val spark = hist.sparkSession
-    import spark.implicits._
-    Similarity.dropStalePointer(path, "hist")
-    hist.select(lit(sliceId).as("slice_id"), col("group"), col("bucket"),
-        col("cnt"), col("mn"), col("mx"))
-      .write.mode("overwrite").parquet(s"$path/hist")
-    Seq((Layout, lo, hi, bins)).toDF("layout", "lo", "hi", "bins")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "hist",
+        Seq("layout" -> Layout, "lo" -> lo, "hi" -> hi, "bins" -> bins)) {
+      hist.select(lit(sliceId).as("slice_id"), col("group"), col("bucket"),
+          col("cnt"), col("mn"), col("mx"))
+        .write.mode("overwrite").parquet(_)
+    }
   }
 
   private def readGeometry(spark: SparkSession,
                            path: String): (Double, Double, Int) = {
-    val p = Similarity.readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     require(p.getAs[String]("layout") == Layout,
       s"histogram store at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")
@@ -433,10 +432,10 @@ object Quantiles {
     require(slo == lo && shi == hi && sb == bins,
       s"histogram store at $path has geometry [$slo, $shi] x $sb, got " +
         s"[$lo, $hi] x $bins — different-geometry histograms do not merge")
-    Similarity.fencedSliceAppend(path, "hist") { dir =>
+    Store.append(hist.sparkSession, path, "hist") {
       hist.select(lit(sliceId).as("slice_id"), col("group"), col("bucket"),
           col("cnt"), col("mn"), col("mx"))
-        .write.mode("append").parquet(dir)
+        .write.mode("append").parquet(_)
     }
   }
 
@@ -446,7 +445,7 @@ object Quantiles {
   def loadHistogram(spark: SparkSession,
                     path: String): (DataFrame, Double, Double, Int) = {
     val (lo, hi, bins) = readGeometry(spark, path)
-    (spark.read.parquet(Similarity.resolveDataDir(path, "hist"))
+    (Store.read(spark, path, "hist")
       .dropDuplicates("slice_id", "group", "bucket")
       .groupBy("group", "bucket")
       .agg(sum("cnt").as("cnt"), min("mn").as("mn"), max("mx").as("mx")),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF}
+import graft.store.Store
 
 /** BM25 sparse retrieval — the lexical half of a training-data pipeline's
   * search stack (contamination lookup, quality-by-query probes, dedup
@@ -52,7 +53,7 @@ import graft.functions.{TextFunctions => TF}
   * a doc no query reaches), while dl still counts the dropped terms
   * (length normalization measures the real document). With the default
   * `maxDf` nothing is filtered and N is simply the count of docs with
-  * ≥1 token. The stored `_params` stats follow the same contract, and
+  * ≥1 token. The stored params stats follow the same contract, and
   * both choices are pinned by tests.
   *
   * Query-batch contract: the serve entry points broadcast the batch's
@@ -76,7 +77,7 @@ object Retrieval {
     * corpus-wide-correct across any number of appended generations by
     * construction, and the `maxDf` stopword guard moves to serve where
     * it tracks the GROWING corpus instead of freezing at build. N/avgdl
-    * persist additively (`n_docs`, `sum_dl` integer sums in `_params`),
+    * persist additively (`n_docs`, `sum_dl` integer sums in params),
     * so appended stats are exact, not drifted. v1 indexes refuse to load
     * with a rebuild message (the hash-family-tag discipline). */
   private val Layout = "bm25_v2"
@@ -199,7 +200,7 @@ object Retrieval {
     * (doc, term) with tf and the denormalized dl — everything serve-time
     * scoring needs once df is re-derived from the slice itself. Also
     * returns the batch's (doc count, total length) for the additive
-    * `_params` stats. */
+    * params stats. */
   private def tfDlFrame(docs: DataFrame, textCol: String, idCol: String)
                        (implicit scope: CacheScope): (DataFrame, Long, Long) = {
     // tf and dl fold in-row (docTermRuns) — the old groupBy(n_id, term)
@@ -215,7 +216,7 @@ object Retrieval {
   }
 
   /** Persist the inverted index: `index` = the slim df-FREE postings
-    * table (term, n_id, tf, dl), `_params` = (layout, n_docs, sum_dl,
+    * table (term, n_id, tf, dl), params = (layout, n_docs, sum_dl,
     * avgdl, k1, b, max_df). Corpus stats and knobs are INDEX METADATA —
     * serving reads them instead of re-deriving or taking caller literals
     * (the calibrated-ANN discipline); `n_docs`/`sum_dl` are INTEGER sums
@@ -224,79 +225,64 @@ object Retrieval {
     * the appendable layout the guard is evaluated against the CURRENT
     * corpus at every serve, so a term that grows into a stopword after
     * appends is dropped the moment it crosses the line. The `index`
-    * sub-dir name keys into [[Similarity.compactIndex]]'s small-file
+    * sub-dir name keys into [[graft.store.Store.compactIndex]]'s small-file
     * compaction lifecycle. */
   def buildBm25Index(corpus: DataFrame, textCol: String, idCol: String,
                      path: String, k1: Double = 1.2, b: Double = 0.75,
                      maxDf: Long = Long.MaxValue): Unit = {
     implicit val scope: CacheScope = new CacheScope
     try {
-      val spark = corpus.sparkSession
-      import spark.implicits._
       val (postings, n, sumDl) = tfDlFrame(corpus, textCol, idCol)
       require(n > 0,
         "bm25: corpus produced no postings (empty corpus or " +
           "all-empty/null text)")
-      Similarity.dropStalePointer(path, "index")
-      Similarity.dropStalePointer(path, "_params") // fresh lineage
-      postings.write.mode("overwrite").parquet(s"$path/index")
-      Seq((Layout, n, sumDl, sumDl.toDouble / n, k1, b, maxDf))
-        .toDF("layout", "n_docs", "sum_dl", "avgdl", "k1", "b", "max_df")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+      Store.create(path, "index", Seq("layout" -> Layout, "n_docs" -> n,
+          "sum_dl" -> sumDl, "avgdl" -> sumDl.toDouble / n, "k1" -> k1,
+          "b" -> b, "max_df" -> maxDf)) {
+        postings.write.mode("overwrite").parquet(_)
+      }
     } finally scope.release()
   }
 
   /** Append a new document batch to a persisted BM25 index — the
     * daily-ingest rung every other persisted family already has. The
-    * batch's df-free postings append under the compaction-aware pointer
-    * (new generations fold in at the next [[Similarity.compactIndex]]
-    * sweep), and `_params` stats update ADDITIVELY: n_docs/sum_dl are
+    * batch's df-free postings append as a slice, and params stats
+    * update ADDITIVELY: n_docs/sum_dl are
     * integer sums, so the served N and avgdl are bit-identical to a
     * from-scratch build over the union — nothing is frozen stale,
     * because df was never stored (it re-derives per serve). Cost is
     * O(batch tokenization) + a vocabulary-free append — the existing
     * corpus is not read, let alone rewritten. Caller owns id uniqueness
     * across base + appends (the index-family contract); a duplicated id
-    * would double-count df and N. Single-writer ownership, like every
-    * append path in the repo. Empty batches are a no-op.
+    * would double-count df and N. Empty batches are a no-op.
     *
     * `compactFileThreshold` opts the append into the auto-compaction
-    * cadence ([[Similarity.maybeCompactIndex]]): once the live postings
+    * cadence ([[graft.store.Store.append]]): once the live postings
     * table has that many part files, the append folds the index itself
     * — the daily-ingest small-file tax stops growing without a separate
-    * maintenance job. The fold runs after the stats commit, so it folds
-    * a fully consistent index and never changes a served score. */
+    * maintenance job. The fold rewrites byte-equal postings, so it never
+    * changes a served score. */
   def appendToBm25Index(newDocs: DataFrame, textCol: String, idCol: String,
                         path: String, compactFileThreshold: Int = 0): Unit = {
     implicit val scope: CacheScope = new CacheScope
     try {
       val spark = newDocs.sparkSession
-      import spark.implicits._
-      val p = Similarity.readParams(spark, path).head()
+      val p = Store.readParams(spark, path).head()
       requireBm25Layout(p, path)
       val (postings, n, sumDl) = tfDlFrame(newDocs, textCol, idCol)
       if (n > 0) {
-        Similarity.fencedSliceAppend(path, "index") { dir =>
-          postings.write.mode("append").parquet(dir)
+        Store.append(spark, path, "index", compactFileThreshold) {
+          postings.write.mode("append").parquet(_)
         }
         val nd = p.getAs[Long]("n_docs") + n
         val sd = p.getAs[Long]("sum_dl") + sumDl
-        // never overwrite the only stats copy in place: a crash
-        // mid-truncate would leave every later serve unreadable (or,
-        // worse, silently scoring on wrong N/avgdl). The updated row is
-        // a fully-written generation committed by an atomic pointer
-        // flip — any crash point leaves the PREVIOUS stats live (the
-        // just-appended batch under-counts until re-committed; stale,
-        // never corrupt).
-        Similarity.commitParams(path) { genDir =>
-          Seq((Layout, nd, sd, sd.toDouble / nd, p.getAs[Double]("k1"),
-            p.getAs[Double]("b"), p.getAs[Long]("max_df")))
-            .toDF("layout", "n_docs", "sum_dl", "avgdl", "k1", "b",
-              "max_df")
-            .coalesce(1).write.mode("overwrite").parquet(genDir)
-        }
-        Similarity.maybeCompactIndex(spark, path, "index",
-          compactFileThreshold)
+        // a crash between the two commits leaves the PREVIOUS stats
+        // live: the batch under-counts until re-committed (stale, never
+        // corrupt — a truncated stats copy would score on wrong N/avgdl)
+        Store.commitParams(path, Seq("layout" -> Layout,
+          "n_docs" -> nd, "sum_dl" -> sd, "avgdl" -> sd.toDouble / nd,
+          "k1" -> p.getAs[Double]("k1"), "b" -> p.getAs[Double]("b"),
+          "max_df" -> p.getAs[Long]("max_df")))
       }
     } finally scope.release()
   }
@@ -319,12 +305,12 @@ object Retrieval {
                        k1: Double, b: Double, maxDf: Long)
 
   /** Load a persisted index: postings via the compaction-aware pointer
-    * ([[Similarity.resolveDataDir]]), stats/knobs from `_params`. */
+    * ([[graft.store.Store.resolveDataDir]]), stats/knobs from params. */
   def loadBm25(spark: SparkSession, indexPath: String): Bm25Model = {
-    val p = Similarity.readParams(spark, indexPath).head()
+    val p = Store.readParams(spark, indexPath).head()
     requireBm25Layout(p, indexPath)
     Bm25Model(
-      spark.read.parquet(Similarity.resolveDataDir(indexPath, "index")),
+      Store.read(spark, indexPath, "index"),
       p.getAs[Long]("n_docs").toDouble, p.getAs[Double]("avgdl"),
       p.getAs[Double]("k1"), p.getAs[Double]("b"), p.getAs[Long]("max_df"))
   }

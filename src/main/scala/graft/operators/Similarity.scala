@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{VectorFunctions => VF}
+import graft.store.Store
 
 /** Approximate-nearest-neighbor search over an embedding column.
   *
@@ -168,7 +169,7 @@ object Similarity {
   /** Persist the banded corpus index at `path` (parquet): the one
     * corpus-wide signature pass is paid ONCE, and every later query batch
     * joins against the stored (id, band, bucket) table instead of
-    * recomputing signatures over 100 TB of vectors. A `_params` side table
+    * recomputing signatures over 100 TB of vectors. A params side table
     * records (bits, bands, seed, family) so query-side signatures are
     * provably computed with the same hyperplanes — `family` names the
     * hash-function FAMILY, not just its parameters: stored signatures are
@@ -180,23 +181,21 @@ object Similarity {
   def buildLshIndex(corpus: DataFrame, vecCol: String, idCol: String,
                     path: String, bits: Int = 16, bands: Int = 8,
                     seed: Long = 7L): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    dropStalePointer(path, "index") // a rebuild starts a fresh lineage
-    bandedSignatures(corpus, vecCol, idCol, "n_id", bits, bands, seed)
-      .write.mode("overwrite").parquet(s"$path/index")
-    Seq((bits, bands, seed, graft.functions.RandomHyperplaneSignature.family))
-      .toDF("bits", "bands", "seed", "family")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "index", Seq("bits" -> bits, "bands" -> bands,
+        "seed" -> seed,
+        "family" -> graft.functions.RandomHyperplaneSignature.family)) {
+      bandedSignatures(corpus, vecCol, idCol, "n_id", bits, bands, seed)
+        .write.mode("overwrite").parquet(_)
+    }
   }
 
-  /** Read + validate a [[buildLshIndex]] `_params` table: the recorded
+  /** Read + validate a [[buildLshIndex]] params table: the recorded
     * hyperplane family must match the code's current family. An untagged
     * index (written before family tags) is by definition from a superseded
     * family — rebuilding is the only safe path. */
   private def lshParams(spark: org.apache.spark.sql.SparkSession,
                         path: String): (Int, Int, Long) = {
-    val df = readParams(spark, path)
+    val df = Store.readParams(spark, path)
     val p = df.head()
     val fam =
       if (df.schema.fieldNames.contains("family")) p.getAs[String]("family")
@@ -213,14 +212,14 @@ object Similarity {
   /** Append a new corpus partition's signatures to an existing
     * [[buildLshIndex]] index without touching the already-indexed corpus —
     * the daily-ingest path: only the NEW vectors pay the signature pass,
-    * written as additional parquet part files. The stored `_params`
+    * written as additional parquet part files. The stored params
     * (bits, bands, seed) are read back and reused, so appended signatures
     * come from the same hyperplanes by construction. The caller owns id
     * uniqueness across appends (duplicate ids would double-report as
     * candidates, not corrupt results — candidates dedup on (q_id, n_id)).
     *
     * `compactFileThreshold` opts the append into the auto-compaction
-    * cadence ([[maybeCompactIndex]]): once the live signature table has
+    * cadence ([[Store.append]]): once the live signature table has
     * that many part files, the append folds the index itself — bounding
     * the small-file listing tax at production ingest cadence without a
     * separate maintenance job. Folds never change results (compaction
@@ -231,10 +230,9 @@ object Similarity {
     val (bits, bands, seed) = lshParams(spark, path)
     val sigs = bandedSignatures(newCorpus, vecCol, idCol, "n_id",
       bits, bands, seed)
-    fencedSliceAppend(path, "index") { dir =>
-      sigs.write.mode("append").parquet(dir)
+    Store.append(spark, path, "index", compactFileThreshold) {
+      sigs.write.mode("append").parquet(_)
     }
-    maybeCompactIndex(spark, path, "index", compactFileThreshold)
   }
 
   /** ANN against a [[buildLshIndex]]-persisted index: reads the stored
@@ -248,7 +246,7 @@ object Similarity {
                        k: Int, multiProbe: Boolean = true): DataFrame = {
     val spark = queries.sparkSession
     val (bits, bands, seed) = lshParams(spark, indexPath)
-    val index = spark.read.parquet(resolveDataDir(indexPath, "index"))
+    val index = Store.read(spark, indexPath, "index")
     lshTopKWithIndex(queries, corpus, index, vecCol, idCol, k,
       bits, bands, seed, multiProbe)
   }
@@ -586,22 +584,20 @@ object Similarity {
   }
 
   /** Persist a PQ index at `path` (parquet): `codebook` (m·k rows),
-    * `codes` (one slim row per vector), `_params` (dim, m, k, seed). The
+    * `codes` (one slim row per vector), params (dim, m, k, seed). The
     * train+encode pass over the corpus is paid ONCE; every later query
     * batch reads the stored codes (M bytes/vector) instead of re-encoding
     * the vectors — the PQ counterpart of [[buildLshIndex]]. */
   def buildPqIndex(corpus: DataFrame, vecCol: String, idCol: String,
                    path: String, dim: Int, m: Int, k: Int,
                    seed: Long = 7L): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    dropStalePointer(path, "codes") // a rebuild starts a fresh lineage
-    val book = pqTrain(corpus, vecCol, dim, m, k, seed)
-    book.write.mode("overwrite").parquet(s"$path/codebook")
-    pqEncode(corpus, book, vecCol, idCol, dim, m)
-      .write.mode("overwrite").parquet(s"$path/codes")
-    Seq((dim, m, k, seed)).toDF("dim", "m", "k", "seed")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "codes",
+        Seq("dim" -> dim, "m" -> m, "k" -> k, "seed" -> seed)) { dir =>
+      val book = pqTrain(corpus, vecCol, dim, m, k, seed)
+      book.write.mode("overwrite").parquet(s"$path/codebook")
+      pqEncode(corpus, book, vecCol, idCol, dim, m)
+        .write.mode("overwrite").parquet(dir)
+    }
   }
 
   /** Encode a new corpus partition with the index's FROZEN codebook and
@@ -615,14 +611,13 @@ object Similarity {
                       path: String,
                       compactFileThreshold: Int = 0): Unit = {
     val spark = newCorpus.sparkSession
-    val p = readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     val (dim, m) = (p.getAs[Int]("dim"), p.getAs[Int]("m"))
     val book = spark.read.parquet(s"$path/codebook")
     val codes = pqEncode(newCorpus, book, vecCol, idCol, dim, m)
-    fencedSliceAppend(path, "codes") { dir =>
-      codes.write.mode("append").parquet(dir)
+    Store.append(spark, path, "codes", compactFileThreshold) {
+      codes.write.mode("append").parquet(_)
     }
-    maybeCompactIndex(spark, path, "codes", compactFileThreshold)
   }
 
   /** ANN against a [[buildPqIndex]]-persisted index: reads the stored
@@ -634,11 +629,11 @@ object Similarity {
                       indexPath: String, vecCol: String, idCol: String,
                       k: Int, rerank: Int = 64): DataFrame = {
     val spark = queries.sparkSession
-    val p = readParams(spark, indexPath).head()
+    val p = Store.readParams(spark, indexPath).head()
     val (dim, m) = (p.getAs[Int]("dim"), p.getAs[Int]("m"))
     val book = spark.read.parquet(s"$indexPath/codebook")
     pqTopK(queries, corpus,
-      spark.read.parquet(resolveDataDir(indexPath, "codes")), book,
+      Store.read(spark, indexPath, "codes"), book,
       vecCol, idCol, dim, m, k, rerank)
   }
 
@@ -777,7 +772,7 @@ object Similarity {
 
   /** Persist an OPQ index at `path`: `rotation` (D rows of the orthogonal
     * matrix, index-keyed), plus the [[buildPqIndex]] layout (codebook,
-    * codes, `_params`) trained and encoded in ROTATED space. Rotation,
+    * codes, params) trained and encoded in ROTATED space. Rotation,
     * codebooks, and codes are all learned once at build time; query
     * batches pay only their own D² rotation + ADC. */
   def buildOpqIndex(corpus: DataFrame, vecCol: String, idCol: String,
@@ -785,17 +780,17 @@ object Similarity {
                     seed: Long = 7L): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    dropStalePointer(path, "codes") // a rebuild starts a fresh lineage
-    val rot = opqRotation(corpus, vecCol, dim, m)
-    rot.zipWithIndex.map { case (r, i) => (i, r) }.toDF("i", "row")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/rotation")
-    val rotated = rotate(corpus.select(col(idCol), col(vecCol)), vecCol, rot)
-    val book = pqTrain(rotated, vecCol, dim, m, k, seed)
-    book.write.mode("overwrite").parquet(s"$path/codebook")
-    pqEncode(rotated, book, vecCol, idCol, dim, m)
-      .write.mode("overwrite").parquet(s"$path/codes")
-    Seq((dim, m, k, seed)).toDF("dim", "m", "k", "seed")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "codes",
+        Seq("dim" -> dim, "m" -> m, "k" -> k, "seed" -> seed)) { dir =>
+      val rot = opqRotation(corpus, vecCol, dim, m)
+      rot.zipWithIndex.map { case (r, i) => (i, r) }.toDF("i", "row")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/rotation")
+      val rotated = rotate(corpus.select(col(idCol), col(vecCol)), vecCol, rot)
+      val book = pqTrain(rotated, vecCol, dim, m, k, seed)
+      book.write.mode("overwrite").parquet(s"$path/codebook")
+      pqEncode(rotated, book, vecCol, idCol, dim, m)
+        .write.mode("overwrite").parquet(dir)
+    }
   }
 
   private def readRotation(spark: org.apache.spark.sql.SparkSession,
@@ -811,16 +806,15 @@ object Similarity {
                        path: String,
                        compactFileThreshold: Int = 0): Unit = {
     val spark = newCorpus.sparkSession
-    val p = readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     val (dim, m) = (p.getAs[Int]("dim"), p.getAs[Int]("m"))
     val rotated = rotate(newCorpus.select(col(idCol), col(vecCol)), vecCol,
       readRotation(spark, path))
     val codes = pqEncode(rotated, spark.read.parquet(s"$path/codebook"),
       vecCol, idCol, dim, m)
-    fencedSliceAppend(path, "codes") { dir =>
-      codes.write.mode("append").parquet(dir)
+    Store.append(spark, path, "codes", compactFileThreshold) {
+      codes.write.mode("append").parquet(_)
     }
-    maybeCompactIndex(spark, path, "codes", compactFileThreshold)
   }
 
   /** ANN against a [[buildOpqIndex]]-persisted index: stored rotation +
@@ -830,10 +824,10 @@ object Similarity {
                        indexPath: String, vecCol: String, idCol: String,
                        k: Int, rerank: Int = 64): DataFrame = {
     val spark = queries.sparkSession
-    val p = readParams(spark, indexPath).head()
+    val p = Store.readParams(spark, indexPath).head()
     val (dim, m) = (p.getAs[Int]("dim"), p.getAs[Int]("m"))
     opqTopK(queries, corpus,
-      spark.read.parquet(resolveDataDir(indexPath, "codes")),
+      Store.read(spark, indexPath, "codes"),
       spark.read.parquet(s"$indexPath/codebook"),
       readRotation(spark, indexPath), vecCol, idCol, dim, m, k, rerank)
   }
@@ -922,7 +916,7 @@ object Similarity {
   }
 
   /** Persist an SQ8 index: `codes` (compaction-managed lineage),
-    * `bounds` (dim rows: i, mn, step), `_params` (layout, dim). The
+    * `bounds` (dim rows: i, mn, step), params (layout, dim). The
     * train+encode pass is paid once; serving reads 1 byte/dim. */
   def buildSq8Index(corpus: DataFrame, vecCol: String, idCol: String,
                     path: String, dim: Int,
@@ -930,13 +924,7 @@ object Similarity {
     require(maxRatio > 1.0, "maxRatio must exceed 1 (ratio ~1 = in-dist)")
     val spark = corpus.sparkSession
     import spark.implicits._
-    dropStalePointer(path, "codes")
     val bounds = sq8Train(corpus, vecCol, dim)
-    sq8Encode(corpus, bounds, vecCol, idCol)
-      .write.mode("overwrite").parquet(s"$path/codes")
-    (0 until dim).map(i => (i, bounds.mins(i), bounds.steps(i)))
-      .toDF("i", "mn", "step")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/bounds")
     // base_err: the build corpus's own reconstruction error against the
     // just-trained bounds — the drift baseline ([[ivfDriftCheck]]'s
     // base_err contract, transplanted to scalar quantization). The
@@ -944,15 +932,20 @@ object Similarity {
     // applies the same policy the builder chose (maxRatio: how far a
     // batch's error may exceed base_err before the frozen-bounds
     // contract is considered violated — [[appendToSq8IndexChecked]]).
-    val (baseErr, _) = sq8BatchError(corpus, vecCol, bounds)
-    Seq(("sq8_v1", dim, baseErr, maxRatio))
-      .toDF("layout", "dim", "base_err", "max_ratio")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "codes", Seq("layout" -> "sq8_v1", "dim" -> dim,
+        "base_err" -> sq8BatchError(corpus, vecCol, bounds)._1,
+        "max_ratio" -> maxRatio)) { dir =>
+      sq8Encode(corpus, bounds, vecCol, idCol)
+        .write.mode("overwrite").parquet(dir)
+      (0 until dim).map(i => (i, bounds.mins(i), bounds.steps(i)))
+        .toDF("i", "mn", "step")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/bounds")
+    }
   }
 
   private def readSq8Bounds(spark: org.apache.spark.sql.SparkSession,
                             path: String): Sq8Bounds = {
-    val p = readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     requireLayoutIn(p, path, "sq8_v1")
     val dim = p.getAs[Int]("dim")
     val mins = new Array[Double](dim)
@@ -977,11 +970,10 @@ object Similarity {
                        compactFileThreshold: Int = 0): Unit = {
     val bounds = readSq8Bounds(newCorpus.sparkSession, path)
     val codes = sq8Encode(newCorpus, bounds, vecCol, idCol)
-    fencedSliceAppend(path, "codes") { dir =>
-      codes.write.mode("append").parquet(dir)
+    Store.append(newCorpus.sparkSession, path, "codes",
+        compactFileThreshold) {
+      codes.write.mode("append").parquet(_)
     }
-    maybeCompactIndex(newCorpus.sparkSession, path, "codes",
-      compactFileThreshold)
   }
 
   /** Drift-GATED frozen-bounds append — [[sq8DriftCheck]] wired into the
@@ -1010,7 +1002,7 @@ object Similarity {
                               compactFileThreshold: Int = 0): Sq8DriftReport = {
     val spark = newCorpus.sparkSession
     import spark.implicits._
-    val p = readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     // pre-threshold indexes fall back to the build default rather than
     // refusing to append (the drift check itself requires base_err)
     val maxRatio =
@@ -1083,7 +1075,7 @@ object Similarity {
     * Appends encode against FROZEN per-dimension bounds and out-of-range
     * values CLAMP, so as the data distribution drifts the batch's
     * reconstruction error grows past the build corpus's own (`base_err`
-    * in `_params`) and values start landing outside the trained range
+    * in params) and values start landing outside the trained range
     * entirely. `ratio` ≫ 1 sustained, or a materially non-zero
     * `outOfRangeFrac`, is the rebuild tripwire the freeze contract
     * defers to. Cost: one fused projection + one scalar aggregate over
@@ -1092,7 +1084,7 @@ object Similarity {
   def sq8DriftCheck(batch: DataFrame, vecCol: String,
                     indexPath: String): Sq8DriftReport = {
     val spark = batch.sparkSession
-    val p = readParams(spark, indexPath).head()
+    val p = Store.readParams(spark, indexPath).head()
     requireLayoutIn(p, indexPath, "sq8_v1")
     require(p.schema.fieldNames.contains("base_err"),
       s"index at $indexPath predates drift baselines — rebuild it with " +
@@ -1122,570 +1114,17 @@ object Similarity {
     val spark = queries.sparkSession
     val bounds = readSq8Bounds(spark, indexPath)
     sq8TopK(queries, corpus,
-      spark.read.parquet(resolveDataDir(indexPath, "codes")),
+      Store.read(spark, indexPath, "codes"),
       bounds, vecCol, idCol, k, rerank)
   }
 
-  /** Resolve the live data directory for an index's `sub` table
-    * ("index" or "codes"): if a `<sub>.ptr` pointer file exists (written
-    * atomically by [[compactIndex]]) it names the current generation
-    * directory under `path`; otherwise the plain `<sub>` dir written by
-    * the builders is live. This is the ONE rule every reader and
-    * appender follows, which is what makes compaction crash-safe: the
-    * pointer flips atomically between fully-written generations, so no
-    * crash point leaves the index unreadable. */
-  def resolveDataDir(path: String, sub: String): String = {
-    import java.nio.file.{Files, Paths}
-    val ptr = Paths.get(path, s"$sub.ptr")
-    if (Files.exists(ptr))
-      Paths.get(path, new String(Files.readAllBytes(ptr), "UTF-8").trim).toString
-    else Paths.get(path, sub).toString
-  }
-
-  /** Read an index's `_params` side table. The underscore prefix keeps
-    * the table invisible to readers of the index ROOT (Spark's
-    * hidden-path filter skips `_`-prefixed children) — but NAMING the
-    * directory directly trips the same filter: `DataSource.
-    * checkAndGlobPathIfNecessary` drops the root and logs an "All paths
-    * were ignored" WARN on every read, which is per-micro-batch noise in
-    * any streaming job that consults the index. Listing the part files
-    * explicitly (their names are filter-clean) reads the same rows
-    * silently. Hadoop FS listing so the index can live on any FileSystem
-    * scheme, not just local disk. */
-  def readParams(spark: org.apache.spark.sql.SparkSession,
-                 indexPath: String): org.apache.spark.sql.DataFrame = {
-    // pointer-aware like the data dirs: appendable families that MUTATE
-    // stats ([[graft.operators.Retrieval.appendToBm25Index]]) commit them
-    // as `_params.gNNNN` generations via [[commitParams]]; builders'
-    // plain `_params` stays live when no pointer exists
-    val dir = new org.apache.hadoop.fs.Path(
-      resolveDataDir(indexPath, "_params"))
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val parts = fs.listStatus(dir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString)
-    require(parts.nonEmpty, s"no _params part files under $indexPath")
-    spark.read.parquet(parts.toIndexedSeq: _*)
-  }
-
-  // ------------------------------------------------------------------
-  // Concurrent-writer fencing. Every persisted store in the repo is
-  // SINGLE-writer by contract (appends, compactions, param commits) —
-  // but a production scheduler WILL eventually double-schedule a
-  // writer, and without a fence the losing write is folded away or
-  // orphaned SILENTLY (the worst failure mode a store can have: every
-  // serve keeps answering, wrongly or minus a slice). The fence is an
-  // epoch counter per (store, sub-table) — a plain `<sub>.epoch` file,
-  // bumped by atomic rename after every committed mutation (append,
-  // compaction, generation commit). Writers capture the epoch when they
-  // OPEN the store and verify it has not advanced before (and at) their
-  // commit point: the loser of any interleaving fails LOUDLY instead of
-  // silently losing data. This is detection, not mutual exclusion — the
-  // check-to-commit window is microseconds, the open-to-commit window
-  // it guards is the minutes a fold or append actually takes, and the
-  // single-writer contract remains the documented operating mode; the
-  // fence is the tripwire for its violation.
-  // ------------------------------------------------------------------
-
-  /** Current fencing epoch of `sub` under `path` (0 = never mutated). */
-  def readEpoch(path: String, sub: String): Long = {
-    import java.nio.file.{Files, Paths}
-    val f = Paths.get(path, s"$sub.epoch")
-    if (Files.exists(f))
-      new String(Files.readAllBytes(f), "UTF-8").trim.toLong
-    else 0L
-  }
-
-  private[graft] def bumpEpoch(path: String, sub: String,
-                               from: Long): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    // writer-UNIQUE staging (round-16): the old shared `$sub.epoch.tmp`
-    // let two concurrent bumps race — writer A's atomic move CONSUMES the
-    // file writer B just wrote, and B's move dies with a non-loud
-    // NoSuchFileException (reproduced by the fencing soak; the one test
-    // the round-15 driver run failed). With unique staging both moves
-    // succeed; interleaved bumps were always last-writer-wins, and the
-    // fence checks read the FINAL value either way. Crash debris
-    // (`$sub.epoch.tmp.<nonce>`) sweeps with the other stale staging.
-    val tmp = Paths.get(path, f"$sub.epoch.tmp.${System.nanoTime()}%d")
-    Files.write(tmp, (from + 1).toString.getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(path, s"$sub.epoch"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  private def fenceCheck(path: String, sub: String, expected: Long,
-                         who: String): Unit = {
-    val now = readEpoch(path, sub)
-    if (now != expected)
-      throw new IllegalStateException(
-        s"concurrent writer fenced: $who opened $path/$sub at epoch " +
-          s"$expected but it is now $now — another writer committed in " +
-          "between. This store is single-writer; the losing operation " +
-          "was aborted (nothing it wrote is live). Re-run it at a " +
-          "quiesce point.")
-  }
-
-  /** Run a slice APPEND under the fence: capture the live dir at open,
-    * write into a WRITER-UNIQUE staging dir, move the produced part
-    * files into the live dir, then verify the pointer did not move
-    * before publishing the epoch bump. If a compaction flipped the
-    * pointer mid-append, the moved files landed in the SUPERSEDED
-    * directory — invisible to every reader and reclaimed by the next
-    * sweep — so the loud failure here is the only record the slice
-    * needs re-appending (and re-appending IS safe: nothing this writer
-    * wrote is live); without it the loss is silent. Two other
-    * interleavings are deliberately NOT failures: an append that
-    * starts strictly after a compaction commits resolves the new
-    * generation and proceeds normally (appends-on-top-of-fold is the
-    * designed lifecycle), and two CONCURRENT appends commute — both
-    * slices' files land whatever the interleaving, so a same-dir epoch
-    * advance is benign and the bump simply publishes on top of it
-    * (which is also why the bump reads the FRESH epoch: a mid-fold
-    * compactor's post-flip re-check must see the advance whichever
-    * appender published last).
-    *
-    * The unique staging dir is what MAKES concurrent appends commute
-    * (round-15, found by the fencing concurrency soak): two jobs
-    * writing the same output directory share Spark's `_temporary`
-    * committer tree, so one job's commit/cleanup can delete the
-    * other's in-flight task files (a loud committer error), publish
-    * them under the wrong job (a partial slice), or empty them (a
-    * silently missing slice). With per-append staging every job owns
-    * its committer namespace, and the per-file moves into the live dir
-    * cannot collide — part names embed job-unique UUIDs. A crash
-    * mid-move leaves a partial slice whose retry completes it: slice
-    * rows are byte-identical and per-slice-keyed reads dedup rows, so
-    * the union of partial + full is exactly the full slice (the same
-    * at-least-once story a crashed job commit always had). */
-  private[graft] def fencedSliceAppend(path: String, sub: String)
-                                      (write: String => Unit): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val dir0 = resolveDataDir(path, sub)
-    val stage = Paths.get(path, f"$sub.atmp.${System.nanoTime()}%d")
-    // merge-move: part files go straight in (names embed job-unique
-    // UUIDs — no collisions); hive partition dirs (`cell=N`, the
-    // IVF/IVFPQ cell layouts) merge file-by-file into the live dir's
-    // matching partition; committer markers (_SUCCESS, .crc) stay behind
-    def mergeMove(src: java.nio.file.Path, dst: java.nio.file.Path): Unit =
-      if (Files.isDirectory(src)) {
-        Files.createDirectories(dst)
-        val kids = {
-          val s = Files.list(src)
-          try s.iterator().asScala.toSeq finally s.close()
-        }
-        kids.foreach { k =>
-          val nm = k.getFileName.toString
-          if (!nm.startsWith("_") && !nm.startsWith("."))
-            mergeMove(k, dst.resolve(nm))
-        }
-      } else Files.move(src, dst)
-    try {
-      write(stage.toString)
-      // a sweep can reclaim a SUPERSEDED dir0 while a slow append is
-      // mid-merge (a compaction committed, then a later compaction's
-      // sweep deleted the old generation) — that loser must fail as the
-      // FENCE, not as a stray filesystem error (round-16; the fencing
-      // soak's loud-failure invariant)
-      try mergeMove(stage, Paths.get(dir0))
-      catch { case e: java.io.IOException =>
-        if (resolveDataDir(path, sub) != dir0)
-          throw new IllegalStateException(
-            s"concurrent writer fenced: a compaction of $path/$sub " +
-              s"committed while this append was merging into the now-" +
-              s"superseded $dir0 (its sweep reclaimed the directory " +
-              "mid-move). Nothing this append wrote is live; re-run it " +
-              "at a quiesce point.", e)
-        else throw e
-      }
-      // a Spark write INTO dir0 used to invalidate CacheManager entries
-      // whose plans scan it (cached shingle sets, postings frames);
-      // filesystem moves bypass Spark, so the invalidation must be
-      // explicit or cached readers keep serving the pre-append listing
-      org.apache.spark.sql.SparkSession.active.catalog.refreshByPath(dir0)
-    } finally deleteRec(stage)
-    val dirNow = resolveDataDir(path, sub)
-    if (dirNow != dir0)
-      throw new IllegalStateException(
-        s"concurrent writer fenced: a compaction of $path/$sub committed " +
-          s"while this append was writing (live dir $dir0 -> $dirNow); " +
-          "the appended files landed in the superseded directory and are " +
-          "NOT visible to readers — re-run the append.")
-    bumpEpoch(path, sub, readEpoch(path, sub))
-  }
-
-  /** Auto-compaction cadence for the APPEND-ONLY index families (LSH
-    * signatures, decontamination postings, BM25 postings, PQ codes):
-    * fold the index once its live data table has accumulated
-    * `fileThreshold` part files — the same ingest-lifecycle cadence
-    * [[graft.streaming.Streaming]] threads through the store-backed
-    * streams, for the append paths whose growth unit is FILES, not
-    * slices (each append lands part files; at daily-ingest cadence the
-    * listing/footer tax grows without bound until a fold). Called by
-    * the append functions AFTER their fenced append commits, so
-    * single-writer holds by construction (the compactor IS the
-    * appender) and the fresh epoch the fold opens at is the one the
-    * append just bumped. 0 disables (the default — compaction stays a
-    * maintenance-window decision unless the caller opts in). The
-    * part-file count is a RECURSIVE listing (the IVF/IVFPQ data tables
-    * are hive-partitioned `cell=` layouts whose part files live one
-    * level down — a top-level listing would count 0 forever and the
-    * cadence would silently never fire); the listing short-circuits at
-    * the threshold, so the cost is bounded by the threshold itself,
-    * not the index size. */
-  private[operators] def maybeCompactIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String, sub: String,
-      fileThreshold: Int): Unit =
-    if (fileThreshold > 0) {
-      val dir = new org.apache.hadoop.fs.Path(resolveDataDir(path, sub))
-      val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-      val it = fs.listFiles(dir, true)
-      var n = 0
-      while (n < fileThreshold && it.hasNext)
-        if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-      if (n >= fileThreshold) compactIndex(spark, path)
-    }
-
-  /** A full REBUILD at an existing index path must not leave a pointer
-    * targeting a generation of the previous lineage: drop it so the
-    * plain `<sub>` dir the builder writes becomes live again. */
-  private[operators] def dropStalePointer(path: String, sub: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    Files.deleteIfExists(Paths.get(path, s"$sub.ptr"))
-  }
-
-  private[operators] def deleteRec(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      // materialize the walk before deleting, and close the JDK stream
-      val walk = java.nio.file.Files.walk(p)
-      val all = try walk.iterator().asScala.toSeq finally walk.close()
-      all.reverse.foreach(f => java.nio.file.Files.deleteIfExists(f))
-    }
-  }
-
-  /** Crash-safe `_params` REPLACEMENT for appendable indexes whose stats
-    * mutate over time (BM25's additive n_docs/sum_dl): `writeTo` writes
-    * the new single-row table into a fresh `_params.gNNNN` generation
-    * dir, and the ONLY commit point is the atomic `_params.ptr` rename —
-    * exactly the [[compactIndex]] discipline, because an in-place
-    * `mode("overwrite")` of the only copy truncates it first and a crash
-    * mid-write leaves the index permanently unreadable. Any crash here
-    * leaves the previous fully-written params live (a crash between a
-    * data append and this commit under-counts the new batch — stale but
-    * valid — never corrupt). Generations older than the one-cycle reader
-    * grace are swept after the flip; single-writer ownership, like every
-    * append path in the repo. */
-  private[operators] def commitParams(path: String)
-                                     (writeTo: String => Unit): Unit =
-    commitGeneration(path, "_params")(writeTo)
-
-  /** The [[commitParams]] discipline generalized to ANY mutable side
-    * table `sub` under `path` — used by the streaming sketch-state
-    * checkpoints (kmv/hh driver state rewritten every trigger), which
-    * have the identical failure mode: an in-place `mode("overwrite")`
-    * of the only copy truncates it first, so a crash mid-write corrupts
-    * exactly the state a restart's re-seed depends on. Here a crash at
-    * ANY point leaves the previously committed generation live.
-    *
-    * `expectedEpoch` is the concurrent-writer fence ([[readEpoch]]): a
-    * caller that read the store earlier passes the epoch it opened at,
-    * and the commit refuses loudly — leaving the store exactly as the
-    * interleaved winner left it — if another writer committed in
-    * between. The fence is UNCONDITIONAL: a caller that passes no
-    * epoch (the per-trigger streaming state/watermark commits) is
-    * fenced from the epoch read at entry, so two double-scheduled
-    * streams racing on the same sub-table also lose loudly instead of
-    * silently destroying each other's commit (and the epoch bump can
-    * never publish a non-advancing value that would hide the
-    * interleaved writer from later fence checks).
-    * The commit is structured so every destructive operation
-    * targets a directory only THIS writer names: the generation is
-    * written into a writer-unique staging dir (generation numbers are
-    * deterministic, so two racing writers would compute the SAME name
-    * — the loser's overwrite/cleanup would otherwise destroy the
-    * winner's committed files) and atomically renamed at commit (a
-    * name collision there means the other writer already committed —
-    * abort, discarding only our own staging). After the pointer flip
-    * the epoch is re-verified: a writer that slipped into the
-    * fence-to-flip window would have been silently folded away, so the
-    * pointer is ROLLED BACK to the pre-flip live target (restoring
-    * exactly the winner's state — a racing appender's slice lives in
-    * that dir; a racing committer's pointer value IS that target) and
-    * the commit fails loudly. Residual race window: the few
-    * microseconds between the post-flip re-check and the epoch bump —
-    * documented, not closable with plain files; the single-writer
-    * contract remains the operating mode and the fence its tripwire. */
-  private[graft] def commitGeneration(path: String, sub: String,
-                                      expectedEpoch: Option[Long] = None)
-                                     (writeTo: String => Unit): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    val epoch0 = expectedEpoch.getOrElse(readEpoch(path, sub))
-    expectedEpoch.foreach(fenceCheck(path, sub, _, "generation commit"))
-    val stage = Paths.get(path, f"$sub.gtmp.${System.nanoTime()}%d")
-    def abort(t: IllegalStateException): Nothing = {
-      deleteRec(stage) // only ever our own staging dir
-      throw t
-    }
-    writeTo(stage.toString)
-    try fenceCheck(path, sub, epoch0, "generation commit")
-    catch { case t: IllegalStateException => abort(t) }
-    val liveName =
-      Paths.get(resolveDataDir(path, sub)).getFileName.toString
-    val gen = liveName match {
-      case s if s.startsWith(s"$sub.g") &&
-          s.stripPrefix(s"$sub.g").forall(_.isDigit) =>
-        f"$sub.g${s.stripPrefix(s"$sub.g").toInt + 1}%04d"
-      case _ => f"$sub.g${1}%04d"
-    }
-    // an existing rename target here is CRASH DEBRIS — a generation
-    // whose writer died before its pointer flip (the documented
-    // reclaim-the-slot contract, pinned by test). A COMMITTED
-    // generation cannot be the target: gen = next(live) is computed
-    // from the pointer resolved after the fence check, and a commit
-    // slipping in after that advances the epoch, which the post-flip
-    // re-check below turns into a loud rollback.
-    val genDir = Paths.get(path, gen)
-    if (Files.exists(genDir)) deleteRec(genDir)
-    try Files.move(stage, genDir, StandardCopyOption.ATOMIC_MOVE)
-    catch { case e: java.nio.file.FileSystemException =>
-      abort(new IllegalStateException(
-        if (!Files.exists(stage))
-          s"concurrent writer fenced: this writer's staging directory " +
-            s"$stage is GONE — another writer's sweep reclaimed it as " +
-            "crash debris (it exceeded the staging grace period, or " +
-            "clocks are skewed). Nothing this writer wrote is live; " +
-            "re-run at a quiesce point."
-        else
-          s"concurrent writer fenced: generation $gen at $path appeared " +
-            "mid-commit — another writer committed it first; this " +
-            "writer's staged data was discarded. Re-run at a quiesce " +
-            "point.", e))
-    }
-    val tmp = Paths.get(path, s"$sub.ptr.tmp")
-    Files.write(tmp, gen.getBytes("UTF-8"))
-    Files.move(tmp, Paths.get(path, s"$sub.ptr"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    if (readEpoch(path, sub) != epoch0) {
-      // a writer committed between the fence check and the flip — our
-      // flip would silently fold it away. Restore the pre-flip target
-      // (which holds the winner's state) and fail loudly.
-      if (liveName == sub)
-        Files.deleteIfExists(Paths.get(path, s"$sub.ptr"))
-      else {
-        Files.write(tmp, liveName.getBytes("UTF-8"))
-        Files.move(tmp, Paths.get(path, s"$sub.ptr"),
-          StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-      fenceCheck(path, sub, epoch0, "generation commit (post-flip)")
-    }
-    bumpEpoch(path, sub, epoch0)
-    // sweep superseded generations beyond the grace one (liveName) and
-    // staging dirs orphaned by crashed writers; the builder's plain
-    // `<sub>` dir is never swept — a rebuild reclaims it
-    val genRe = (java.util.regex.Pattern.quote(sub) + "\\.g\\d+").r
-    val stagePrefix = s"$sub.gtmp."
-    val listing = {
-      val s = Files.list(Paths.get(path))
-      try s.iterator().asScala.toSeq finally s.close()
-    }
-    listing.foreach { p =>
-      val nm = p.getFileName.toString
-      val orphanGen = genRe.matches(nm) && nm != gen && nm != liveName
-      // staging sweep is AGE-GATED: a foreign gtmp dir younger than the
-      // grace period may be a live concurrent fold legitimately staging
-      // (minutes, for a big fold) — reclaiming it would turn that
-      // writer's commit into a misattributed abort. Only dirs old
-      // enough that no live writer can still own them are crash debris.
-      val orphanStage = nm.startsWith(stagePrefix) && p != stage &&
-        isStaleStaging(p)
-      // crashed appends' staging dirs (fencedSliceAppend) and crashed
-      // epoch bumps' staging files sweep under the same age gate
-      val orphanAppendStage = (nm.startsWith(s"$sub.atmp.") ||
-        nm.startsWith(s"$sub.epoch.tmp.")) && isStaleStaging(p)
-      if (orphanGen || orphanStage || orphanAppendStage) deleteRecQuiet(p)
-    }
-  }
-
-  /** Staging dirs (`<sub>.gtmp.<nonce>`) younger than this are presumed
-    * to belong to a LIVE concurrent writer still staging its fold —
-    * only older ones are reclaimed as crash debris by the post-commit
-    * sweeps. One hour comfortably exceeds any single fold's staging
-    * time (folds rewrite metadata-sized tables) while still bounding
-    * how long a crashed writer's debris can linger. */
-  private val StagingGraceMs: Long = 60L * 60 * 1000
-
-  /** Best-effort reclamation for the post-commit sweeps: debris deletion
-    * is garbage collection, and a zombie writer re-populating a
-    * superseded dir mid-sweep (its own failure is handled by ITS fence)
-    * must not crash the WINNER's commit — the next cycle reclaims. */
-  private def deleteRecQuiet(p: java.nio.file.Path): Unit =
-    try deleteRec(p)
-    catch { case _: java.io.IOException => () }
-
-  private def isStaleStaging(p: java.nio.file.Path): Boolean =
-    try System.currentTimeMillis -
-      java.nio.file.Files.getLastModifiedTime(p).toMillis > StagingGraceMs
-    catch { case _: java.io.IOException => false } // vanished → not ours to sweep
-
-  /** Compact an appendable index ([[buildLshIndex]] / [[buildPqIndex]] /
-    * [[buildOpqIndex]]): each append adds part files, and a daily-ingest
-    * index accumulates thousands of slivers — the classic small-file
-    * metadata explosion (every query pays file listing + footer reads
-    * per part). Rewrites the data table (`index` and/or `codes`,
-    * whichever exists) into `partitions` clean files as a NEW generation
-    * directory (`<sub>.gNNNN`), then commits it by atomically renaming a
-    * one-line pointer file (`<sub>.ptr`) that [[resolveDataDir]] reads.
-    * Contents are byte-equal rows — compaction never changes query
-    * results (pinned by test).
-    *
-    * Crash safety: the only commit point is the atomic pointer rename.
-    * A crash before it leaves the pointer (or the builder's plain dir)
-    * targeting the previous fully-written generation — queries keep
-    * working and the half-written generation is swept as an orphan on
-    * the next compaction. A crash after it leaves the new generation
-    * live and the previous one as a sweepable orphan. Single-writer
-    * ownership (the contract appends already require) still governs
-    * CONCURRENT writers; readers need no coordination at all — which is
-    * also why the SUPERSEDED generation is not deleted here: Spark reads
-    * are lazy, so a reader that resolved the old directory just before
-    * the flip may execute its scan after this call returns. The old
-    * generation is left as an orphan and reclaimed by the NEXT
-    * compaction's sweep, by which point any such reader has long
-    * finished (grace period = one full compaction cycle).
-    *
-    * Cell-partitioned tables (the IVF/IVFPQ v2 layouts) are rewritten
-    * preserving their hive `cell=` directory structure — compaction must
-    * not undo the partition pruning the layout exists for — with each
-    * cell's slivers folded into one file (`repartition(col("cell"))`:
-    * whole cells hash to one task). */
-  /** Every compactable data sub-table an index family can carry. `wins`
-    * (the window-dedup hash index) was MISSING until round-15 — its
-    * append scaladoc claimed compactIndex folds its slivers while the
-    * fold silently skipped it, so a daily-append window index grew
-    * without bound. Absent sub-dirs are skipped, so the union list is
-    * safe for every family. */
-  private val CompactableSubs = Seq("index", "codes", "cells", "lines",
-    "wins", "urls")
-
-  def compactIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                   partitions: Int = 0): Unit =
-    compactIndex(spark, path, partitions,
-      CompactableSubs.map(sub => sub -> readEpoch(path, sub)).toMap)
-
-  /** [[compactIndex]] with the writer's OPEN epochs made explicit (the
-    * public form reads them at entry): each sub-table's pointer flip is
-    * fenced against the epoch captured here — if an append committed in
-    * between, the flip aborts loudly and the store keeps serving the
-    * winner's data ([[fencedSliceAppend]], mirrored). */
-  private[graft] def compactIndex(spark: org.apache.spark.sql.SparkSession,
-                                  path: String, partitions: Int,
-                                  openEpochs: Map[String, Long]): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
-    val n = if (partitions > 0) partitions
-            else spark.sparkContext.defaultParallelism
-    CompactableSubs.foreach { sub =>
-      val live = Paths.get(resolveDataDir(path, sub))
-      if (Files.isDirectory(live)) {
-        val epoch0 = openEpochs.getOrElse(sub, readEpoch(path, sub))
-        val liveName = live.getFileName.toString
-        // sweep orphans: generation dirs no pointer targets (crashed
-        // compactions and generations superseded by earlier compactions),
-        // crashed writers' staging dirs, plus the legacy staging/old
-        // dirs of the previous two-rename scheme — never the live dir
-        val genRe = (java.util.regex.Pattern.quote(sub) + "\\.g\\d+").r
-        val root = Paths.get(path)
-        val listing = {
-          val s = Files.list(root)
-          try s.iterator().asScala.toSeq finally s.close()
-        }
-        listing.foreach { p =>
-          val nm = p.getFileName.toString
-          val orphanGen = genRe.matches(nm) && nm != liveName
-          // a crash AFTER the pointer flip leaves the superseded plain
-          // builder dir; the pointer outranks it, so it is sweepable too
-          val orphanPlain = nm == sub && liveName != sub
-          // gtmp reclamation is age-gated (see commitGeneration's
-          // sweep): a young foreign staging dir may be a live
-          // concurrent writer mid-fold
-          val legacyTmp = nm == s"$sub.staging" || nm == s"$sub.old" ||
-            ((nm.startsWith(s"$sub.gtmp.") || nm.startsWith(s"$sub.atmp.") ||
-              nm.startsWith(s"$sub.epoch.tmp."))
-              && isStaleStaging(p))
-          if (orphanGen || orphanPlain || legacyTmp) deleteRecQuiet(p)
-        }
-        // the rewrite goes into a writer-UNIQUE staging dir and is
-        // renamed at commit — the commitGeneration discipline: two
-        // racing compactors deterministically compute the same next
-        // generation name, so a shared target would let the loser
-        // clobber the winner's committed files
-        val stage = Paths.get(path, f"$sub.gtmp.${System.nanoTime()}%d")
-        val df = spark.read.parquet(live.toString)
-        if (df.columns.contains("cell"))
-          df.repartition(col("cell"))
-            .write.mode("overwrite").partitionBy("cell")
-            .parquet(stage.toString)
-        else
-          df.repartition(n).write.mode("overwrite").parquet(stage.toString)
-        def abort(t: IllegalStateException): Nothing = {
-          deleteRec(stage); throw t
-        }
-        // fence: an append that committed since this compaction opened
-        // would be folded away by the flip — abort loudly instead
-        try fenceCheck(path, sub, epoch0, "compactIndex")
-        catch { case t: IllegalStateException => abort(t) }
-        val liveNow =
-          Paths.get(resolveDataDir(path, sub)).getFileName.toString
-        val gen = liveNow match {
-          case s if s.startsWith(s"$sub.g") &&
-              s.stripPrefix(s"$sub.g").forall(_.isDigit) =>
-            f"$sub.g${s.stripPrefix(s"$sub.g").toInt + 1}%04d"
-          case _ => f"$sub.g${1}%04d"
-        }
-        try Files.move(stage, Paths.get(path, gen),
-          StandardCopyOption.ATOMIC_MOVE)
-        catch { case e: java.nio.file.FileSystemException =>
-          abort(new IllegalStateException(
-            if (!Files.exists(stage))
-              s"concurrent writer fenced: this compaction's staging " +
-                s"directory $stage is GONE — another writer's sweep " +
-                "reclaimed it as crash debris (it exceeded the staging " +
-                "grace period, or clocks are skewed). Nothing this " +
-                "writer wrote is live; re-run at a quiesce point."
-            else
-              s"concurrent writer fenced: generation $gen at $path " +
-                "already exists — another compaction committed it first; " +
-                "this writer's staged rewrite was discarded.", e))
-        }
-        // commit: write the pointer beside its final name, atomic rename
-        val tmp = Paths.get(path, s"$sub.ptr.tmp")
-        Files.write(tmp, gen.getBytes("UTF-8"))
-        Files.move(tmp, Paths.get(path, s"$sub.ptr"),
-          StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-        if (readEpoch(path, sub) != epoch0) {
-          // a writer committed between the fence check and the flip —
-          // restore the pre-flip target (it holds the winner's state:
-          // an appender's slice lives in that dir, a committer's
-          // pointer value IS that target) and fail loudly
-          if (liveNow == sub)
-            Files.deleteIfExists(Paths.get(path, s"$sub.ptr"))
-          else {
-            Files.write(tmp, liveNow.getBytes("UTF-8"))
-            Files.move(tmp, Paths.get(path, s"$sub.ptr"),
-              StandardCopyOption.ATOMIC_MOVE,
-              StandardCopyOption.REPLACE_EXISTING)
-          }
-          fenceCheck(path, sub, epoch0, "compactIndex (post-flip)")
-        }
-        bumpEpoch(path, sub, epoch0)
-        // the superseded `live` dir is deliberately NOT deleted here —
-        // see the scaladoc's reader-grace argument; next sweep reclaims it
-      }
-    }
-  }
+  /** Forwarders to [[graft.store.Store]] for callers outside the
+    * operator families. */
+  def compactIndex(spark: org.apache.spark.sql.SparkSession,
+                   path: String): Unit = Store.compactIndex(spark, path)
+  def readEpoch(path: String, sub: String): Long = Store.readEpoch(path, sub)
+  def resolveDataDir(path: String, sub: String): String =
+    Store.resolveDataDir(path, sub)
 
   /** Flat per-query ADC lookup table (q_id, tbl): subspace distances to
     * every centroid, (sub, code)-sorted so the entry for (s, c) sits at
@@ -1767,14 +1206,14 @@ object Similarity {
   }
 
   /** Layout tag for cell-partitioned persisted IVF indexes; recorded in
-    * `_params` and validated by every reader/appender (an old slim-layout
+    * params and validated by every reader/appender (an old slim-layout
     * index has no vectors inside — probing it as v2 would not fail, it
     * would return nothing). */
   private[operators] val IvfLayoutV2 = "ivf-cells-partitioned-v2"
 
   /** Persist an IVF index at `path` (parquet): `cells` — the inverted
     * file, one (n_id, vec) row per vector, HIVE-PARTITIONED BY `cell` —
-    * plus `centroids` (k rows) and `_params` (cells, seed, base_err,
+    * plus `centroids` (k rows) and params (cells, seed, base_err,
     * layout). The k-means train + full-corpus assignment + ONE shuffle
     * into cell-partitioned layout are paid at build time; every later
     * query batch probes the stored centroids and then READS ONLY the
@@ -1792,10 +1231,7 @@ object Similarity {
                     path: String, cells: Int = 16, seed: Long = 7L,
                     assignExpr: Option[Column] = None,
                     metaCols: Seq[String] = Nil): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     validateMetaCols(metaCols, idCol, vecCol)
-    dropStalePointer(path, "cells") // a rebuild starts a fresh lineage
     // assignExpr overrides the k-means train with an explicit quantizer
     // (e.g. Dedup.signBitCluster) — same stored layout, caller-chosen
     // geometry; centroids are still the member means of the assignment
@@ -1808,28 +1244,29 @@ object Similarity {
     // metaCols ride inside the index rows (e.g. the label column a
     // hard-negative serve filters on) so serving never joins back to the
     // corpus — the index stays the only table a batch touches.
-    assigned.select(col(idCol).as("n_id") +: col(vecCol).as("vec") +:
-        guardedMetaCols(metaCols) :+ col("cell"): _*)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/cells")
     // member-mean centroids of the stored assignment: self-consistent with
     // what queries probe and what appends assign against
     val cents = cellCentroids(assigned, vecCol, "cell")
-    cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     // baseline quantization error (mean 1 − cosine to the assigned cell's
     // centroid) — the reference point [[ivfDriftCheck]] compares new
     // batches against
-    val baseErr = Option(
+    def baseErr = Option(
       assigned.join(broadcast(cents), "cell")
         .agg(avg(lit(1.0) - VF.cosineSimilarity(col(vecCol), col("centroid"))))
         .head.get(0))
       .map(_.asInstanceOf[Double]).getOrElse(0.0)
-    Seq((cells, seed, baseErr, IvfLayoutV2, metaCols.mkString(",")))
-      .toDF("cells", "seed", "base_err", "layout", "meta_cols")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "cells", Seq("cells" -> cells, "seed" -> seed,
+        "base_err" -> baseErr, "layout" -> IvfLayoutV2,
+        "meta_cols" -> metaCols.mkString(","))) { dir =>
+      assigned.select(col(idCol).as("n_id") +: col(vecCol).as("vec") +:
+          guardedMetaCols(metaCols) :+ col("cell"): _*)
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(dir)
+      cents.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+    }
   }
 
-  /** Meta columns recorded in a v2 IVF index's `_params` (empty for
+  /** Meta columns recorded in a v2 IVF index's params (empty for
     * indexes built without them, including pre-meta indexes). */
   private def metaColsOf(p: org.apache.spark.sql.Row): Seq[String] =
     if (p.schema.fieldNames.contains("meta_cols"))
@@ -1848,14 +1285,14 @@ object Similarity {
     * serving plans: reserved names, the id/vector columns themselves
     * (already stored as `n_id`/`vec`; a duplicate also makes
     * [[calibrateIvfIndex]]'s `n_id`→idCol rename ambiguous), commas
-    * (`meta_cols` round-trips through a comma-joined `_params` string),
+    * (`meta_cols` round-trips through a comma-joined params string),
     * and duplicates. */
   private def validateMetaCols(metaCols: Seq[String], idCol: String,
                                vecCol: String): Unit = {
     metaCols.foreach { mc =>
       require(!mc.contains(","),
         s"meta column '$mc' contains a comma — meta_cols is stored as a " +
-          "comma-joined list in _params")
+          "comma-joined list in params")
       require(!ReservedIndexCols.contains(mc),
         s"meta column '$mc' collides with a reserved index/serving " +
           s"column (${ReservedIndexCols.toSeq.sorted.mkString(", ")})")
@@ -1883,13 +1320,13 @@ object Similarity {
         col(mc)).as(mc))
 
   /** Validate that the index at `path` carries the expected `layout` tag
-    * in `_params`; untagged = pre-v2 slim layout, whose stored table has
+    * in params; untagged = pre-v2 slim layout, whose stored table has
     * no vectors — unusable by v2 readers/appenders. */
   private def requireLayout(spark: org.apache.spark.sql.SparkSession,
                             path: String, expected: String): Unit =
-    requireLayoutIn(readParams(spark, path).head(), path, expected)
+    requireLayoutIn(Store.readParams(spark, path).head(), path, expected)
 
-  /** [[requireLayout]] over an already-read `_params` row — serving paths
+  /** [[requireLayout]] over an already-read params row — serving paths
     * read the side table once and validate + resolve knobs from the same
     * row instead of re-listing the directory per check. */
   private def requireLayoutIn(p: org.apache.spark.sql.Row, path: String,
@@ -1903,7 +1340,7 @@ object Similarity {
   }
 
   /** Resolve a serving knob: an explicit positive argument wins; the
-    * sentinel 0 defers to the calibrated value stored in `_params` (by
+    * sentinel 0 defers to the calibrated value stored in params (by
     * [[calibrateIvfIndex]] / [[calibrateIvfPqIndex]]), falling back to
     * `dflt` on an uncalibrated index. At scale the calibrated value IS
     * index metadata — the builder measured it against brute force, so
@@ -1922,11 +1359,11 @@ object Similarity {
     * The centroid argmax embeds the k×D centroid table as a LITERAL, so
     * assignment is one fused projection over the new vectors — no join,
     * no shuffle; the partitioned append adds one sliver file per touched
-    * cell ([[compactIndex]] folds them). */
+    * cell ([[Store.compactIndex]] folds them). */
   def appendToIvfIndex(newCorpus: DataFrame, vecCol: String, idCol: String,
                        path: String,
                        compactFileThreshold: Int = 0): Unit = {
-    val p = readParams(newCorpus.sparkSession, path).head()
+    val p = Store.readParams(newCorpus.sparkSession, path).head()
     requireLayoutIn(p, path, IvfLayoutV2)
     // an index built with meta columns keeps them through appends — a
     // sliver missing the column would read back as NULL and silently
@@ -1934,11 +1371,10 @@ object Similarity {
     val cells = nearestStoredCentroid(spread(newCorpus), vecCol, path)
       .select(col(idCol).as("n_id") +: col(vecCol).as("vec") +:
         guardedMetaCols(metaColsOf(p)) :+ col("cell"): _*)
-    fencedSliceAppend(path, "cells") { dir =>
-      cells.write.mode("append").partitionBy("cell").parquet(dir)
+    Store.append(newCorpus.sparkSession, path, "cells",
+        compactFileThreshold) {
+      cells.write.mode("append").partitionBy("cell").parquet(_)
     }
-    maybeCompactIndex(newCorpus.sparkSession, path, "cells",
-      compactFileThreshold)
   }
 
   /** Nearest STORED centroid per row: the k×D centroid table embeds as a
@@ -1972,7 +1408,7 @@ object Similarity {
   /** Quantization-drift probe for a [[buildIvfIndex]] index: the mean
     * 1 − cosine of a new batch to its nearest STORED centroid, compared
     * to the error the index had over its own build corpus (`base_err` in
-    * `_params`). Appends assign against FROZEN centroids, so as the data
+    * params). Appends assign against FROZEN centroids, so as the data
     * distribution drifts away from the build corpus this ratio grows —
     * treat a sustained ratio well above 1 as the rebuild tripwire the
     * freeze contract defers to. One fused projection + one scalar
@@ -1981,7 +1417,7 @@ object Similarity {
   def ivfDriftCheck(batch: DataFrame, vecCol: String,
                     indexPath: String): DriftReport = {
     val spark = batch.sparkSession
-    val params = readParams(spark, indexPath)
+    val params = Store.readParams(spark, indexPath)
     require(params.schema.fieldNames.contains("base_err"),
       s"index at $indexPath predates drift baselines — rebuild it with " +
         "buildIvfIndex to record base_err")
@@ -2014,14 +1450,14 @@ object Similarity {
     * scored, same tie-break) — the oracle argument the s11 gate uses.
     *
     * `nprobe = 0` (the default) serves with the nprobe the index was
-    * CALIBRATED to ([[calibrateIvfIndex]] stored it in `_params`);
+    * CALIBRATED to ([[calibrateIvfIndex]] stored it in params);
     * a positive argument overrides, an uncalibrated index falls back
     * to 2. */
   def ivfTopKFromIndex(queries: DataFrame, indexPath: String,
                        vecCol: String, idCol: String,
                        k: Int, nprobe: Int = 0): DataFrame = {
     val spark = queries.sparkSession
-    val p = readParams(spark, indexPath).head()
+    val p = Store.readParams(spark, indexPath).head()
     requireLayoutIn(p, indexPath, IvfLayoutV2)
     val np = resolveKnob(p, nprobe, "cal_nprobe", dflt = 2)
     val centroids = spark.read.parquet(s"$indexPath/centroids")
@@ -2029,7 +1465,7 @@ object Similarity {
     // bounded collect: the probed-cell id set, capped by the cell count
     val probed = probes.select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val stored = spark.read.parquet(resolveDataDir(indexPath, "cells"))
+    val stored = Store.read(spark, indexPath, "cells")
       .filter(col("cell").isin(probed: _*))
     val scored = stored.join(broadcast(probes), Seq("cell"))
       .filter(col("q_id") =!= col("n_id"))
@@ -2074,7 +1510,7 @@ object Similarity {
                              strict: Boolean = false): DataFrame = {
     require(overfetch >= 1, "overfetch must be >= 1")
     val spark = queries.sparkSession
-    val p = readParams(spark, indexPath).head()
+    val p = Store.readParams(spark, indexPath).head()
     requireLayoutIn(p, indexPath, IvfLayoutV2)
     require(metaColsOf(p).contains(labelCol),
       s"index at $indexPath does not store meta column '$labelCol' — " +
@@ -2084,7 +1520,7 @@ object Similarity {
     val probes = probeCells(queries, centroids, vecCol, idCol, np)
     val probed = probes.select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val stored = spark.read.parquet(resolveDataDir(indexPath, "cells"))
+    val stored = Store.read(spark, indexPath, "cells")
       .filter(col("cell").isin(probed: _*))
     val scored = stored.join(broadcast(probes), Seq("cell"))
       .filter(col("q_id") =!= col("n_id"))
@@ -2140,7 +1576,7 @@ object Similarity {
     * scores M-byte codes instead of D-float vectors within them. Tables:
     * `codes` — one (n_id, vec, codes) row per vector, HIVE-PARTITIONED BY
     * `cell`; `centroids` (coarse, cells rows); `codebook` (m·k rows);
-    * `_params`. The stored `vec` is the refinement store for the exact
+    * params. The stored `vec` is the refinement store for the exact
     * re-rank (FAISS's IVFPQR shape, riding in the same partitioned table
     * so re-rank IO is pruned identically); a deployment that re-ranks
     * against an external flat store would drop the column and keep pure
@@ -2148,34 +1584,32 @@ object Similarity {
     * without the persistence; this pays coarse train + PQ train + encode
     * + the one partitioning shuffle ONCE. Lifecycle: build /
     * [[appendToIvfPqIndex]] frozen append / [[ivfPqTopKFromIndex]] query /
-    * [[compactIndex]] sliver fold (partition-preserving). */
+    * [[Store.compactIndex]] sliver fold (partition-preserving). */
   def buildIvfPqIndex(corpus: DataFrame, vecCol: String, idCol: String,
                       path: String, dim: Int, m: Int,
                       cells: Int = 16, k: Int = 256, seed: Long = 7L,
                       assignExpr: Option[Column] = None): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    dropStalePointer(path, "codes") // a rebuild starts a fresh lineage
-    val assigned = assignExpr match {
-      case Some(e) => corpus.withColumn("cell", e.cast("int"))
-      case None    => kmeansCells(corpus, vecCol, cells, seed)
+    Store.create(path, "codes", Seq("cells" -> cells, "dim" -> dim,
+        "m" -> m, "k" -> k, "seed" -> seed,
+        "layout" -> IvfPqLayoutV1)) { dir =>
+      val assigned = assignExpr match {
+        case Some(e) => corpus.withColumn("cell", e.cast("int"))
+        case None    => kmeansCells(corpus, vecCol, cells, seed)
+      }
+      val book = pqTrain(corpus, vecCol, dim, m, k, seed)
+      book.write.mode("overwrite").parquet(s"$path/codebook")
+      cellCentroids(assigned, vecCol, "cell")
+        .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
+      // cell assignment + PQ encode fused in one projection over the
+      // corpus, then the one shuffle into cell-partitioned layout
+      assigned
+        .select(col(idCol).as("n_id"), col(vecCol).as("vec"), col("cell"))
+        .withColumn("__nvec", unit(col("vec")))
+        .select(col("n_id"), col("vec"),
+          pqCodesColumn(book, col("__nvec"), dim, m).as("codes"), col("cell"))
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(dir)
     }
-    val book = pqTrain(corpus, vecCol, dim, m, k, seed)
-    book.write.mode("overwrite").parquet(s"$path/codebook")
-    cellCentroids(assigned, vecCol, "cell")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    // cell assignment + PQ encode fused in one projection over the corpus,
-    // then the one shuffle into cell-partitioned layout
-    assigned
-      .select(col(idCol).as("n_id"), col(vecCol).as("vec"), col("cell"))
-      .withColumn("__nvec", unit(col("vec")))
-      .select(col("n_id"), col("vec"),
-        pqCodesColumn(book, col("__nvec"), dim, m).as("codes"), col("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/codes")
-    Seq((cells, dim, m, k, seed, IvfPqLayoutV1))
-      .toDF("cells", "dim", "m", "k", "seed", "layout")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
   }
 
   /** Append new vectors to a [[buildIvfPqIndex]] index under the freeze
@@ -2183,24 +1617,23 @@ object Similarity {
     * encode against the FROZEN stored codebook, fused in one projection
     * (both embed as literals — no join, no shuffle), appended as sliver
     * files into the touched `cell=` dirs. [[ivfDriftCheck]] is the
-    * rebuild tripwire for both frozen artifacts; [[compactIndex]] folds
+    * rebuild tripwire for both frozen artifacts; [[Store.compactIndex]] folds
     * the slivers. */
   def appendToIvfPqIndex(newCorpus: DataFrame, vecCol: String,
                          idCol: String, path: String,
                          compactFileThreshold: Int = 0): Unit = {
     val spark = newCorpus.sparkSession
     requireLayout(spark, path, IvfPqLayoutV1)
-    val p = readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     val (dim, m) = (p.getAs[Int]("dim"), p.getAs[Int]("m"))
     val book = spark.read.parquet(s"$path/codebook")
     val codes = nearestStoredCentroid(spread(newCorpus), vecCol, path)
       .withColumn("__nvec", unit(col(vecCol)))
       .select(col(idCol).as("n_id"), col(vecCol).as("vec"),
         pqCodesColumn(book, col("__nvec"), dim, m).as("codes"), col("cell"))
-    fencedSliceAppend(path, "codes") { dir =>
-      codes.write.mode("append").partitionBy("cell").parquet(dir)
+    Store.append(spark, path, "codes", compactFileThreshold) {
+      codes.write.mode("append").partitionBy("cell").parquet(_)
     }
-    maybeCompactIndex(spark, path, "codes", compactFileThreshold)
   }
 
   /** ANN against a [[buildIvfPqIndex]] index. Per serving batch: probe
@@ -2217,13 +1650,13 @@ object Similarity {
     *
     * `nprobe = 0` / `rerank = 0` (the defaults) serve with the values
     * the index was CALIBRATED to ([[calibrateIvfPqIndex]] stored them in
-    * `_params`); positive arguments override, an uncalibrated index
+    * params); positive arguments override, an uncalibrated index
     * falls back to nprobe 2 / rerank 64. */
   def ivfPqTopKFromIndex(queries: DataFrame, indexPath: String,
                          vecCol: String, idCol: String, k: Int,
                          nprobe: Int = 0, rerank: Int = 0): DataFrame = {
     val spark = queries.sparkSession
-    val p = readParams(spark, indexPath).head()
+    val p = Store.readParams(spark, indexPath).head()
     requireLayoutIn(p, indexPath, IvfPqLayoutV1)
     val np = resolveKnob(p, nprobe, "cal_nprobe", dflt = 2)
     val rr = resolveKnob(p, rerank, "cal_rerank", dflt = 64)
@@ -2233,7 +1666,7 @@ object Similarity {
     val probes = probeCells(queries, centroids, vecCol, idCol, np)
     val probed = probes.select("cell").distinct()
       .collect().map(_.getInt(0)).toSeq
-    val stored = spark.read.parquet(resolveDataDir(indexPath, "codes"))
+    val stored = Store.read(spark, indexPath, "codes")
       .filter(col("cell").isin(probed: _*))
     // (q_id, cell, tbl): |Q|·nprobe rows — broadcastable; the ADC-table
     // side is |Q| rows, so hint it broadcast too (both sides are
@@ -2328,37 +1761,23 @@ object Similarity {
     } finally sample.unpersist()
   }
 
-  /** Merge `extra` (name → value) into an index's one-row `_params` side
+  /** Merge `extra` (name → value) into an index's one-row params side
     * table: existing columns are preserved (base_err feeds the drift
     * probe, dim/m feed appenders), same-named columns are replaced — so
     * re-calibration overwrites prior calibration without touching the
     * build-time record. */
   private def upsertParams(spark: org.apache.spark.sql.SparkSession,
                            path: String, extra: Seq[(String, Any)]): Unit = {
-    import org.apache.spark.sql.types._
-    val df = readParams(spark, path)
-    val row = df.head()
-    val keep = df.schema.fields.filterNot(f => extra.exists(_._1 == f.name))
-    def typ(v: Any): DataType = v match {
-      case _: Int     => IntegerType
-      case _: Long    => LongType
-      case _: Double  => DoubleType
-      case _: String  => StringType
-      case other => throw new IllegalArgumentException(
-        s"unsupported _params value type: ${other.getClass}")
-    }
-    val schema = StructType(keep.toSeq ++
-      extra.map { case (n, v) => StructField(n, typ(v), nullable = false) })
-    val values = keep.toSeq.map(f => row.getAs[Any](f.name)) ++ extra.map(_._2)
-    spark.createDataFrame(
-      java.util.Arrays.asList(org.apache.spark.sql.Row(values: _*)), schema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    val row = Store.readParams(spark, path).head()
+    val kept = row.schema.fieldNames.toSeq
+      .filterNot(n => extra.exists(_._1 == n)).map(n => n -> row.getAs[Any](n))
+    Store.commitParams(path, kept ++ extra)
   }
 
   /** Calibrate a [[buildIvfIndex]] index IN PLACE: measure the smallest
     * nprobe meeting `recallTarget` ([[calibrateNprobe]], against brute
     * force over the index's OWN stored vectors — no external corpus
-    * argument, the index is the serving copy) and store it in `_params`
+    * argument, the index is the serving copy) and store it in params
     * (`cal_nprobe`, with the k and target it was measured at).
     * [[ivfTopKFromIndex]] then serves with the stored value by default:
     * at 100 TB the calibrated knob is index METADATA, set once by
@@ -2369,7 +1788,7 @@ object Similarity {
                         recallTarget: Double, sampleSize: Int = 32): Int = {
     val spark = queries.sparkSession
     requireLayout(spark, indexPath, IvfLayoutV2)
-    val corpus = spark.read.parquet(resolveDataDir(indexPath, "cells"))
+    val corpus = Store.read(spark, indexPath, "cells")
       .select(col("n_id").as(idCol), col("vec").as(vecCol))
     val np = calibrateNprobe(queries, corpus, indexPath, vecCol, idCol,
       k, recallTarget, sampleSize)
@@ -2383,7 +1802,7 @@ object Similarity {
     * coverage first — no rerank budget recovers a neighbor whose cell was
     * never probed), then the smallest rerank at that nprobe (ADC-ordering
     * slack second). Both measured on a query sample against brute force
-    * over the index's stored refinement vectors, stored in `_params`
+    * over the index's stored refinement vectors, stored in params
     * (`cal_nprobe`, `cal_rerank`), and served as [[ivfPqTopKFromIndex]]'s
     * defaults. Returns (nprobe, rerank); when the target is unreachable
     * the ceilings (cells, maxRerank) are stored — exact coverage. */
@@ -2398,7 +1817,7 @@ object Similarity {
     val spark = queries.sparkSession
     requireLayout(spark, indexPath, IvfPqLayoutV1)
     val cells = spark.read.parquet(s"$indexPath/centroids").count().toInt
-    val corpus = spark.read.parquet(resolveDataDir(indexPath, "codes"))
+    val corpus = Store.read(spark, indexPath, "codes")
       .select(col("n_id").as(idCol), col("vec").as(vecCol))
     val sample = queries.limit(sampleSize).cache()
     try {
@@ -2641,27 +2060,22 @@ object Similarity {
 
   /** Persist a [[kmeansFit]] centroid table as a served model. REFITS
     * are whole-table replacements (centroids are not mergeable — this
-    * is a versioned artifact, not an append-merge store), so the write
-    * goes through the generation + atomic-pointer commit: a crash at
-    * any point leaves the previously committed model live (the BM25
-    * `_params` discipline — never `mode("overwrite")` the only copy).
-    * `_params` records (layout, k, dim) and is validated at load. */
+    * is a versioned artifact, not an append-merge store), so both the
+    * table and the params — (layout, k, dim), validated at load — go
+    * through [[Store.commitGeneration]]: a crash at any point leaves the
+    * previously committed model live. */
   def saveKmeansModel(cents: DataFrame, path: String, k: Int,
                       dim: Int): Unit = {
-    val spark = cents.sparkSession
-    import spark.implicits._
     val n = cents.count()
     require(n == k.toLong * dim,
       s"centroid table has $n rows, expected k x dim = ${k.toLong * dim}" +
         " — the declared geometry does not describe this fit")
-    commitGeneration(path, "centroids") { dir =>
+    Store.commitGeneration(path, "centroids") { dir =>
       cents.select(col("cluster"), col("pos"), col("c"))
         .coalesce(1).write.parquet(dir)
     }
-    commitParams(path) { dir =>
-      Seq(("kmeans_v1", k, dim)).toDF("layout", "k", "dim")
-        .coalesce(1).write.parquet(dir)
-    }
+    Store.commitParams(path,
+      Seq("layout" -> "kmeans_v1", "k" -> k, "dim" -> dim))
   }
 
   /** Load a persisted k-means model's centroid table — layout tag AND
@@ -2670,15 +2084,15 @@ object Similarity {
     * cosines downstream). */
   def loadKmeansModel(spark: org.apache.spark.sql.SparkSession,
                       path: String): DataFrame = {
-    val p = readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     require(p.getAs[String]("layout") == "kmeans_v1",
       s"model at $path has layout ${p.getAs[String]("layout")}, " +
         "expected kmeans_v1")
-    val cents = spark.read.parquet(resolveDataDir(path, "centroids"))
+    val cents = Store.read(spark, path, "centroids")
     val expected = p.getAs[Int]("k").toLong * p.getAs[Int]("dim")
     val n = cents.count()
     require(n == expected,
-      s"model at $path stores $n centroid rows, _params declares " +
+      s"model at $path stores $n centroid rows, params declare " +
         s"k x dim = $expected — refusing a torn/foreign table")
     cents
   }

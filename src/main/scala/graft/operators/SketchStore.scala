@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.store.Store
+
 /** Compaction rung for the persisted sketch stores — the lifecycle
   * operator the append-only discipline was missing. Every sketch store
   * in the repo (KMV distinct sketches, Misra–Gries summaries, Count-Min
@@ -13,10 +15,10 @@ import org.apache.spark.sql.functions._
   * serve pays |slices| × |groups| × bins rows of scan + the classic
   * small-file listing/footer tax, even though the FOLDED answer is
   * metadata-sized and constant. This operator folds all appended slices
-  * into ONE slice in a fresh generation directory and commits it with
-  * the atomic-pointer discipline of [[Similarity.compactIndex]] — after
-  * which the store reads like a single fresh save, and appends continue
-  * on top.
+  * into ONE slice committed as the next generation through
+  * [[graft.store.Store.commitGeneration]] (whose crash-safety and
+  * reader-grace rules apply unchanged) — after which the store reads
+  * like a single fresh save, and appends continue on top.
   *
   * Correctness is free by construction: each family's merge is LINEAR
   * (KMV union closure, MG Agarwal'12 mergeability, CM cell-wise sums,
@@ -24,14 +26,6 @@ import org.apache.spark.sql.functions._
   * re-merging the folded slice with later appends equals merging the
   * original slices — every serve oracle transfers verbatim across a
   * compaction (pinned by the t55–t58 gates and the many-slice soak).
-  *
-  * Crash safety: the fold writes a NEW generation dir (`<sub>.gNNNN`);
-  * the ONLY commit point is the atomic `<sub>.ptr` rename inside
-  * [[Similarity.commitGeneration]]. A crash before the flip leaves the
-  * old slices live (a torn generation is invisible — readers resolve
-  * through the pointer); a crash after leaves the compacted store live
-  * and the old dir as a sweepable orphan reclaimed next compaction
-  * (the one-cycle reader grace of compactIndex).
   *
   * Ownership: compaction is a WRITER-side operation under the same
   * single-writer contract as appends — run it at a quiesce point. In
@@ -57,7 +51,7 @@ object SketchStore {
   val CompactedSliceId = "__compacted"
 
   /** Compact the sketch store at `path`, whatever its family — the
-    * layout tag in `_params` dispatches. Refuses unknown layouts
+    * layout tag in params dispatches. Refuses unknown layouts
     * rather than guessing at a fold that might not be linear.
     *
     * Two guards run before the pointer flip, each converting a silent
@@ -71,18 +65,18 @@ object SketchStore {
     *    would double-count. Compaction refuses until the restart
     *    re-delivers the batch and the watermark catches up.
     *  - WRITER fence: the commit verifies the store's fencing epoch
-    *    ([[Similarity.readEpoch]]) did not advance since this
+    *    ([[graft.store.Store.readEpoch]]) did not advance since this
     *    compaction opened — a concurrent append's slice cannot be
     *    silently folded away; the compaction loses and aborts. */
   def compact(spark: SparkSession, path: String): Unit = {
     val (layout, sub) = dispatch(spark, path)
-    compactImpl(spark, path, layout, sub, Similarity.readEpoch(path, sub))
+    compactImpl(spark, path, layout, sub, Store.readEpoch(path, sub))
   }
 
   private def dispatch(spark: SparkSession,
                        path: String): (String, String) = {
     val layout =
-      Similarity.readParams(spark, path).head().getAs[String]("layout")
+      Store.readParams(spark, path).head().getAs[String]("layout")
     layout match {
       case Sketches.Layout => (layout, "sketches")
       case Sketches.MgLayout => (layout, "summaries")
@@ -91,7 +85,7 @@ object SketchStore {
       case other =>
         throw new IllegalArgumentException(
           s"store at $path has layout '$other' — not a compactable " +
-            "sketch store (ANN indexes compact via Similarity.compactIndex)")
+            "sketch store (ANN indexes compact via Store.compactIndex)")
     }
   }
 
@@ -149,15 +143,12 @@ object SketchStore {
     * replay-idempotent by union closure. */
   private def guardUnwatermarked(spark: SparkSession, path: String,
                                  sub: String, layout: String): Unit = {
-    import java.nio.file.{Files, Paths}
     if (layout == Sketches.Layout) return
-    val wmDir = Similarity.resolveDataDir(path, "wm")
-    val wm = if (Files.exists(Paths.get(wmDir)))
-      spark.read.parquet(wmDir).head().getLong(0)
+    val wm = if (Store.exists(path, "wm"))
+      Store.read(spark, path, "wm").head().getLong(0)
     else -1L // no watermark ever committed → every batch slice is in flight
     val batchRe = "^b(\\d+)$".r
-    val inFlight = spark.read
-      .parquet(Similarity.resolveDataDir(path, sub))
+    val inFlight = Store.read(spark, path, sub)
       .select(col("slice_id")).distinct().collect()
       .map(_.getString(0))
       .collect { case s @ batchRe(n) if n.toLong > wm => s }
@@ -175,33 +166,15 @@ object SketchStore {
     folded.select(lit(CompactedSliceId).as("slice_id") +: folded.columns
       .map(col).toIndexedSeq: _*)
 
-  /** Fold `folded` (a lazy read of the LIVE dir — commitGeneration
-    * writes the new dir first, so the read-while-write is between
+  /** Fold `folded` (a lazy read of the LIVE dir — the commit writes
+    * the new generation first, so the read-while-write is between
     * different directories) into the next generation and flip. The
     * folded table is metadata-sized by construction (≤ groups × bins
     * rows, the same ceiling every serve already enforces), so one
-    * output file keeps the store listing-cheap — the point.
-    *
-    * Plain-dir reclamation (the compactIndex `orphanPlain` rule, which
-    * commitGeneration itself does not apply): once a PREVIOUS
-    * compaction's pointer supersedes the plain builder dir, that dir —
-    * holding every original pre-fold slice, the bulk of the store's
-    * bytes — has had at least one full compaction cycle of reader
-    * grace, so this compaction reclaims it AFTER the new generation
-    * commits (preLive is captured before the flip, the delete runs
-    * after commitGeneration returns — a crash before the delete just
-    * leaves the dir for the next cycle, never a window where neither
-    * copy is live). The first compaction never deletes it (the fold
-    * reads from it, and lazy readers resolved before the flip may
-    * still be scanning). */
+    * output file keeps the store listing-cheap — the point. */
   private def commit(path: String, sub: String, openEpoch: Long)
-                    (folded: DataFrame): Unit = {
-    val preLive = java.nio.file.Paths
-      .get(Similarity.resolveDataDir(path, sub)).getFileName.toString
-    Similarity.commitGeneration(path, sub, Some(openEpoch)) { dir =>
-      folded.coalesce(1).write.mode("overwrite").parquet(dir)
+                    (folded: DataFrame): Unit =
+    Store.commitGeneration(path, sub, Some(openEpoch)) {
+      folded.coalesce(1).write.mode("overwrite").parquet(_)
     }
-    if (preLive != sub)
-      Similarity.deleteRec(java.nio.file.Paths.get(path, sub))
-  }
 }

@@ -4,13 +4,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.KmvSketch
+import graft.store.Store
 
 /** Persisted KMV sketch tables — the lifecycle rung for the
   * [[graft.functions.KmvSketch]] family (every other served artifact in
   * the repo has one: ANN indexes, BM25 postings, thresholds, tokenizers).
   *
   * Layout: `$path/sketches` = (group, sk: array<bigint>) rows,
-  * `$path/_params` = (layout, k). The design exploits the property that
+  * params = (layout, k). The design exploits the property that
   * makes KMV worth persisting at all — CLOSURE UNDER UNION (pinned in
   * PipelineSpec): writes are APPEND-ONLY rows, never a rewrite, and the
   * reader merges per group by re-sketching the stored hash values
@@ -25,7 +26,7 @@ import graft.functions.KmvSketch
   *   - two snapshots' stored sketches feed [[KmvSketch.estimateJaccard]]
   *     directly — cross-corpus overlap without touching either corpus.
   *
-  * The k and layout persist in `_params` and are validated on every
+  * The k and layout persist in params and are validated on every
   * append/load (the index-family tag discipline): merging sketches built
   * at DIFFERENT k silently degrades the estimate floor, so it refuses.
   */
@@ -35,23 +36,18 @@ object Sketches {
 
   /** Create a sketch table at `path` from a (group, sk) frame — the
     * output shape of `groupBy(group).agg(kmvSketch(h, k))`. A re-save
-    * is a REBUILD: any compaction pointer from the previous lineage is
-    * dropped so the plain dir written here is live again (the
-    * [[Similarity.dropStalePointer]] rule every rebuild follows). */
+    * is a rebuild ([[graft.store.Store.create]]). */
   def saveKmvSketches(sketches: DataFrame, groupCol: String, skCol: String,
                       path: String, k: Int): Unit = {
     require(k >= 2, s"k must be at least 2, got $k")
-    val spark = sketches.sparkSession
-    import spark.implicits._
-    Similarity.dropStalePointer(path, "sketches")
-    sketches.select(col(groupCol).as("group"), col(skCol).as("sk"))
-      .write.mode("overwrite").parquet(s"$path/sketches")
-    Seq((Layout, k)).toDF("layout", "k")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "sketches", Seq("layout" -> Layout, "k" -> k)) {
+      sketches.select(col(groupCol).as("group"), col(skCol).as("sk"))
+        .write.mode("overwrite").parquet(_)
+    }
   }
 
   private def readK(spark: SparkSession, path: String): Int = {
-    val p = Similarity.readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     require(p.getAs[String]("layout") == Layout,
       s"sketch table at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")
@@ -60,7 +56,7 @@ object Sketches {
 
   /** Append a new slice's (group, sk) rows. The slice must be sketched
     * at the SAME k the table was created with — validated against
-    * `_params`, because a union of different-k sketches is only as good
+    * params, because a union of different-k sketches is only as good
     * as the smaller k and would silently degrade the estimate. */
   def appendKmvSketches(sketches: DataFrame, groupCol: String,
                         skCol: String, path: String, k: Int): Unit = {
@@ -68,9 +64,9 @@ object Sketches {
     require(stored == k,
       s"sketch table at $path was built at k=$stored, got k=$k — " +
         "sketches merge exactly only at equal k")
-    Similarity.fencedSliceAppend(path, "sketches") { dir =>
+    Store.append(sketches.sparkSession, path, "sketches") {
       sketches.select(col(groupCol).as("group"), col(skCol).as("sk"))
-        .write.mode("append").parquet(dir)
+        .write.mode("append").parquet(_)
     }
   }
 
@@ -80,7 +76,7 @@ object Sketches {
     * slices ever saw. Output: (group, sk). */
   def loadKmvSketches(spark: SparkSession, path: String): DataFrame = {
     val k = readK(spark, path)
-    spark.read.parquet(Similarity.resolveDataDir(path, "sketches"))
+    Store.read(spark, path, "sketches")
       .select(col("group"), explode(col("sk")).as("h"))
       .groupBy("group")
       .agg(KmvSketch.kmvSketch(col("h"), k).as("sk"))
@@ -125,18 +121,15 @@ object Sketches {
                       path: String, m: Int,
                       sliceId: String = "s0"): Unit = {
     require(m >= 1, s"m must be positive, got $m")
-    val spark = summaries.sparkSession
-    import spark.implicits._
-    Similarity.dropStalePointer(path, "summaries")
-    summaries.select(lit(sliceId).as("slice_id"), col(groupCol).as("group"),
-        col(summaryCol).as("summary"), col(nCol).cast("long").as("n_items"))
-      .write.mode("overwrite").parquet(s"$path/summaries")
-    Seq((MgLayout, m)).toDF("layout", "m")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    Store.create(path, "summaries", Seq("layout" -> MgLayout, "m" -> m)) {
+      summaries.select(lit(sliceId).as("slice_id"), col(groupCol).as("group"),
+          col(summaryCol).as("summary"), col(nCol).cast("long").as("n_items"))
+        .write.mode("overwrite").parquet(_)
+    }
   }
 
   private def readM(spark: SparkSession, path: String): Int = {
-    val p = Similarity.readParams(spark, path).head()
+    val p = Store.readParams(spark, path).head()
     require(p.getAs[String]("layout") == MgLayout,
       s"summary table at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $MgLayout")
@@ -168,16 +161,14 @@ object Sketches {
     require(stored == m,
       s"summary table at $path was built at m=$stored, got m=$m — " +
         "summaries merge with the guaranteed bound only at equal m")
-    Similarity.fencedSliceAppend(path, "summaries") { dir =>
+    Store.append(spark, path, "summaries") {
       summaries.select(lit(sliceId).as("slice_id"),
           col(groupCol).as("group"), col(summaryCol).as("summary"),
           col(nCol).cast("long").as("n_items"))
-        .write.mode("append").parquet(dir)
+        .write.mode("append").parquet(_)
     }
     if (compactSliceThreshold > 0) {
-      val n = spark.read
-        .parquet(Similarity.resolveDataDir(path, "summaries"))
-        .select("slice_id").distinct().count()
+      val n = Store.read(spark, path, "summaries").select("slice_id").distinct().count()
       if (n >= compactSliceThreshold) SketchStore.compact(spark, path)
     }
   }
@@ -189,7 +180,7 @@ object Sketches {
     * frequency > n_items/(m+1) is present. */
   def loadMgSummaries(spark: SparkSession, path: String): DataFrame = {
     val m = readM(spark, path)
-    spark.read.parquet(Similarity.resolveDataDir(path, "summaries"))
+    Store.read(spark, path, "summaries")
       .dropDuplicates("slice_id", "group")
       .groupBy("group")
       .agg(graft.functions.MisraGries.mgMerge(col("summary"), m)

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.store.Store
+
 /** Structured-Streaming equivalents of the reference's chunked out-of-core
   * path (`query_multi_gpu_csv`: stream chunks → stateless per-chunk query →
   * in-order append, `/root/reference/src/warpdb.cpp:544-590`,
@@ -950,7 +952,6 @@ object Streaming {
       case Some(p) => Files.createDirectories(Paths.get(p))
       case None => Files.createTempDirectory(s"graft_stream_${name}_")
     }
-    import graft.operators.Similarity
     val ckpt = base.resolve("ckpt").toString
     val ingestDir = base.resolve("ingest").toString
     val batchDocs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -965,13 +966,13 @@ object Streaming {
     // in-place overwrite of the only copy — a crash mid-write must
     // leave the previous generation live, or the restart re-seed
     // starts empty while the checkpoint skips processed files (the
-    // silent-undercount shape the BM25 _params fix closed). A batch
+    // silent-undercount shape the BM25 params fix closed). A batch
     // REPLAY (foreachBatch is at-least-once) re-merges the same
     // hashes, which KMV's union closure makes a no-op — idempotence
     // is free here, unlike the MG stream's counted state.
     val state = scala.collection.mutable.Map.empty[String, KmvBuffer]
     locally {
-      val seed = Similarity.resolveDataDir(base.toString, "kmvstate")
+      val seed = Store.resolveDataDir(base.toString, "kmvstate")
       if (Files.exists(Paths.get(seed)))
         spark.read.parquet(seed).collect().foreach { r =>
           val buf = state.getOrElseUpdate(r.getString(0), new KmvBuffer(k))
@@ -1003,7 +1004,7 @@ object Streaming {
           }
           // durable checkpoint of the merged state: a fresh generation
           // + atomic pointer flip (never overwrite the only copy)
-          Similarity.commitGeneration(base.toString, "kmvstate") { dest =>
+          Store.commitGeneration(base.toString, "kmvstate") { dest =>
             state.toSeq
               .map { case (g, b) => (g, b.values.take(b.n).toSeq) }
               .toDF("lang", "sk")
@@ -1016,7 +1017,7 @@ object Streaming {
     q.processAllAvailable()
     q.stop()
     // serve the t33 shape from the DURABLE state, not the driver map
-    spark.read.parquet(Similarity.resolveDataDir(base.toString, "kmvstate"))
+    Store.read(spark, base.toString, "kmvstate")
       .select(col("lang"),
         size(col("sk")).cast("long").as("n_kept"),
         KmvSketch.estimate(array_sort(col("sk")), k).as("est_phrases"))
@@ -1053,7 +1054,6 @@ object Streaming {
       case Some(p) => Files.createDirectories(Paths.get(p))
       case None => Files.createTempDirectory(s"graft_stream_${name}_")
     }
-    import graft.operators.Similarity
     val ckpt = base.resolve("ckpt").toString
     val ingestDir = base.resolve("ingest").toString
     val batchDocs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -1076,7 +1076,7 @@ object Streaming {
     var nTotal = 0L
     var lastBatch = -1L
     locally {
-      val seed = Similarity.resolveDataDir(base.toString, "hhstate")
+      val seed = Store.resolveDataDir(base.toString, "hhstate")
       if (Files.exists(Paths.get(seed))) {
         val st0 = spark.read.parquet(seed).collect()
         st0.foreach(r => state.counts.update(r.getString(0), r.getLong(1)))
@@ -1105,7 +1105,7 @@ object Streaming {
           lastBatch = batchId
           // durable per-trigger state (≤ m rows + running N + the
           // replay watermark): fresh generation + atomic pointer flip
-          Similarity.commitGeneration(base.toString, "hhstate") { dest =>
+          Store.commitGeneration(base.toString, "hhstate") { dest =>
             state.counts.toSeq
               .toDF("item", "est")
               .withColumn("n_total", lit(nTotal))
@@ -1119,8 +1119,7 @@ object Streaming {
     q.processAllAvailable()
     q.stop()
     // serve from the DURABLE state: exact recount of its candidates
-    val st = spark.read.parquet(
-      Similarity.resolveDataDir(base.toString, "hhstate"))
+    val st = Store.read(spark, base.toString, "hhstate")
     val cands = st.select("item").collect().map(_.getString(0)).toSeq
     val nTot = st.select("n_total").head().getLong(0)
     val thr = math.ceil(phi * nTot).toLong
@@ -1153,7 +1152,7 @@ object Streaming {
                                    baseDir: Option[String] = None): DataFrame = {
     import java.nio.file.{Files, Paths}
     import graft.functions.MgBuffer
-    import graft.operators.{HeavyHitters, Similarity}
+    import graft.operators.HeavyHitters
     val m = math.ceil(2.0 / phi).toInt
     require(m <= (1 << 20), s"phi=$phi needs $m counters per group")
     val base = baseDir match {
@@ -1174,7 +1173,7 @@ object Streaming {
     val totals = scala.collection.mutable.Map.empty[String, Long]
     var lastBatch = -1L
     locally {
-      val seed = Similarity.resolveDataDir(base.toString, "hhgstate")
+      val seed = Store.resolveDataDir(base.toString, "hhgstate")
       if (Files.exists(Paths.get(seed))) {
         val st0 = spark.read.parquet(seed).collect()
         st0.foreach { r =>
@@ -1209,7 +1208,7 @@ object Streaming {
               <= (1L << 20),
             "groups x m exceed the bounded-driver contract — raise phi")
           lastBatch = batchId
-          Similarity.commitGeneration(base.toString, "hhgstate") { dest =>
+          Store.commitGeneration(base.toString, "hhgstate") { dest =>
             state.toSeq.flatMap { case (g, buf) =>
               buf.counts.toSeq.map { case (it, est) =>
                 (g, it, est, totals(g), batchId) }
@@ -1224,8 +1223,7 @@ object Streaming {
     q.stop()
     // serve: exact per-(group, item) recount of the candidate union,
     // per-group thresholds from the DURABLE totals via broadcast join
-    val st = spark.read.parquet(
-      Similarity.resolveDataDir(base.toString, "hhgstate"))
+    val st = Store.read(spark, base.toString, "hhgstate")
     val cands = st.select("item").distinct()
       .collect().map(_.getString(0)).toSeq
     val thr = st.select("group", "n_group").distinct()
@@ -1266,16 +1264,14 @@ object Streaming {
     * keeps its bookkeeping. */
   private def readStoreWatermark(spark: SparkSession,
                                  storePath: String): Long = {
-    import java.nio.file.{Files, Paths}
-    val live = graft.operators.Similarity.resolveDataDir(storePath, "wm")
-    if (Files.exists(Paths.get(live)))
-      spark.read.parquet(live).head().getLong(0)
+    if (Store.exists(storePath, "wm"))
+      Store.read(spark, storePath, "wm").head().getLong(0)
     else -1L
   }
 
   private def commitStoreWatermark(storePath: String,
                                    batchId: Long): Unit = {
-    graft.operators.Similarity.commitGeneration(storePath, "wm") { dest =>
+    Store.commitGeneration(storePath, "wm") { dest =>
       org.apache.spark.sql.SparkSession.active
         .range(batchId, batchId + 1)
         .withColumnRenamed("id", "last_batch")
@@ -1298,8 +1294,7 @@ object Streaming {
   private def maybeCompactStore(spark: SparkSession, storePath: String,
                                 sub: String, threshold: Int): Unit =
     if (threshold > 0) {
-      val n = spark.read.parquet(
-          graft.operators.Similarity.resolveDataDir(storePath, sub))
+      val n = Store.read(spark, storePath, sub)
         .select("slice_id").distinct().count()
       if (n >= threshold)
         graft.operators.SketchStore.compact(spark, storePath)
@@ -1361,7 +1356,7 @@ object Streaming {
           // the committed watermark above extends that idempotence
           // across COMPACTION (a folded slice loses its id — replays
           // of folded batches are skipped outright)
-          if (Files.exists(Paths.get(storeDir, "_params")))
+          if (Store.hasParams(storeDir))
             CountMin.appendCm(counters, storeDir, depth, width,
               sliceId = s"b$batchId")
           else
@@ -1430,7 +1425,7 @@ object Streaming {
         if (batchId > lastBatch && !mb.isEmpty) {
           val counters = CountMin.cmBuildByGroup(
             grams(mb), "lang", "gram", depth, width)
-          if (Files.exists(Paths.get(storeDir, "_params")))
+          if (Store.hasParams(storeDir))
             CountMin.appendCmGroups(counters, storeDir, depth, width,
               sliceId = s"b$batchId")
           else
@@ -1500,7 +1495,7 @@ object Streaming {
         if (batchId > lastBatch && !mb.isEmpty) {
           val hist = Quantiles.histogramByGroup(
             mb, "lang", "n_chars", lo, hi, bins)
-          if (Files.exists(Paths.get(storeDir, "_params")))
+          if (Store.hasParams(storeDir))
             Quantiles.appendHistogram(hist, storeDir, lo, hi, bins,
               sliceId = s"b$batchId")
           else
@@ -1519,7 +1514,7 @@ object Streaming {
     // An all-empty ingest never creates the store — serve the empty
     // frame (GROUP BY over nothing) instead of dying in readGeometry
     // with a bare FileNotFoundException.
-    if (!Files.exists(Paths.get(storeDir, "_params"))) {
+    if (!Store.hasParams(storeDir)) {
       import spark.implicits._
       Seq.empty[(String, Double)].toDF("group", "value")
     } else

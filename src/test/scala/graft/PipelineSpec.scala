@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.store.Store
 
 /** Property tests for the training-data-pipeline operators: soundness of the
   * sketch-based paths against their exact counterparts, determinism of the
@@ -106,8 +107,8 @@ class PipelineSpec extends AnyFunSuite {
       // per-batch appends leave part-slivers; compaction folds them into a
       // new generation without changing membership (a fresh batch that
       // repeats already-claimed lines still loses everything non-unique)
-      Similarity.compactIndex(spark, dir, partitions = 1)
-      assert(Similarity.resolveDataDir(dir, "lines") == s"$dir/lines.g0001")
+      Store.compactIndex(spark, dir, partitions = 1)
+      assert(Store.resolveDataDir(dir, "lines") == s"$dir/lines.g0001")
       val b4 = Seq((7L, Seq("a", "e", "x7"))).toDF("doc_id", "lines")
       val kept4 = m(Dedup.dedupLinesAgainstIndex(b4, "lines", "doc_id", dir))
       assert(kept4(7L) == Seq("x7"))
@@ -127,7 +128,7 @@ class PipelineSpec extends AnyFunSuite {
         .select("a_id", "b_id").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
       // independent oracle: stored cells + driver-side exact cosine
-      val cells = spark.read.parquet(Similarity.resolveDataDir(dir, "cells"))
+      val cells = spark.read.parquet(Store.resolveDataDir(dir, "cells"))
         .select("n_id", "cell")
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       val vecs = emb.select("vec_id", "embedding").collect()
@@ -235,8 +236,8 @@ class PipelineSpec extends AnyFunSuite {
           threshold = 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val before = serve()
-    Similarity.compactIndex(spark, dir, partitions = 2)
-    assert(Similarity.resolveDataDir(dir, "index") == s"$dir/index.g0001")
+    Store.compactIndex(spark, dir, partitions = 2)
+    assert(Store.resolveDataDir(dir, "index") == s"$dir/index.g0001")
     assert(serve() == before, "compaction changed the minhash serve")
     // an append AFTER compaction must be visible (it lands in g0001,
     // not the doomed plain dir): a fresh doc appended then probed with
@@ -251,7 +252,7 @@ class PipelineSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(rep2.exists(p => p._2 == extraId && p._3 == 1.0),
       "post-compaction append invisible to the serve")
-    Similarity.compactIndex(spark, dir, partitions = 2)
+    Store.compactIndex(spark, dir, partitions = 2)
     assert(!java.nio.file.Files.exists(
         java.nio.file.Paths.get(dir, "index")),
       "superseded plain index dir leaked past its grace cycle")
@@ -647,7 +648,7 @@ class PipelineSpec extends AnyFunSuite {
       Similarity.appendToLshIndex(c.filter(col("vec_id") >= 250),
         "embedding", "vec_id", dir, compactFileThreshold = 1)
       val live = java.nio.file.Paths
-        .get(Similarity.resolveDataDir(dir, "index"))
+        .get(Store.resolveDataDir(dir, "index"))
         .getFileName.toString
       assert(live.startsWith("index.g"),
         s"auto-compaction never fired on append: live dir is $live")
@@ -662,7 +663,7 @@ class PipelineSpec extends AnyFunSuite {
         emb.filter(col("vec_id") < 5), "embedding", "vec_id", dir,
         compactFileThreshold = 1)
       assert(java.nio.file.Paths
-        .get(Similarity.resolveDataDir(dir, "index"))
+        .get(Store.resolveDataDir(dir, "index"))
         .getFileName.toString > live, "second fold did not advance the generation")
     }
   }
@@ -728,8 +729,8 @@ class PipelineSpec extends AnyFunSuite {
         (tight & bruteIds).size.toDouble / bruteIds.size >= 0.5)
       assert((tight & bruteIds).size.toDouble / bruteIds.size >= 0.5)
       // the cells table compacts through the same generation machinery
-      Similarity.compactIndex(spark, dir, partitions = 2)
-      assert(Similarity.resolveDataDir(dir, "cells") == s"$dir/cells.g0001")
+      Store.compactIndex(spark, dir, partitions = 2)
+      assert(Store.resolveDataDir(dir, "cells") == s"$dir/cells.g0001")
       assert(pairs(Similarity.ivfTopKFromIndex(q, dir, "embedding",
         "vec_id", k = 5, nprobe = 8)) == brute)
     }
@@ -799,8 +800,8 @@ class PipelineSpec extends AnyFunSuite {
       assert((tight & bruteIds).size.toDouble / bruteIds.size >= 0.3)
       // compaction folds append slivers while PRESERVING the hive cell
       // dirs (partition pruning must survive compaction)
-      Similarity.compactIndex(spark, dir, partitions = 2)
-      assert(Similarity.resolveDataDir(dir, "codes") == s"$dir/codes.g0001")
+      Store.compactIndex(spark, dir, partitions = 2)
+      assert(Store.resolveDataDir(dir, "codes") == s"$dir/codes.g0001")
       val gen = new java.io.File(s"$dir/codes.g0001")
       assert(gen.listFiles().exists(_.getName.startsWith("cell=")),
         "compaction lost the cell partitioning")
@@ -844,7 +845,7 @@ class PipelineSpec extends AnyFunSuite {
       // refused by the v2 reader/appender, not silently return nothing
       val ivf = s"$dir/ivf"
       Similarity.buildIvfIndex(emb, "embedding", "vec_id", ivf, cells = 4)
-      val ip = Similarity.readParams(spark, ivf).head()
+      val ip = Store.readParams(spark, ivf).head()
       Seq((ip.getAs[Int]("cells"), ip.getAs[Long]("seed"),
         ip.getAs[Double]("base_err")))
         .toDF("cells", "seed", "base_err")
@@ -959,6 +960,32 @@ class PipelineSpec extends AnyFunSuite {
     assert(got.size == n)
   }
 
+  test("keepFirstLines: LongType ids outside the occurrence encoding's domain fail loudly, in-domain extremes stay exact") {
+    import spark.implicits._
+    // hash-derived doc ids reach |id| >= 2^33, where id * 2^30 + pos
+    // wraps: the decoded winner would match no occurrence and every copy
+    // of the shared line would drop without an error (with ANSI on, an
+    // arithmetic overflow naming no cause)
+    val big = 1L << 33
+    val out = Seq((big, Seq("shared", "a")), (big + 1, Seq("shared", "b")))
+      .toDF("doc_id", "lines")
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    try Seq("true", "false").foreach { mode =>
+      spark.conf.set("spark.sql.ansi.enabled", mode)
+      val e = intercept[Exception] {
+        Dedup.keepFirstLines(out, "lines", "doc_id").collect()
+      }
+      assert(e.getMessage.contains("occurrence encoding needs"),
+        s"ansi=$mode: ${e.getMessage}")
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    val edge = Seq((-big, Seq("x", "y")), (big - 1, Seq("x", "z")))
+      .toDF("doc_id", "lines")
+    val got = Dedup.keepFirstLines(edge, "lines", "doc_id")
+      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
+    assert(got == Map(-big -> Seq("x", "y"), (big - 1) -> Seq("z")))
+    graft.operators.CacheScope.global.release()
+  }
+
   test("calibrateNprobe: measured recall meets the target; looser targets need no more probes") {
     withTempDir("graft_nprobe_cal") { dir =>
       val q = emb.filter(col("vec_id") < 8)
@@ -1018,7 +1045,7 @@ class PipelineSpec extends AnyFunSuite {
       Similarity.buildIvfIndex(c, "embedding", "vec_id", ivf, cells = 8)
       val np = Similarity.calibrateIvfIndex(q, ivf, "embedding", "vec_id",
         k = 5, recallTarget = 1.0)
-      val ip = Similarity.readParams(spark, ivf).head()
+      val ip = Store.readParams(spark, ivf).head()
       assert(ip.getAs[Int]("cal_nprobe") == np)
       assert(ip.getAs[Int]("cal_k") == 5 && ip.getAs[Double]("cal_recall") == 1.0)
       assert(pairs(Similarity.ivfTopKFromIndex(q, ivf, "embedding", "vec_id",
@@ -1032,7 +1059,7 @@ class PipelineSpec extends AnyFunSuite {
         dim = 64, m = 16, cells = 8, k = 16)
       val (np2, rr2) = Similarity.calibrateIvfPqIndex(q, ivfpq, "embedding",
         "vec_id", k = 5, recallTarget = 1.0)
-      val pp = Similarity.readParams(spark, ivfpq).head()
+      val pp = Store.readParams(spark, ivfpq).head()
       assert(pp.getAs[Int]("cal_nprobe") == np2 &&
         pp.getAs[Int]("cal_rerank") == rr2)
       assert(pp.getAs[Int]("dim") == 64 && pp.getAs[Int]("m") == 16)
@@ -1042,7 +1069,7 @@ class PipelineSpec extends AnyFunSuite {
       // no duplicate columns); a looser target never needs more probes
       val (np3, rr3) = Similarity.calibrateIvfPqIndex(q, ivfpq, "embedding",
         "vec_id", k = 5, recallTarget = 0.3)
-      val pp2 = Similarity.readParams(spark, ivfpq)
+      val pp2 = Store.readParams(spark, ivfpq)
       assert(pp2.count() == 1)
       assert(pp2.head.getAs[Int]("cal_nprobe") == np3 &&
         pp2.head.getAs[Int]("cal_rerank") == rr3)
@@ -1078,7 +1105,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("ANN: PQ codes compress to m small codes; ADC+rerank reproduces brute force") {
     // m=16 of 64 dims, k=16 codes: 16×4-bit codes = 8 B/vector vs 256 B
-    // float32 — 32× compression. Recall@rerank measured by tools.PqSweep:
+    // float32 — 32× compression. Recall@rerank (NOTES.md, PQ ANN curves):
     // m=16 rerank=192 → 1.00 on this corpus (64 → 0.84; m=4 is coarser still).
     val q = emb.filter(col("vec_id") < 5)
     val c = emb.filter(col("vec_id") >= 5)
@@ -1305,17 +1332,17 @@ class PipelineSpec extends AnyFunSuite {
       Similarity.appendToLshIndex(third(1), "embedding", "vec_id", dir)
       Similarity.appendToLshIndex(third(2), "embedding", "vec_id", dir)
       def parts() =
-        new java.io.File(Similarity.resolveDataDir(dir, "index")).listFiles()
+        new java.io.File(Store.resolveDataDir(dir, "index")).listFiles()
           .count(_.getName.endsWith(".parquet"))
       val before = parts()
       val answerBefore = Similarity.lshTopKFromIndex(q, c, dir,
         "embedding", "vec_id", k = 5).select("q_id", "n_id", "rank").collect().toSet
-      Similarity.compactIndex(spark, dir, partitions = 2)
+      Store.compactIndex(spark, dir, partitions = 2)
       // the live dir is now a generation dir committed via the pointer;
       // the superseded dir is NOT deleted yet — in-flight readers that
       // resolved it before the flip get one full compaction cycle of
       // grace before the next sweep reclaims it
-      assert(Similarity.resolveDataDir(dir, "index") == s"$dir/index.g0001")
+      assert(Store.resolveDataDir(dir, "index") == s"$dir/index.g0001")
       assert(new java.io.File(s"$dir/index").exists())
       assert(parts() == 2 && parts() < before)
       val answerAfter = Similarity.lshTopKFromIndex(q, c, dir,
@@ -1327,13 +1354,13 @@ class PipelineSpec extends AnyFunSuite {
       // it, sweeps the twice-superseded plain dir, and leaves g0001 for
       // the NEXT sweep (same one-cycle grace)
       Similarity.appendToLshIndex(third(1), "embedding", "vec_id", dir)
-      Similarity.compactIndex(spark, dir, partitions = 2)
-      assert(Similarity.resolveDataDir(dir, "index") == s"$dir/index.g0002")
+      Store.compactIndex(spark, dir, partitions = 2)
+      assert(Store.resolveDataDir(dir, "index") == s"$dir/index.g0002")
       assert(!new java.io.File(s"$dir/index").exists())
       assert(new java.io.File(s"$dir/index.g0001").exists())
       // third compaction: g0001's grace period is over
-      Similarity.compactIndex(spark, dir, partitions = 2)
-      assert(Similarity.resolveDataDir(dir, "index") == s"$dir/index.g0003")
+      Store.compactIndex(spark, dir, partitions = 2)
+      assert(Store.resolveDataDir(dir, "index") == s"$dir/index.g0003")
       assert(!new java.io.File(s"$dir/index.g0001").exists())
       // PQ index codes compact the same way
       val pq = s"$dir/pq"
@@ -1343,8 +1370,8 @@ class PipelineSpec extends AnyFunSuite {
       Similarity.appendToPqIndex(third(2), "embedding", "vec_id", pq)
       val pqBefore = Similarity.pqTopKFromIndex(q, c, pq, "embedding",
         "vec_id", k = 5, rerank = 16).select("q_id", "n_id", "rank").collect().toSet
-      Similarity.compactIndex(spark, pq, partitions = 2)
-      assert(new java.io.File(Similarity.resolveDataDir(pq, "codes")).listFiles()
+      Store.compactIndex(spark, pq, partitions = 2)
+      assert(new java.io.File(Store.resolveDataDir(pq, "codes")).listFiles()
         .count(_.getName.endsWith(".parquet")) == 2)
       val pqAfter = Similarity.pqTopKFromIndex(q, c, pq, "embedding",
         "vec_id", k = 5, rerank = 16).select("q_id", "n_id", "rank").collect().toSet
@@ -1381,12 +1408,12 @@ class PipelineSpec extends AnyFunSuite {
         compactFileThreshold = 1)
       // first append folded: live codes dir is a pointer-resolved
       // generation (the plain dir would mean the cadence never fired)
-      val gen1 = Paths.get(Similarity.resolveDataDir(auto, "codes"))
+      val gen1 = Paths.get(Store.resolveDataDir(auto, "codes"))
         .getFileName.toString
       assert(gen1.startsWith("codes.g"), s"fold never fired: $gen1")
       Similarity.appendToPqIndex(bB, "embedding", "vec_id", auto,
         compactFileThreshold = 1)
-      val gen2 = Paths.get(Similarity.resolveDataDir(auto, "codes"))
+      val gen2 = Paths.get(Store.resolveDataDir(auto, "codes"))
         .getFileName.toString
       assert(gen2.startsWith("codes.g") && gen2 > gen1,
         s"second append did not advance the fold: $gen1 -> $gen2")
@@ -1413,13 +1440,13 @@ class PipelineSpec extends AnyFunSuite {
       java.nio.file.Files.write(orphan.resolve("part-garbage.parquet"),
         Array[Byte](1, 2, 3))
       // readers still resolve the old live dir — answers unchanged
-      assert(Similarity.resolveDataDir(dir, "index") == s"$dir/index")
+      assert(Store.resolveDataDir(dir, "index") == s"$dir/index")
       val got = Similarity.lshTopKFromIndex(q, c, dir,
         "embedding", "vec_id", k = 5).select("q_id", "n_id", "rank").collect().toSet
       assert(got == expected)
       // the next compaction sweeps the orphan and commits cleanly
-      Similarity.compactIndex(spark, dir, partitions = 2)
-      val live = Similarity.resolveDataDir(dir, "index")
+      Store.compactIndex(spark, dir, partitions = 2)
+      val live = Store.resolveDataDir(dir, "index")
       assert(new java.io.File(live).isDirectory)
       assert(!java.nio.file.Files.exists(orphan.resolve("part-garbage.parquet"))
         || live == orphan.toString) // orphan either swept or replaced by a real gen
@@ -1428,7 +1455,7 @@ class PipelineSpec extends AnyFunSuite {
       assert(after == expected)
       // a rebuild at the same path drops the stale pointer
       Similarity.buildLshIndex(c, "embedding", "vec_id", dir)
-      assert(Similarity.resolveDataDir(dir, "index") == s"$dir/index")
+      assert(Store.resolveDataDir(dir, "index") == s"$dir/index")
     }
   }
 
@@ -1697,7 +1724,7 @@ class PipelineSpec extends AnyFunSuite {
       assert(incr == full, s"$incr vs $full")
       // the fold fired and the live table is a pointer-resolved generation
       assert(java.nio.file.Paths
-        .get(Similarity.resolveDataDir(dir, "urls"))
+        .get(Store.resolveDataDir(dir, "urls"))
         .getFileName.toString.startsWith("urls.g"))
       // a post-fold batch repeating only claimed spellings keeps nothing
       val replayed = Dedup.dedupUrlsAgainstIndex(
@@ -2990,7 +3017,7 @@ class PipelineSpec extends AnyFunSuite {
     withTempDir("graft_bm25_idx_") { dir =>
       Retrieval.buildBm25Index(docs, "text", "doc_id", dir)
       // stored corpus stats equal the in-flight ones (they drive scoring)
-      val p = Similarity.readParams(spark, dir).head()
+      val p = Store.readParams(spark, dir).head()
       assert(p.getAs[String]("layout") == "bm25_v2")
       val nDocs = docs
         .select(col("doc_id"),
@@ -3000,7 +3027,7 @@ class PipelineSpec extends AnyFunSuite {
       assert(p.getAs[Long]("n_docs") == nDocs)
       // the stored postings carry NO df column (the appendable layout);
       // avgdl is exactly sum_dl / n_docs off the integer sums
-      val stored = spark.read.parquet(Similarity.resolveDataDir(dir, "index"))
+      val stored = spark.read.parquet(Store.resolveDataDir(dir, "index"))
       assert(stored.columns.sorted.toSeq == Seq("dl", "n_id", "term", "tf"))
       assert(p.getAs[Double]("avgdl") ==
         p.getAs[Long]("sum_dl").toDouble / nDocs)
@@ -3011,8 +3038,8 @@ class PipelineSpec extends AnyFunSuite {
           r.getDouble(3))).sortBy(t => (t._1, t._3))
       assert(served.toSeq == direct.toSeq)
       // compaction rewrites the postings generation; results are byte-equal
-      Similarity.compactIndex(spark, dir, partitions = 2)
-      assert(Similarity.resolveDataDir(dir, "index").endsWith("index.g0001"))
+      Store.compactIndex(spark, dir, partitions = 2)
+      assert(Store.resolveDataDir(dir, "index").endsWith("index.g0001"))
       assert(served.toSeq == direct.toSeq)
     }
   }
@@ -3033,8 +3060,8 @@ class PipelineSpec extends AnyFunSuite {
       // appended stats are EXACTLY the from-scratch build's (integer sums)
       withTempDir("graft_bm25_full_") { full =>
         Retrieval.buildBm25Index(docs, "text", "doc_id", full)
-        val pa = Similarity.readParams(spark, dir).head()
-        val pf = Similarity.readParams(spark, full).head()
+        val pa = Store.readParams(spark, dir).head()
+        val pf = Store.readParams(spark, full).head()
         assert(pa.getAs[Long]("n_docs") == pf.getAs[Long]("n_docs"))
         assert(pa.getAs[Long]("sum_dl") == pf.getAs[Long]("sum_dl"))
         assert(pa.getAs[Double]("avgdl") == pf.getAs[Double]("avgdl"))
@@ -3048,11 +3075,11 @@ class PipelineSpec extends AnyFunSuite {
       assert(served == direct)
       // an all-empty batch appends nothing and leaves stats untouched
       import spark.implicits._
-      val before = Similarity.readParams(spark, dir).head()
+      val before = Store.readParams(spark, dir).head()
       Retrieval.appendToBm25Index(
         Seq((9999L, ""), (10000L, "  ")).toDF("doc_id", "text"),
         "text", "doc_id", dir)
-      val after = Similarity.readParams(spark, dir).head()
+      val after = Store.readParams(spark, dir).head()
       assert(after.getAs[Long]("n_docs") == before.getAs[Long]("n_docs"))
       assert(after.getAs[Long]("sum_dl") == before.getAs[Long]("sum_dl"))
     }
@@ -3067,15 +3094,15 @@ class PipelineSpec extends AnyFunSuite {
         Seq((1L, "cat dog"), (2L, "dog fish")).toDF("doc_id", "text"),
         "text", "doc_id", dir)
       // build: the plain _params dir is live, no pointer
-      assert(Similarity.resolveDataDir(dir, "_params")
+      assert(Store.resolveDataDir(dir, "_params")
         == Paths.get(dir, "_params").toString)
       // append: stats commit as a NEW generation + atomic pointer flip —
       // never an in-place truncate of the only copy
       Retrieval.appendToBm25Index(
         Seq((3L, "cat")).toDF("doc_id", "text"), "text", "doc_id", dir)
-      assert(Similarity.resolveDataDir(dir, "_params")
+      assert(Store.resolveDataDir(dir, "_params")
         .endsWith("_params.g0001"))
-      val p1 = Similarity.readParams(spark, dir).head()
+      val p1 = Store.readParams(spark, dir).head()
       assert(p1.getAs[Long]("n_docs") == 3L &&
         p1.getAs[Long]("sum_dl") == 5L)
       // a crashed commit = a written generation with NO pointer flip:
@@ -3083,22 +3110,22 @@ class PipelineSpec extends AnyFunSuite {
       val orphan = Paths.get(dir, "_params.g0002")
       Files.createDirectories(orphan)
       Files.write(orphan.resolve("junk.parquet"), Array[Byte](1, 2, 3))
-      val p1b = Similarity.readParams(spark, dir).head()
+      val p1b = Store.readParams(spark, dir).head()
       assert(p1b.getAs[Long]("n_docs") == 3L)
       // the next append reclaims the orphan's slot (fresh full write)
       Retrieval.appendToBm25Index(
         Seq((4L, "dog")).toDF("doc_id", "text"), "text", "doc_id", dir)
-      assert(Similarity.resolveDataDir(dir, "_params")
+      assert(Store.resolveDataDir(dir, "_params")
         .endsWith("_params.g0002"))
-      assert(Similarity.readParams(spark, dir).head()
+      assert(Store.readParams(spark, dir).head()
         .getAs[Long]("n_docs") == 4L)
       // generations older than the one-cycle reader grace are swept
       Retrieval.appendToBm25Index(
         Seq((5L, "fish cat")).toDF("doc_id", "text"), "text", "doc_id",
         dir)
-      assert(Similarity.resolveDataDir(dir, "_params")
+      assert(Store.resolveDataDir(dir, "_params")
         .endsWith("_params.g0003"))
-      val p3 = Similarity.readParams(spark, dir).head()
+      val p3 = Store.readParams(spark, dir).head()
       assert(p3.getAs[Long]("n_docs") == 5L &&
         p3.getAs[Long]("sum_dl") == 8L)
       assert(!Files.exists(Paths.get(dir, "_params.g0001"))) // swept
@@ -3106,9 +3133,9 @@ class PipelineSpec extends AnyFunSuite {
       // a full rebuild resets the lineage to the plain builder dir
       Retrieval.buildBm25Index(
         Seq((9L, "owl")).toDF("doc_id", "text"), "text", "doc_id", dir)
-      assert(Similarity.resolveDataDir(dir, "_params")
+      assert(Store.resolveDataDir(dir, "_params")
         == Paths.get(dir, "_params").toString)
-      assert(Similarity.readParams(spark, dir).head()
+      assert(Store.readParams(spark, dir).head()
         .getAs[Long]("n_docs") == 1L)
     }
   }
@@ -3285,8 +3312,8 @@ class PipelineSpec extends AnyFunSuite {
       assert(flags(dir) == full) // incremental ≡ from-scratch
       // compaction folds the append slivers without changing a flag, and
       // a post-compaction append lands in the live generation
-      Similarity.compactIndex(spark, dir, partitions = 1)
-      assert(Similarity.resolveDataDir(dir, "index") == s"$dir/index.g0001")
+      Store.compactIndex(spark, dir, partitions = 1)
+      assert(Store.resolveDataDir(dir, "index") == s"$dir/index.g0001")
       assert(flags(dir) == full)
       Decontaminate.appendToIndex(
         Seq((300L, "q r s t")).toDF("doc_id", "text"), "text", "doc_id", dir)

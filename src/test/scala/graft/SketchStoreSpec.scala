@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.operators.{CountMin, HeavyHitters, Quantiles, SketchStore,
   Sketches, Similarity}
 import graft.functions.{KmvSketch, MisraGries}
+import graft.store.Store
 
 /** Sketch-store compaction: fold-all-slices must be invisible to every
   * serve (linear merge ≡ merge-at-read), collapse the raw table to a
@@ -20,7 +21,7 @@ class SketchStoreSpec extends AnyFunSuite {
 
   /** Raw (pre-merge) rows + part-file count of the LIVE data dir. */
   private def rawShape(path: String, sub: String): (Long, Int) = {
-    val live = Similarity.resolveDataDir(path, sub)
+    val live = Store.resolveDataDir(path, sub)
     val files = java.nio.file.Files.list(java.nio.file.Paths.get(live))
     val parts = try {
       import scala.jdk.CollectionConverters._
@@ -232,7 +233,7 @@ class SketchStoreSpec extends AnyFunSuite {
     }
     // interleaving 1 — compact loses: it opens (captures the epoch),
     // an append commits in between, its pointer flip must abort
-    val e0 = Similarity.readEpoch(dir, "counters")
+    val e0 = Store.readEpoch(dir, "counters")
     CountMin.appendCm(slice(col("item") === "w0"), dir, depth, width,
       sliceId = "b") // the racing append: bumps the epoch
     val withB = serve()
@@ -252,7 +253,7 @@ class SketchStoreSpec extends AnyFunSuite {
     // the append fails loudly, and readers never see a partial slice
     val afterCompact = serve()
     val ex2 = intercept[IllegalStateException] {
-      Similarity.fencedSliceAppend(dir, "counters") { liveDir =>
+      Store.append(spark, dir, "counters") { liveDir =>
         SketchStore.compact(spark, dir) // the racing compaction
         slice(col("item") === "w1")
           .select(lit("c").as("slice_id"), col("row"), col("cell"),
@@ -297,8 +298,8 @@ class SketchStoreSpec extends AnyFunSuite {
     // leaving A's committed generation untouched (the old shared-name
     // scheme had B overwrite A's live files and then delete them)
     val ex = intercept[IllegalStateException] {
-      Similarity.commitGeneration(dir, "counters",
-        Some(Similarity.readEpoch(dir, "counters"))) { stageDir =>
+      Store.commitGeneration(dir, "counters",
+        Some(Store.readEpoch(dir, "counters"))) { stageDir =>
         SketchStore.compact(spark, dir) // winner A commits mid-stage
         val (counters, _, _) = CountMin.loadCm(spark, dir)
         counters.select(lit("__compacted").as("slice_id"), col("row"),
@@ -308,7 +309,7 @@ class SketchStoreSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("concurrent writer fenced"))
     val live = java.nio.file.Paths.get(
-      Similarity.resolveDataDir(dir, "counters"))
+      Store.resolveDataDir(dir, "counters"))
     assert(java.nio.file.Files.isDirectory(live),
       s"live dir $live missing — the loser destroyed the winner's commit")
     assert(live.getFileName.toString == "counters.g0001")
@@ -338,18 +339,18 @@ class SketchStoreSpec extends AnyFunSuite {
           "vec_id", k = 3)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // compactor opens, append commits in between → flip aborts loudly
-    val open = Map("index" -> Similarity.readEpoch(dir, "index"))
+    val open = Map("index" -> Store.readEpoch(dir, "index"))
     Similarity.appendToLshIndex(vecs(40 until 50), "embedding", "vec_id",
       dir)
     val withAppend = serve()
     val ex = intercept[IllegalStateException] {
-      Similarity.compactIndex(spark, dir, 0, open)
+      Store.compactIndex(spark, dir, 0, open)
     }
     assert(ex.getMessage.contains("concurrent writer fenced"))
     assert(serve() == withAppend,
       "the fenced compactIndex mutated the index it lost")
     // clean retry succeeds; results identical (compaction is a rewrite)
-    Similarity.compactIndex(spark, dir)
+    Store.compactIndex(spark, dir)
     assert(serve() == withAppend)
     corpus.unpersist()
     graft.operators.CacheScope.global.release()
@@ -363,7 +364,7 @@ class SketchStoreSpec extends AnyFunSuite {
     def hist(f: org.apache.spark.sql.Column) =
       Quantiles.histogramByGroup(rows.filter(f), "g", "v", lo, hi, bins)
     def commitWm(b: Long): Unit =
-      Similarity.commitGeneration(dir, "wm") { dest =>
+      Store.commitGeneration(dir, "wm") { dest =>
         spark.range(b, b + 1).withColumnRenamed("id", "last_batch")
           .coalesce(1).write.mode("overwrite").parquet(dest)
       }
@@ -419,7 +420,7 @@ class SketchStoreSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("un-watermarked"))
     // the restart replays batch 0 (per-slice dedup collapses it) and
     // commits the first watermark — compaction now proceeds
-    Similarity.commitGeneration(dir, "wm") { dest =>
+    Store.commitGeneration(dir, "wm") { dest =>
       spark.range(0, 1).withColumnRenamed("id", "last_batch")
         .coalesce(1).write.mode("overwrite").parquet(dest)
     }
@@ -473,7 +474,7 @@ class SketchStoreSpec extends AnyFunSuite {
     // staging and after the flip.
     val dir = tmp("unfenced")
     def commitVal(v: Long)(during: => Unit): Unit =
-      Similarity.commitGeneration(dir, "wm") { dest =>
+      Store.commitGeneration(dir, "wm") { dest =>
         during // the interleaved writer commits while this one stages
         spark.range(v, v + 1).withColumnRenamed("id", "last_batch")
           .coalesce(1).write.mode("overwrite").parquet(dest)
@@ -485,10 +486,10 @@ class SketchStoreSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("concurrent writer fenced"))
     // the interleaved winner's value is live, not the loser's
     val got = spark.read
-      .parquet(Similarity.resolveDataDir(dir, "wm")).head().getLong(0)
+      .parquet(Store.resolveDataDir(dir, "wm")).head().getLong(0)
     assert(got == 99L, s"winner's commit destroyed: wm = $got")
     // the epoch advanced past the winner's commit (no ABA hiding)
-    assert(Similarity.readEpoch(dir, "wm") >= 2L)
+    assert(Store.readEpoch(dir, "wm") >= 2L)
     graft.operators.CacheScope.global.release()
   }
 
@@ -582,7 +583,7 @@ class SketchStoreSpec extends AnyFunSuite {
     val hist = Quantiles.histogramByGroup(one, "g", "v", lo, hi, bins)
       .cache()
     Quantiles.saveHistogram(hist, dir, lo, hi, bins, sliceId = "s0")
-    val live = Similarity.resolveDataDir(dir, "hist")
+    val live = Store.resolveDataDir(dir, "hist")
     (1 until slices).toDF("i").crossJoin(hist)
       .select(concat(lit("s"), col("i")).as("slice_id"),
         col("group"), col("bucket"), col("cnt"), col("mn"), col("mx"))

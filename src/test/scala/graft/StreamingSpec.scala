@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import graft.store.Store
 
 /** Watermark semantics under controlled micro-batches (MemoryStream lets the
   * test drive event-time forward explicitly): late events beyond the
@@ -532,7 +533,7 @@ class StreamingSpec extends AnyFunSuite {
         baseDir = Some(base), compactSliceThreshold = 2))
       val qstore = s"$base/qstore"
       val live = java.nio.file.Paths
-        .get(graft.operators.Similarity.resolveDataDir(qstore, "hist"))
+        .get(Store.resolveDataDir(qstore, "hist"))
         .getFileName.toString
       assert(live.startsWith("hist.g"),
         s"threshold never fired mid-stream: live dir is $live")

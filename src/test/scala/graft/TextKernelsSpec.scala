@@ -171,8 +171,14 @@ class TextKernelsSpec extends AnyFunSuite {
       assert(k.getLong(1) == r.getAs[Long]("ref_total"),
         s"n=1 total diverges on doc ${r.getLong(0)}")
     }
-    // n = 2 without the drop (the KN bigram shape, zip_with windows)
-    val withBg = df.filter(size(col("__w")) >= 2)
+    // n = 2 without the drop (the KN bigram shape, zip_with windows),
+    // plus one array holding a null token (doc -1). The equality claim
+    // covers null-free arrays only: zip_with yields a null gram for a
+    // window touching a null, while the kernel joins the window's
+    // non-null tokens (concat_ws), so that row pins the kernel's rule
+    val nullToks = Seq((-1L, Seq("b", null, "a", "b"))).toDF("doc_id", "__w")
+    val withBg = df.select("doc_id", "__w").unionByName(nullToks)
+      .filter(size(col("__w")) >= 2)
       .withColumn("__bgArr", zip_with(
         slice(col("__w"), lit(1), size(col("__w")) - 1),
         slice(col("__w"), lit(2), size(col("__w")) - 1),
@@ -182,11 +188,18 @@ class TextKernelsSpec extends AnyFunSuite {
       .withColumn("__s", runStarts(col("__bg")))
       .withColumn("ref_runs", runsFromStarts(col("__bg"), col("__s")))
       .collect()
+    assert(withBg.exists(_.getLong(0) == -1L))
     withBg.foreach { r =>
       val k = r.getAs[org.apache.spark.sql.Row]("k")
-      assert(k.getSeq[org.apache.spark.sql.Row](0) ==
-        r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("ref_runs"),
-        s"n=2 runs diverge on doc ${r.getLong(0)}")
+      if (r.getLong(0) == -1L)
+        assert(k.getSeq[org.apache.spark.sql.Row](0)
+            .map(g => (g.getString(0), g.getLong(1))) ==
+          Seq(("a", 1L), ("a b", 1L), ("b", 1L)) && k.getLong(1) == 3L,
+          s"null-token windows: $k")
+      else
+        assert(k.getSeq[org.apache.spark.sql.Row](0) ==
+          r.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("ref_runs"),
+          s"n=2 runs diverge on doc ${r.getLong(0)}")
     }
   }
 
