@@ -155,11 +155,11 @@ object Bpe {
     * and [[encodeTokenCounts]] embeds it into the fold expression. */
   def loadMerges(spark: org.apache.spark.sql.SparkSession,
                  path: String): Seq[(String, String)] = {
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     require(p.getAs[String]("layout") == Layout,
       s"index at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")
-    spark.read.parquet(s"$path/merges")
+    Store.read(spark, path, "merges")
       .orderBy(col("rank"))
       .collect()
       .map(r => (r.getAs[String]("left"), r.getAs[String]("right")))

@@ -122,12 +122,12 @@ object NaiveBayes {
   /** Load a persisted model. Validates the layout tag so a foreign
     * directory fails fast instead of scoring garbage. */
   def load(spark: SparkSession, path: String): Model = {
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     val layout = p.getAs[String]("layout")
     require(layout == "nb_multinomial",
       s"$path is not a NaiveBayes model dir (layout=$layout)")
-    Model(spark.read.parquet(s"$path/classes"),
-      spark.read.parquet(s"$path/cond"),
+    Model(Store.read(spark, path, "classes"),
+      Store.read(spark, path, "cond"),
       p.getAs[Long]("vocab_size"))
   }
 }

@@ -210,7 +210,7 @@ object CountMin {
   }
 
   private def readGeometry(spark: SparkSession, path: String): (Int, Int) = {
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     require(p.getAs[String]("layout") == Layout,
       s"counter store at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")
@@ -270,7 +270,7 @@ object CountMin {
 
   private def readGroupGeometry(spark: SparkSession,
                                 path: String): (Int, Int) = {
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     require(p.getAs[String]("layout") == GroupLayout,
       s"counter store at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $GroupLayout")

@@ -109,7 +109,7 @@ object Decontaminate {
   def appendToIndex(newEval: DataFrame, textCol: String, idCol: String,
                     path: String, compactFileThreshold: Int = 0): Unit = {
     val spark = newEval.sparkSession
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     require(p.getAs[String]("layout") == Layout,
       s"index at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")
@@ -143,7 +143,7 @@ object Decontaminate {
   /** Load a persisted index: postings via the compaction-aware pointer,
     * shingle width / keying from params. */
   def loadIndex(spark: SparkSession, path: String): ContamIndex = {
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     require(p.getAs[String]("layout") == Layout,
       s"index at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")

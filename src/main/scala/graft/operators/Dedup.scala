@@ -220,7 +220,7 @@ object Dedup {
                            path: String,
                            compactFileThreshold: Int = 0): Unit = {
     val spark = docs.sparkSession
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     val bandTable = minhashBandTable(docs, textCol, idCol,
       p.getAs[Int]("shingle_size"), p.getAs[Int]("num_hashes"),
       p.getAs[Int]("bands"))
@@ -254,7 +254,7 @@ object Dedup {
                           threshold: Double)
                          (implicit scope: CacheScope = CacheScope.global): DataFrame = {
     val spark = docs.sparkSession
-    val p = Store.readParams(spark, indexPath).head()
+    val p = Store.params(spark, indexPath)
     val (shingleSize, numHashes, bands) = (p.getAs[Int]("shingle_size"),
       p.getAs[Int]("num_hashes"), p.getAs[Int]("bands"))
     // the batch's shingle sets feed BOTH the sketch and the verify stage —
@@ -1445,7 +1445,7 @@ object Dedup {
     * hash family must match the code's; returns the stored window size. */
   private def windowIndexParams(spark: org.apache.spark.sql.SparkSession,
                                 path: String): Int = {
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     require(p.getAs[String]("family") == "xxhash64-cat1",
       s"window index at $path uses hash family '${p.getAs[String]("family")}'" +
         " but this build computes 'xxhash64-cat1' — rebuild the index")

@@ -113,11 +113,11 @@ object Dsir {
 
   /** Load a persisted λ table, validating the layout tag. */
   def loadModel(spark: SparkSession, path: String): DsirModel = {
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     require(p.getAs[String]("layout") == Layout,
       s"model at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")
-    val m = modelFrom(spark.read.parquet(s"$path/model"))
+    val m = modelFrom(Store.read(spark, path, "model"))
     require(m.b == p.getAs[Int]("b"),
       s"model at $path has ${m.b} buckets, params say ${p.getAs[Int]("b")}")
     m

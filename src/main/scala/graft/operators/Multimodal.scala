@@ -28,14 +28,24 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  // ImageIO's default ImageInputStream cache is FILE-backed: every decode
+  // ImageIO's default stream cache is FILE-backed: every decode or encode
   // creates (and deletes) a temp cache file and serializes on the
   // filesystem + the codec registry — at local[32] the m6 pixel decode
   // measured 5.3 s vs 0.67 s at local[8] from this alone. Our payloads are
-  // in-memory byte arrays; the memory cache decodes the identical bytes
-  // with zero I/O. Set once when the operator family loads (every decode
-  // path below runs through this object).
-  javax.imageio.ImageIO.setUseCache(false)
+  // in-memory byte arrays; the memory cache reads and writes the same
+  // bytes with zero I/O. So every ImageIO call below goes through these
+  // two helpers, which switch to the memory cache first. The switch is
+  // JVM-GLOBAL: it holds for every other ImageIO user in the same JVM.
+  private def readImage(bytes: Array[Byte]): Option[java.awt.image.BufferedImage] = {
+    javax.imageio.ImageIO.setUseCache(false)
+    Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes)))
+  }
+
+  private def writePng(img: java.awt.image.RenderedImage,
+                       out: java.io.OutputStream): Unit = {
+    javax.imageio.ImageIO.setUseCache(false)
+    javax.imageio.ImageIO.write(img, "png", out)
+  }
 
   /** Attach a binary payload + metadata struct to a text corpus (test-data
     * surrogate for real image/audio bytes). */
@@ -242,8 +252,7 @@ object Multimodal {
   class ImageIoDecoder(fallback: PayloadDecoder = FakeDecoder)
       extends PayloadDecoder {
     def decode(bytes: Array[Byte]): (Int, Int, Int) =
-      Option(javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))) match {
+      readImage(bytes) match {
         case Some(img) => (img.getWidth, img.getHeight, 1)
         case None => fallback.decode(bytes)
       }
@@ -256,8 +265,7 @@ object Multimodal {
       * exact and engine-reproducible for any image small enough that
       * the sample sum stays under 2^53. */
     def pixelStats(bytes: Array[Byte]): Option[(Int, Int, Double)] =
-      Option(javax.imageio.ImageIO.read(
-        new java.io.ByteArrayInputStream(bytes))).map { img =>
+      readImage(bytes).map { img =>
         val r = img.getRaster
         val bands = r.getNumBands
         var sum = 0L
@@ -322,7 +330,7 @@ object Multimodal {
           y += 1
         }
         val out = new java.io.ByteArrayOutputStream()
-        javax.imageio.ImageIO.write(img, "png", out)
+        writePng(img, out)
         Row(id, out.toByteArray)
       }
     }
@@ -388,8 +396,7 @@ object Multimodal {
     val rows = input.rdd.mapPartitions { it =>
       it.grouped(batchSize).flatMap { batch =>
         batch.iterator.flatMap { row =>
-          Option(javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(
-            row.getAs[Array[Byte]](1)))).flatMap { img =>
+          readImage(row.getAs[Array[Byte]](1)).flatMap { img =>
             val (w, h) = (img.getWidth / factor, img.getHeight / factor)
             if (w < 1 || h < 1) None
             else {
@@ -418,7 +425,7 @@ object Multimodal {
                 by += 1
               }
               val bos = new java.io.ByteArrayOutputStream()
-              javax.imageio.ImageIO.write(out, "png", bos)
+              writePng(out, bos)
               Some(Row(row.getLong(0), bos.toByteArray, w, h))
             }
           }

@@ -161,10 +161,10 @@ object Quality {
   /** Load a persisted threshold table, validating the layout tag. */
   def loadThresholds(spark: org.apache.spark.sql.SparkSession,
                      path: String): DataFrame = {
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     require(p.getAs[String]("layout") == Layout,
       s"thresholds at $path have layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")
-    spark.read.parquet(s"$path/thresholds")
+    Store.read(spark, path, "thresholds")
   }
 }

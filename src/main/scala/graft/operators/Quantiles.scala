@@ -414,7 +414,7 @@ object Quantiles {
 
   private def readGeometry(spark: SparkSession,
                            path: String): (Double, Double, Int) = {
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     require(p.getAs[String]("layout") == Layout,
       s"histogram store at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")

@@ -267,7 +267,7 @@ object Retrieval {
     implicit val scope: CacheScope = new CacheScope
     try {
       val spark = newDocs.sparkSession
-      val p = Store.readParams(spark, path).head()
+      val p = Store.params(spark, path)
       requireBm25Layout(p, path)
       val (postings, n, sumDl) = tfDlFrame(newDocs, textCol, idCol)
       if (n > 0) {
@@ -307,7 +307,7 @@ object Retrieval {
   /** Load a persisted index: postings via the compaction-aware pointer
     * ([[graft.store.Store.resolveDataDir]]), stats/knobs from params. */
   def loadBm25(spark: SparkSession, indexPath: String): Bm25Model = {
-    val p = Store.readParams(spark, indexPath).head()
+    val p = Store.params(spark, indexPath)
     requireBm25Layout(p, indexPath)
     Bm25Model(
       Store.read(spark, indexPath, "index"),

@@ -195,10 +195,9 @@ object Similarity {
     * family — rebuilding is the only safe path. */
   private def lshParams(spark: org.apache.spark.sql.SparkSession,
                         path: String): (Int, Int, Long) = {
-    val df = Store.readParams(spark, path)
-    val p = df.head()
+    val p = Store.params(spark, path)
     val fam =
-      if (df.schema.fieldNames.contains("family")) p.getAs[String]("family")
+      if (p.schema.fieldNames.contains("family")) p.getAs[String]("family")
       else "<untagged pre-family index>"
     val cur = graft.functions.RandomHyperplaneSignature.family
     require(fam == cur,
@@ -611,9 +610,9 @@ object Similarity {
                       path: String,
                       compactFileThreshold: Int = 0): Unit = {
     val spark = newCorpus.sparkSession
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     val (dim, m) = (p.getAs[Int]("dim"), p.getAs[Int]("m"))
-    val book = spark.read.parquet(s"$path/codebook")
+    val book = Store.read(spark, path, "codebook")
     val codes = pqEncode(newCorpus, book, vecCol, idCol, dim, m)
     Store.append(spark, path, "codes", compactFileThreshold) {
       codes.write.mode("append").parquet(_)
@@ -629,9 +628,9 @@ object Similarity {
                       indexPath: String, vecCol: String, idCol: String,
                       k: Int, rerank: Int = 64): DataFrame = {
     val spark = queries.sparkSession
-    val p = Store.readParams(spark, indexPath).head()
+    val p = Store.params(spark, indexPath)
     val (dim, m) = (p.getAs[Int]("dim"), p.getAs[Int]("m"))
-    val book = spark.read.parquet(s"$indexPath/codebook")
+    val book = Store.read(spark, indexPath, "codebook")
     pqTopK(queries, corpus,
       Store.read(spark, indexPath, "codes"), book,
       vecCol, idCol, dim, m, k, rerank)
@@ -795,7 +794,7 @@ object Similarity {
 
   private def readRotation(spark: org.apache.spark.sql.SparkSession,
                            path: String): Seq[Seq[Float]] =
-    spark.read.parquet(s"$path/rotation").orderBy("i").collect()
+    Store.read(spark, path, "rotation").orderBy("i").collect()
       .map(_.getSeq[Float](1).toSeq).toSeq
 
   /** Append new vectors to a [[buildOpqIndex]] index: rotate with the
@@ -806,11 +805,11 @@ object Similarity {
                        path: String,
                        compactFileThreshold: Int = 0): Unit = {
     val spark = newCorpus.sparkSession
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     val (dim, m) = (p.getAs[Int]("dim"), p.getAs[Int]("m"))
     val rotated = rotate(newCorpus.select(col(idCol), col(vecCol)), vecCol,
       readRotation(spark, path))
-    val codes = pqEncode(rotated, spark.read.parquet(s"$path/codebook"),
+    val codes = pqEncode(rotated, Store.read(spark, path, "codebook"),
       vecCol, idCol, dim, m)
     Store.append(spark, path, "codes", compactFileThreshold) {
       codes.write.mode("append").parquet(_)
@@ -824,11 +823,11 @@ object Similarity {
                        indexPath: String, vecCol: String, idCol: String,
                        k: Int, rerank: Int = 64): DataFrame = {
     val spark = queries.sparkSession
-    val p = Store.readParams(spark, indexPath).head()
+    val p = Store.params(spark, indexPath)
     val (dim, m) = (p.getAs[Int]("dim"), p.getAs[Int]("m"))
     opqTopK(queries, corpus,
       Store.read(spark, indexPath, "codes"),
-      spark.read.parquet(s"$indexPath/codebook"),
+      Store.read(spark, indexPath, "codebook"),
       readRotation(spark, indexPath), vecCol, idCol, dim, m, k, rerank)
   }
 
@@ -945,12 +944,12 @@ object Similarity {
 
   private def readSq8Bounds(spark: org.apache.spark.sql.SparkSession,
                             path: String): Sq8Bounds = {
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     requireLayoutIn(p, path, "sq8_v1")
     val dim = p.getAs[Int]("dim")
     val mins = new Array[Double](dim)
     val steps = new Array[Double](dim)
-    spark.read.parquet(s"$path/bounds").collect().foreach { r =>
+    Store.read(spark, path, "bounds").collect().foreach { r =>
       val i = r.getAs[Int]("i")
       mins(i) = r.getAs[Double]("mn")
       steps(i) = r.getAs[Double]("step")
@@ -1002,7 +1001,7 @@ object Similarity {
                               compactFileThreshold: Int = 0): Sq8DriftReport = {
     val spark = newCorpus.sparkSession
     import spark.implicits._
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     // pre-threshold indexes fall back to the build default rather than
     // refusing to append (the drift check itself requires base_err)
     val maxRatio =
@@ -1084,7 +1083,7 @@ object Similarity {
   def sq8DriftCheck(batch: DataFrame, vecCol: String,
                     indexPath: String): Sq8DriftReport = {
     val spark = batch.sparkSession
-    val p = Store.readParams(spark, indexPath).head()
+    val p = Store.params(spark, indexPath)
     requireLayoutIn(p, indexPath, "sq8_v1")
     require(p.schema.fieldNames.contains("base_err"),
       s"index at $indexPath predates drift baselines — rebuild it with " +
@@ -1324,7 +1323,7 @@ object Similarity {
     * no vectors — unusable by v2 readers/appenders. */
   private def requireLayout(spark: org.apache.spark.sql.SparkSession,
                             path: String, expected: String): Unit =
-    requireLayoutIn(Store.readParams(spark, path).head(), path, expected)
+    requireLayoutIn(Store.params(spark, path), path, expected)
 
   /** [[requireLayout]] over an already-read params row — serving paths
     * read the side table once and validate + resolve knobs from the same
@@ -1363,7 +1362,7 @@ object Similarity {
   def appendToIvfIndex(newCorpus: DataFrame, vecCol: String, idCol: String,
                        path: String,
                        compactFileThreshold: Int = 0): Unit = {
-    val p = Store.readParams(newCorpus.sparkSession, path).head()
+    val p = Store.params(newCorpus.sparkSession, path)
     requireLayoutIn(p, path, IvfLayoutV2)
     // an index built with meta columns keeps them through appends — a
     // sliver missing the column would read back as NULL and silently
@@ -1384,7 +1383,7 @@ object Similarity {
   private def nearestStoredCentroid(df: DataFrame, vecCol: String,
                                     path: String): DataFrame = {
     val spark = df.sparkSession
-    val cents = spark.read.parquet(s"$path/centroids").collect()
+    val cents = Store.read(spark, path, "centroids").collect()
       .map(r => (r.getInt(0), r.getSeq[Float](1)))
       .sortBy(_._1)
     require(cents.nonEmpty,
@@ -1417,11 +1416,11 @@ object Similarity {
   def ivfDriftCheck(batch: DataFrame, vecCol: String,
                     indexPath: String): DriftReport = {
     val spark = batch.sparkSession
-    val params = Store.readParams(spark, indexPath)
+    val params = Store.params(spark, indexPath)
     require(params.schema.fieldNames.contains("base_err"),
       s"index at $indexPath predates drift baselines — rebuild it with " +
         "buildIvfIndex to record base_err")
-    val baseErr = params.head.getAs[Double]("base_err")
+    val baseErr = params.getAs[Double]("base_err")
     val batchErr = Option(
       nearestStoredCentroid(spread(batch), vecCol, indexPath)
         .agg(avg(lit(1.0) - col("__cos"))).head.get(0))
@@ -1437,12 +1436,9 @@ object Similarity {
 
   /** ANN against a [[buildIvfIndex]]-persisted index. The serving batch
     * touches NO table but the index: stored centroids are probed (tiny,
-    * broadcast), the distinct probed cell ids (≤ min(|Q|·nprobe, cells)
-    * ints — a deliberate, bounded driver collect) become an `IN`
-    * predicate on the partition column, so the scan LISTS AND READS ONLY
-    * the probed `cell=` directories (PartitionFilters — pinned by
-    * PlanSpec), and stored vectors score in place against the broadcast
-    * query probes. No corpus-side argument, no corpus-wide join, no
+    * broadcast), the scan LISTS AND READS ONLY the probed `cell=`
+    * directories ([[probeIndex]]), and stored vectors score in place
+    * against the broadcast query probes. No corpus-side argument, no corpus-wide join, no
     * shuffle of anything corpus-sized — per batch the IO is
     * Σ(probed cell sizes) and the only exchange is the per-query top-k
     * window over scored rows. With `nprobe` ≥ cells every partition is
@@ -1457,16 +1453,10 @@ object Similarity {
                        vecCol: String, idCol: String,
                        k: Int, nprobe: Int = 0): DataFrame = {
     val spark = queries.sparkSession
-    val p = Store.readParams(spark, indexPath).head()
+    val p = Store.params(spark, indexPath)
     requireLayoutIn(p, indexPath, IvfLayoutV2)
-    val np = resolveKnob(p, nprobe, "cal_nprobe", dflt = 2)
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-    val probes = probeCells(queries, centroids, vecCol, idCol, np)
-    // bounded collect: the probed-cell id set, capped by the cell count
-    val probed = probes.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val stored = Store.read(spark, indexPath, "cells")
-      .filter(col("cell").isin(probed: _*))
+    val (probes, stored) = probeIndex(queries, p, indexPath, "cells",
+      vecCol, idCol, resolveKnob(p, nprobe, "cal_nprobe", dflt = 2))
     val scored = stored.join(broadcast(probes), Seq("cell"))
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"),
@@ -1510,18 +1500,13 @@ object Similarity {
                              strict: Boolean = false): DataFrame = {
     require(overfetch >= 1, "overfetch must be >= 1")
     val spark = queries.sparkSession
-    val p = Store.readParams(spark, indexPath).head()
+    val p = Store.params(spark, indexPath)
     requireLayoutIn(p, indexPath, IvfLayoutV2)
     require(metaColsOf(p).contains(labelCol),
       s"index at $indexPath does not store meta column '$labelCol' — " +
         s"rebuild with buildIvfIndex(..., metaCols = Seq(\"$labelCol\"))")
-    val np = resolveKnob(p, nprobe, "cal_nprobe", dflt = 2)
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-    val probes = probeCells(queries, centroids, vecCol, idCol, np)
-    val probed = probes.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val stored = Store.read(spark, indexPath, "cells")
-      .filter(col("cell").isin(probed: _*))
+    val (probes, stored) = probeIndex(queries, p, indexPath, "cells",
+      vecCol, idCol, resolveKnob(p, nprobe, "cal_nprobe", dflt = 2))
     val scored = stored.join(broadcast(probes), Seq("cell"))
       .filter(col("q_id") =!= col("n_id"))
       .select(col("q_id"), col("n_id"), col(labelCol).as("n_label"),
@@ -1624,9 +1609,9 @@ object Similarity {
                          compactFileThreshold: Int = 0): Unit = {
     val spark = newCorpus.sparkSession
     requireLayout(spark, path, IvfPqLayoutV1)
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     val (dim, m) = (p.getAs[Int]("dim"), p.getAs[Int]("m"))
-    val book = spark.read.parquet(s"$path/codebook")
+    val book = Store.read(spark, path, "codebook")
     val codes = nearestStoredCentroid(spread(newCorpus), vecCol, path)
       .withColumn("__nvec", unit(col(vecCol)))
       .select(col(idCol).as("n_id"), col(vecCol).as("vec"),
@@ -1638,8 +1623,7 @@ object Similarity {
 
   /** ANN against a [[buildIvfPqIndex]] index. Per serving batch: probe
     * the stored coarse centroids (broadcast), partition-prune the scan to
-    * the probed `cell=` dirs (the bounded driver collect of probed cell
-    * ids becomes the `IN` partition predicate), ADC-score ONLY those
+    * the probed `cell=` dirs ([[probeIndex]]), ADC-score ONLY those
     * cells' codes against the broadcast per-query lookup tables, and
     * exact-cosine re-rank the `rerank` best against the stored refinement
     * vectors — read from the SAME pruned partitions. No argument but the
@@ -1656,18 +1640,13 @@ object Similarity {
                          vecCol: String, idCol: String, k: Int,
                          nprobe: Int = 0, rerank: Int = 0): DataFrame = {
     val spark = queries.sparkSession
-    val p = Store.readParams(spark, indexPath).head()
+    val p = Store.params(spark, indexPath)
     requireLayoutIn(p, indexPath, IvfPqLayoutV1)
-    val np = resolveKnob(p, nprobe, "cal_nprobe", dflt = 2)
     val rr = resolveKnob(p, rerank, "cal_rerank", dflt = 64)
     val (dim, m) = (p.getAs[Int]("dim"), p.getAs[Int]("m"))
-    val centroids = spark.read.parquet(s"$indexPath/centroids")
-    val book = spark.read.parquet(s"$indexPath/codebook")
-    val probes = probeCells(queries, centroids, vecCol, idCol, np)
-    val probed = probes.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val stored = Store.read(spark, indexPath, "codes")
-      .filter(col("cell").isin(probed: _*))
+    val book = Store.read(spark, indexPath, "codebook")
+    val (probes, stored) = probeIndex(queries, p, indexPath, "codes",
+      vecCol, idCol, resolveKnob(p, nprobe, "cal_nprobe", dflt = 2))
     // (q_id, cell, tbl): |Q|·nprobe rows — broadcastable; the ADC-table
     // side is |Q| rows, so hint it broadcast too (both sides are
     // query-sized — without the hint Catalyst's size-unknown default is a
@@ -1738,7 +1717,7 @@ object Similarity {
                       sampleSize: Int = 32): Int = {
     require(recallTarget > 0 && recallTarget <= 1, "recallTarget in (0, 1]")
     val spark = queries.sparkSession
-    val cells = spark.read.parquet(s"$indexPath/centroids").count().toInt
+    val cells = Store.read(spark, indexPath, "centroids").count().toInt
     val sample = queries.limit(sampleSize).cache()
     try {
       def pairs(df: DataFrame): Set[(Any, Any)] =
@@ -1768,7 +1747,7 @@ object Similarity {
     * build-time record. */
   private def upsertParams(spark: org.apache.spark.sql.SparkSession,
                            path: String, extra: Seq[(String, Any)]): Unit = {
-    val row = Store.readParams(spark, path).head()
+    val row = Store.params(spark, path)
     val kept = row.schema.fieldNames.toSeq
       .filterNot(n => extra.exists(_._1 == n)).map(n => n -> row.getAs[Any](n))
     Store.commitParams(path, kept ++ extra)
@@ -1816,7 +1795,7 @@ object Similarity {
       "need k <= rerankStart <= maxRerank")
     val spark = queries.sparkSession
     requireLayout(spark, indexPath, IvfPqLayoutV1)
-    val cells = spark.read.parquet(s"$indexPath/centroids").count().toInt
+    val cells = Store.read(spark, indexPath, "centroids").count().toInt
     val corpus = Store.read(spark, indexPath, "codes")
       .select(col("n_id").as(idCol), col("vec").as(vecCol))
     val sample = queries.limit(sampleSize).cache()
@@ -2084,7 +2063,7 @@ object Similarity {
     * cosines downstream). */
   def loadKmeansModel(spark: org.apache.spark.sql.SparkSession,
                       path: String): DataFrame = {
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     require(p.getAs[String]("layout") == "kmeans_v1",
       s"model at $path has layout ${p.getAs[String]("layout")}, " +
         "expected kmeans_v1")
@@ -2121,6 +2100,33 @@ object Similarity {
       .join(broadcast(cent), "label")
       .select(col("vec_id"), col("label"),
         round(dot / (sqrt(na) * sqrt(nb)), 6).as("cos"))
+  }
+
+  /** One probe of a cell-partitioned index (`sub` = IVF `cells` or
+    * IVFPQ `codes`): the query probes ([[probeCells]] against the stored
+    * centroids) and the stored rows they can reach. Below full coverage
+    * the distinct probed cell ids (≤ min(|Q|·nprobe, cells) ints — a
+    * deliberate, bounded driver collect) become an `IN` predicate on the
+    * partition column, so the scan lists and reads only the probed
+    * `cell=` dirs (PlanSpec pins the prune). At `nprobe` ≥ the stored
+    * `cells` every cell is probed (k-means stores at most `cells`
+    * centroids), so the collect — a whole extra query — and the filter
+    * are skipped. The answer never depends on the filter: the serve's
+    * join on `cell` restricts scoring to probed cells, the filter only
+    * prunes IO. */
+  private def probeIndex(queries: DataFrame, p: org.apache.spark.sql.Row,
+                         indexPath: String, sub: String, vecCol: String,
+                         idCol: String, nprobe: Int): (DataFrame, DataFrame) = {
+    val spark = queries.sparkSession
+    val probes = probeCells(queries, Store.read(spark, indexPath, "centroids"),
+      vecCol, idCol, nprobe)
+    val stored = Store.read(spark, indexPath, sub)
+    if (nprobe >= p.getAs[Int]("cells")) (probes, stored)
+    else {
+      val probed = probes.select("cell").distinct()
+        .collect().map(_.getInt(0)).toSeq
+      (probes, stored.filter(col("cell").isin(probed: _*)))
+    }
   }
 
   /** Each query scores all centroids (tiny, broadcast) and keeps its

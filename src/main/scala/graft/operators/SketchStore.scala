@@ -76,7 +76,7 @@ object SketchStore {
   private def dispatch(spark: SparkSession,
                        path: String): (String, String) = {
     val layout =
-      Store.readParams(spark, path).head().getAs[String]("layout")
+      Store.params(spark, path).getAs[String]("layout")
     layout match {
       case Sketches.Layout => (layout, "sketches")
       case Sketches.MgLayout => (layout, "summaries")

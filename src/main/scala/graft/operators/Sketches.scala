@@ -47,7 +47,7 @@ object Sketches {
   }
 
   private def readK(spark: SparkSession, path: String): Int = {
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     require(p.getAs[String]("layout") == Layout,
       s"sketch table at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $Layout")
@@ -129,7 +129,7 @@ object Sketches {
   }
 
   private def readM(spark: SparkSession, path: String): Int = {
-    val p = Store.readParams(spark, path).head()
+    val p = Store.params(spark, path)
     require(p.getAs[String]("layout") == MgLayout,
       s"summary table at $path has layout ${p.getAs[String]("layout")}, " +
         s"expected $MgLayout")

@@ -5,7 +5,13 @@ import java.util.UUID
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -55,6 +61,10 @@ import org.apache.spark.sql.types._
   * stale — generations that are neither the new nor the previous live
   * one, the plain dir once a generation has been live for a cycle, and
   * crashed writers' staging older than [[StagingGraceMs]].
+  *
+  * Opening a store runs no Spark job. [[params]] reads the params row
+  * and [[read]] takes a table's schema from parquet footers on the
+  * driver, so a serve's only jobs are the ones its own query plans.
   */
 object Store {
 
@@ -75,7 +85,23 @@ object Store {
 
   /** The pointer-resolved read of `sub`. */
   def read(spark: SparkSession, path: String, sub: String): DataFrame =
-    spark.read.parquet(resolveDataDir(path, sub))
+    readDir(spark, resolveDataDir(path, sub))
+
+  /** Read the parquet table at `dir` with the schema Spark wrote into one
+    * part file's footer: Spark's own inference would run a job to read
+    * that same footer. Hive `cell=` partitions are still discovered from
+    * the directory names. A dir with no Spark-written part file falls
+    * back to Spark's read, and to its error for a missing dir. */
+  private def readDir(spark: SparkSession, dir: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val first =
+      try partFiles(dir, conf).nextOption()
+      catch { case _: java.io.FileNotFoundException => None }
+    first.flatMap(footerSchema(_, conf)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+  }
 
   /** True when `sub` has a live directory under `path`. */
   def exists(path: String, sub: String): Boolean =
@@ -91,15 +117,49 @@ object Store {
     * paths were ignored" WARN logs on every read, which is
     * per-micro-batch noise in any streaming job that consults the store.
     * Listing the part files explicitly (their names are filter-clean)
-    * reads the same rows silently, on any Hadoop FileSystem scheme. */
+    * reads the same rows silently, on any Hadoop FileSystem scheme.
+    * Serving code reads params with [[params]]; this Spark read is the
+    * reference it is tested against. */
   def readParams(spark: SparkSession, path: String): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(resolveDataDir(path, Params))
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val parts = fs.listStatus(dir)
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-      .map(_.getPath.toString)
+    val parts = partFiles(resolveDataDir(path, Params),
+      spark.sessionState.newHadoopConf()).map(_.getPath.toString).toSeq
     require(parts.nonEmpty, s"no params part files under $path")
-    spark.read.parquet(parts.toIndexedSeq: _*)
+    spark.read.parquet(parts: _*)
+  }
+
+  /** The store's one params row (the first row of [[readParams]]), read
+    * on the driver with parquet-hadoop: no Spark job. Field names and
+    * types come from the schema Spark wrote into the footer, and only
+    * the five value types [[create]] writes are decoded — any other
+    * type fails loudly rather than decoding a foreign table wrongly. */
+  def params(spark: SparkSession, path: String): Row = {
+    val conf = spark.sessionState.newHadoopConf()
+    val parts = partFiles(resolveDataDir(path, Params), conf).toSeq
+    require(parts.nonEmpty, s"no params part files under $path")
+    val schema = footerSchema(parts.head, conf).getOrElse(
+      throw new IllegalStateException(s"params under $path carry no " +
+        s"Spark schema in their parquet footer ($SparkRowMetadata)"))
+    val fields = schema.fields.map(_.copy(nullable = true))
+    val group = parts.iterator.map { part =>
+      val reader = ParquetReader.builder(new GroupReadSupport, part.getPath)
+        .withConf(conf).build()
+      try Option(reader.read()) finally reader.close()
+    }.collectFirst { case Some(g) => g }.getOrElse(
+      throw new NoSuchElementException(s"params table under $path is empty"))
+    val values: Array[Any] = fields.map { f =>
+      if (group.getFieldRepetitionCount(f.name) == 0) null
+      else f.dataType match {
+        case IntegerType => group.getInteger(f.name, 0)
+        case LongType    => group.getLong(f.name, 0)
+        case DoubleType  => group.getDouble(f.name, 0)
+        case BooleanType => group.getBoolean(f.name, 0)
+        case StringType  => group.getString(f.name, 0)
+        case other => throw new IllegalStateException(
+          s"params under $path hold '${f.name}' of type $other; a params " +
+            "table stores only int, long, double, boolean and string values")
+      }
+    }
+    new GenericRowWithSchema(values, StructType(fields))
   }
 
   /** Current fencing epoch of `sub` under `path` (0 = never mutated). */
@@ -325,7 +385,7 @@ object Store {
       if (Files.isDirectory(Paths.get(live)))
         commitGeneration(path, sub,
             Some(openEpochs.getOrElse(sub, readEpoch(path, sub)))) { dir =>
-          val df = spark.read.parquet(live)
+          val df = readDir(spark, live)
           if (df.columns.contains("cell"))
             df.repartition(col("cell"))
               .write.mode("overwrite").partitionBy("cell").parquet(dir)
@@ -400,6 +460,35 @@ object Store {
         try deleteRec(p)
         catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
     }
+
+  /** The key under which Spark records a table's schema in each parquet
+    * footer it writes. */
+  private val SparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The parquet part files under `dir`, recursively (hive partition
+    * dirs), skipping what Spark's reader skips: any `_`- or `.`-prefixed
+    * name on the way (committer markers, checksums, `_temporary`). */
+  private def partFiles(dir: String, conf: Configuration): Iterator[FileStatus] = {
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(conf)
+    val prefix = fs.makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
+    val it = fs.listFiles(root, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).filter { s =>
+      val rel = s.getPath.toUri.getPath.stripPrefix(prefix)
+      s.getPath.getName.endsWith(".parquet") &&
+        rel.split('/').forall(n => !n.startsWith("_") && !n.startsWith("."))
+    }
+  }
+
+  /** The schema Spark wrote into `part`'s footer; None for a file that
+    * some other writer produced. */
+  private def footerSchema(part: FileStatus,
+                           conf: Configuration): Option[StructType] = {
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(part, conf))
+    try Option(reader.getFileMetaData.getKeyValueMetaData.get(SparkRowMetadata))
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    finally reader.close()
+  }
 
   private def list(dir: Path): Seq[Path] = {
     val s = Files.list(dir)

@@ -114,6 +114,7 @@ class KmeansSpec extends AnyFunSuite {
     java.nio.file.Files.createDirectories(torn)
     java.nio.file.Files.writeString(torn.resolve("part-junk.parquet"), "x")
     assert(serve() == after, "torn generation changed the served model")
+    SparkSpec.assertParamsMatchReference(dir)
     graft.operators.CacheScope.global.release()
   }
 

@@ -17,11 +17,16 @@ class PipelineSpec extends AnyFunSuite {
   private lazy val docs = Tables.load(spark, sf, "documents").cache()
   private lazy val emb = Tables.load(spark, sf, "embeddings").cache()
 
-  /** Temp dir that is always removed, pass or fail. */
+  /** Temp dir that is always removed, pass or fail. Every store the
+    * test left in it must read the same params on the driver as through
+    * Spark. */
   private def withTempDir[A](prefix: String)(f: String => A): A = {
     val dir = java.nio.file.Files.createTempDirectory(prefix)
-    try f(dir.toString)
-    finally {
+    try {
+      val out = f(dir.toString)
+      SparkSpec.assertParamsMatchReference(dir.toString)
+      out
+    } finally {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
         .foreach(p => java.nio.file.Files.deleteIfExists(p))
@@ -205,6 +210,7 @@ class PipelineSpec extends AnyFunSuite {
     val old = docs.filter(col("doc_id") % 5 =!= 0)
     val batch = docs.filter(col("doc_id") % 5 === 0)
     Dedup.buildMinHashIndex(old, "text", "doc_id", dir)
+    SparkSpec.assertParamsMatchReference(dir)
     val inc = Dedup.nearDupAgainstIndex(batch, old, dir, "text", "doc_id",
         threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -720,6 +726,9 @@ class PipelineSpec extends AnyFunSuite {
       val full = pairs(Similarity.ivfTopKFromIndex(q, dir, "embedding",
         "vec_id", k = 5, nprobe = 8))
       assert(full == brute)
+      // probing past the stored cell count is still every cell
+      assert(pairs(Similarity.ivfTopKFromIndex(q, dir, "embedding",
+        "vec_id", k = 5, nprobe = 20)) == brute)
       // tighter probes: a subset with a recall floor (the production trade)
       val tight = Similarity.ivfTopKFromIndex(q, dir, "embedding",
         "vec_id", k = 5, nprobe = 3).select("q_id", "n_id").collect()
@@ -923,6 +932,7 @@ class PipelineSpec extends AnyFunSuite {
       }.toSet
       assert(replayed == full,
         s"replay diverged: extra=${replayed -- full} missing=${full -- replayed}")
+      SparkSpec.assertParamsMatchReference(dir)
       // incremental removal on a fresh batch claimed entirely by history
       val cut = Dedup.removeDuplicateSpansAgainstIndex(
         Seq((8L, s"$a tail1")).toDF("doc_id", "text"), "text", "doc_id", dir)
@@ -2836,6 +2846,7 @@ class PipelineSpec extends AnyFunSuite {
     val thr = Quality.perGroupThreshold(in, "g", "v", 0.25)
     withTempDir("graft_thr_") { dir =>
       Quality.saveThresholds(thr, dir)
+      SparkSpec.assertParamsMatchReference(dir)
       val back = Quality.loadThresholds(spark, dir)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(back == Map("a" -> 2L, "b" -> 10L))

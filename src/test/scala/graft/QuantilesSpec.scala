@@ -97,6 +97,7 @@ class QuantilesSpec extends AnyFunSuite {
       Quantiles.histogramByGroup(df.filter(col("id") % 2 =!= 0),
         "g", "v", lo, hi, bins), dir, lo, hi, bins, sliceId = "odd")
     assert(serve() == truth, "replayed slice changed the served quantile")
+    SparkSpec.assertParamsMatchReference(dir)
     // different geometry must refuse, not silently mis-merge
     val e = intercept[IllegalArgumentException] {
       Quantiles.appendHistogram(

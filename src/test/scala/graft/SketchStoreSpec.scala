@@ -16,8 +16,27 @@ class SketchStoreSpec extends AnyFunSuite {
   import SparkSpec.spark
   import spark.implicits._
 
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_compact_$tag").toString
+  private val dirs = scala.collection.mutable.ListBuffer.empty[String]
+
+  private def tmp(tag: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(s"graft_compact_$tag").toString
+    dirs += d
+    d
+  }
+
+  /** Every store a passing test leaves must read the same params on the
+    * driver as through Spark. */
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome = {
+    dirs.clear()
+    super.withFixture(test) match {
+      case org.scalatest.Succeeded =>
+        try {
+          dirs.foreach(SparkSpec.assertParamsMatchReference)
+          org.scalatest.Succeeded
+        } catch { case e: Throwable => org.scalatest.Failed(e) }
+      case other => other
+    }
+  }
 
   /** Raw (pre-merge) rows + part-file count of the LIVE data dir. */
   private def rawShape(path: String, sub: String): (Long, Int) = {
