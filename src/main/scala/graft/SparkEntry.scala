@@ -5920,8 +5920,9 @@ object SparkEntry {
          CAST(n_members AS BIGINT) AS n_members
        FROM m WHERE rn = 1"""
 
-  private def bestOfCluster(s: SparkSession, d: String,
-                            algorithm: String): DataFrame = {
+  private def bestOfCluster(s: SparkSession, d: String, algorithm: String,
+                            localBound: Int = graft.operators.LocalRowBound)
+      : DataFrame = {
     import graft.operators.Dedup
     val docs = t(s, d, "documents")
     val scored = docs.select(col("doc_id"),
@@ -5930,7 +5931,7 @@ object SparkEntry {
     val edges = Dedup.ngramJaccard(docs, "text", "doc_id",
       threshold = 0.5, shingleSize = 2, maxDf = 1000000L)
     Dedup.keepBestOfCluster(scored, "doc_id", "n_tokens", edges,
-      "a_id", "b_id", algorithm = algorithm)
+      "a_id", "b_id", algorithm = algorithm, localBound = localBound)
       .select("doc_id", "n_tokens", "component", "n_members")
   }
 
@@ -5943,9 +5944,11 @@ object SparkEntry {
   // UNKNOWN graph topology — label propagation's O(diameter) rounds lose
   // 5.5× already at diameter 200, while near-dup clusters (tiny diameter)
   // favor label's smaller per-round shuffle. Benched alongside d17 so the
-  // round-over-round numbers carry BOTH defaults.
+  // round-over-round numbers carry BOTH defaults. Bound 0: d17's graph
+  // is answered on the driver, so this gate keeps star contraction
+  // itself under the oracle.
   define("d18_best_of_cluster_star", bestOfClusterSql) { (s, d) =>
-    bestOfCluster(s, d, "star")
+    bestOfCluster(s, d, "star", localBound = 0)
   }
 
   // AS-OF join: each click attached to the user's most recent

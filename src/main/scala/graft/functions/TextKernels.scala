@@ -441,7 +441,7 @@ object TextKernels {
     * freshly fused l+r no longer EQUALS l, so overlaps merge
     * left-to-right ("aaa" under (a,a) → ["aa","a"]) — byte-identical to
     * [[graft.operators.Bpe.applyMerge]]'s Sep-join fold. */
-  private def mergeOnce(syms: Array[UTF8String], n: Int,
+  private[graft] def mergeOnce(syms: Array[UTF8String], n: Int,
                         l: UTF8String, r: UTF8String): Int = {
     var out = 0
     var i = 0

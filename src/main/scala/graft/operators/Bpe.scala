@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.store.Store
 
 /** Byte-pair-encoding tokenizer TRAINING as a Spark pass — the biggest
@@ -17,12 +18,22 @@ import graft.store.Store
   *    per partition). Everything after operates on the WORD VOCABULARY,
   *    which is Zipf-bounded (~10⁶–10⁷ rows at 100 TB, with counts), not
   *    corpus-sized.
-  *  - Each merge iteration is one slim pair-count aggregate over the
-  *    vocabulary (explode adjacent pairs, sum word counts — map-side
+  *  - A vocabulary of at most `localBound` words (default
+  *    [[LocalRowBound]], 2^20) is merged on the driver: ONE
+  *    `limit(bound + 1)` collect is both the size check and the fetch,
+  *    and every merge then runs locally with the Spark rounds' counts,
+  *    tie-break and leftmost-first merge, so the merge table is the same.
+  *    Driver bytes: ~510–530 B per collected 8-character word
+  *    (measured), so ~530–550 MB at the bound.
+  *  - Past the bound (or at `localBound = 0`) each merge iteration is
+  *    one slim pair-count aggregate over the vocabulary (explode
+  *    adjacent pairs, sum word counts — map-side
   *    combined) + a driver-side argmax of ONE row, then one in-row fold
   *    rewriting the symbol arrays. Bounded driver loop, the
   *    [[Dedup.connectedComponents]] discipline: numMerges iterations,
   *    each materialized via the cache scope so lineage never stacks.
+  *    The word count then runs twice: once for the probe, once under
+  *    the cache the rounds read.
   *  - Encoding never folds the corpus: the merge chain is applied to the
   *    DISTINCT vocabulary once, and a (word → token count) dictionary
   *    joins back — corpus text is scanned, split, and aggregated, never
@@ -43,9 +54,12 @@ object Bpe {
 
   private val Sep = "\u001f" // unit separator
 
-  /** (w, cnt) word counts — the ONE corpus-sized shuffle. */
+  /** (w, cnt) word counts — the ONE corpus-sized shuffle. Not
+    * [[spread]]: the map side is a tokenize feeding a map-side-combined
+    * aggregate, and a round-robin of the raw text would shuffle the
+    * corpus itself to parallelize it (and add a job to every train). */
   private def wordCounts(corpus: DataFrame, textCol: String): DataFrame =
-    spread(corpus.select(col(textCol).cast("string").as("__t")))
+    corpus.select(col(textCol).cast("string").as("__t"))
       .select(explode(split(trim(col("__t")), "\\s+")).as("w"))
       .filter(length(col("w")) > 0 && !col("w").contains(Sep))
       .groupBy("w").agg(count(lit(1)).as("cnt"))
@@ -84,14 +98,29 @@ object Bpe {
     * Returns the merge table (rank, left, right, pair_count) — rank is
     * application order; pair_count the summed corpus frequency the pair
     * had when chosen. Stops early if the vocabulary runs out of pairs
-    * (every word fully merged). */
-  def train(corpus: DataFrame, textCol: String, numMerges: Int)
+    * (every word fully merged). A vocabulary of at most `localBound`
+    * distinct words is merged on the driver ([[trainLocal]]); a larger
+    * one runs one Spark round per merge. `localBound = 0` forces the
+    * Spark rounds. */
+  def train(corpus: DataFrame, textCol: String, numMerges: Int,
+            localBound: Int = LocalRowBound)
            (implicit scope: CacheScope = CacheScope.global): DataFrame = {
     require(numMerges >= 1, "numMerges must be >= 1")
     val spark = corpus.sparkSession
     import spark.implicits._
-    var vocab = scope.cache(wordCounts(corpus, textCol)
-      .select(split(col("w"), "").as("syms"), col("cnt")))
+    val vocab = wordCounts(corpus, textCol)
+      .select(split(col("w"), "").as("syms"), col("cnt"))
+    val merges = collectAtMost(vocab, localBound) match {
+      case Some(rows) => trainLocal(rows, numMerges)
+      case None => trainRounds(scope.cache(vocab), numMerges)
+    }
+    merges.toDF("rank", "left", "right", "pair_count")
+  }
+
+  /** One Spark round per merge over the cached vocabulary. */
+  private def trainRounds(vocab0: DataFrame, numMerges: Int)
+                         (implicit scope: CacheScope): Seq[(Int, String, String, Long)] = {
+    var vocab = vocab0
     // The previous round's cache is unpersisted only after the CURRENT
     // round's argmax has materialized the current cache — so each round
     // runs ONE action (the argmax collect, which fills the cache as a
@@ -132,7 +161,71 @@ object Bpe {
       }
     }
     prev.foreach(_.unpersist())
-    merges.toSeq.toDF("rank", "left", "right", "pair_count")
+    merges.toSeq
+  }
+
+  /** The Spark loop of [[train]] run on the driver over the collected
+    * (syms, cnt) vocabulary (whose Rows it releases), merge for merge:
+    * pair counts are summed over every adjacent occurrence, the best pair
+    * is (max count, then left, then right) in `UTF8String` binary order —
+    * Spark's string order, which differs from `String.compareTo` for
+    * supplementary-plane characters — and each merge is applied
+    * leftmost-first by the same [[graft.functions.TextKernels.mergeOnce]]
+    * the Spark kernel runs. */
+  private def trainLocal(vocab: Array[Row],
+                         numMerges: Int): Seq[(Int, String, String, Long)] = {
+    // symbols are interned and each Row is dropped once read: the Rows
+    // are most of the driver bytes, the interned arrays a fraction
+    val intern = new java.util.HashMap[String, UTF8String]
+    val cnts = new Array[Long](vocab.length)
+    val syms = Array.tabulate(vocab.length) { w =>
+      cnts(w) = vocab(w).getLong(1)
+      val word = vocab(w).getSeq[String](0)
+        .map(intern.computeIfAbsent(_, UTF8String.fromString(_))).toArray
+      vocab(w) = null
+      word
+    }
+    val lens = syms.map(_.length)
+    val merges =
+      scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, Long)]
+    val pairs = new java.util.HashMap[(UTF8String, UTF8String), java.lang.Long]
+    var exhausted = false
+    while (merges.size < numMerges && !exhausted) {
+      pairs.clear()
+      var w = 0
+      while (w < syms.length) {
+        var i = 0
+        while (i < lens(w) - 1) {
+          val k = (syms(w)(i), syms(w)(i + 1))
+          val c = pairs.get(k)
+          pairs.put(k, if (c == null) cnts(w) else Math.addExact(c, cnts(w)))
+          i += 1
+        }
+        w += 1
+      }
+      var best: (UTF8String, UTF8String) = null
+      var bestC = 0L
+      pairs.forEach { (k, c) =>
+        val byPair = if (best == null) -1 else k._1.compareTo(best._1) match {
+          case 0 => k._2.compareTo(best._2)
+          case d => d
+        }
+        if (best == null || c > bestC || (c == bestC && byPair < 0)) {
+          best = k; bestC = c
+        }
+      }
+      if (best == null) exhausted = true
+      else {
+        val (l, r) = best
+        merges += ((merges.size + 1, l.toString, r.toString, bestC))
+        w = 0
+        while (w < syms.length) {
+          lens(w) = graft.functions.TextKernels.mergeOnce(syms(w), lens(w), l, r)
+          w += 1
+        }
+      }
+    }
+    merges.toSeq
   }
 
   private val Layout = "bpe_v1"

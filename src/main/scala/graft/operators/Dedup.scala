@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 import graft.store.Store
@@ -661,13 +662,27 @@ object Dedup {
     * (diameter ≫ 20) prefer the large-star/small-star contraction (Kiveris
     * et al.), which converges in O(log n) rounds; near-dup graphs don't
     * need it.
+    *
+    * Driver path: with integral ids and at most `localBound` edges
+    * (default [[LocalRowBound]], 2^20), ONE `limit(bound + 1)` collect of
+    * the cached oriented edges is both the size check and the fetch, and
+    * a union-find whose roots are the minimum ids gives the labels —
+    * propagation's fixpoint, which depends only on the edge set, so
+    * `algorithm` does not matter. Orphan endpoints are refused by one
+    * anti-join of those labels against `nodes`; the result is `nodes`
+    * left-joined to the broadcast labels, with `CcStats("local", 0, Nil)`.
+    * Driver bytes: ~100 B per collected edge (measured), so ~110 MB at
+    * the bound. String ids, null endpoints, more edges, or
+    * `localBound = 0` run the Spark fixpoints above, and `maxIter` bounds
+    * only them.
     */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           idCol: String, aCol: String, bCol: String,
-                          maxIter: Int = 20, algorithm: String = "label")
+                          maxIter: Int = 20, algorithm: String = "label",
+                          localBound: Int = LocalRowBound)
                          (implicit scope: CacheScope = CacheScope.global): DataFrame =
     connectedComponentsWithStats(nodes, edges, idCol, aCol, bCol,
-      maxIter, algorithm)._1
+      maxIter, algorithm, localBound)._1
 
   /** Convergence telemetry for one [[connectedComponents]] run: `rounds`
     * executed and the per-round progress metric (label changes for
@@ -675,7 +690,8 @@ object Dedup {
     * a 100 TB pipeline watches: label-prop's round count tracks graph
     * DIAMETER — flat-lining non-zero tails mean a deep chain crept into
     * the near-dup graph and the run should move to "star" (O(log n)
-    * rounds regardless of diameter, at ~2–3× the per-round cost). */
+    * rounds regardless of diameter, at ~2–3× the per-round cost). A run
+    * answered on the driver reports `CcStats("local", 0, Nil)`. */
   case class CcStats(algorithm: String, rounds: Int,
                      changedPerRound: Seq[Long])
 
@@ -683,8 +699,11 @@ object Dedup {
   def connectedComponentsWithStats(nodes: DataFrame, edges: DataFrame,
                                    idCol: String, aCol: String, bCol: String,
                                    maxIter: Int = 20,
-                                   algorithm: String = "label")
+                                   algorithm: String = "label",
+                                   localBound: Int = LocalRowBound)
                                   (implicit scope: CacheScope = CacheScope.global): (DataFrame, CcStats) = {
+    require(algorithm == "label" || algorithm == "star",
+      s"unknown algorithm '$algorithm' (want 'label' or 'star')")
     // The symmetrizing self-union references `edges` twice, and Spark
     // gives a self-union no subplan reuse — when the edge list comes out
     // of an expensive detector (ngramJaccard's posting self-join), the
@@ -692,6 +711,71 @@ object Dedup {
     // oriented pairs first: the union's two branches read the cached rows.
     val oriented = scope.cache(
       edges.select(col(aCol).as("src"), col(bCol).as("dst")))
+    val nodeIds = nodes.select(col(idCol).as("id"))
+    val integral = Seq(nodeIds, oriented).flatMap(_.schema.fields)
+      .forall(f => Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType))
+    val local =
+      if (!integral) None
+      else collectAtMost(oriented, localBound)
+        .filter(_.forall(r => !r.isNullAt(0) && !r.isNullAt(1)))
+    local match {
+      case Some(pairs) =>
+        (localComponents(nodeIds, pairs, idCol), CcStats("local", 0, Nil))
+      case None =>
+        val (labels, changed) =
+          distributedComponents(nodeIds, oriented, idCol, maxIter, algorithm)
+        (labels, CcStats(algorithm, changed.size, changed))
+    }
+  }
+
+  /** An edge endpoint missing from `nodes` would be SILENTLY ignored by
+    * the propagation joins, under-merging components — both paths refuse
+    * it up front with this check (`ids`: the distinct edge endpoints). */
+  private def requireEndpointsInNodes(ids: DataFrame, nodeIds: DataFrame): Unit = {
+    val orphans = ids.join(nodeIds, Seq("id"), "left_anti").count()
+    require(orphans == 0,
+      s"connectedComponents: $orphans edge endpoint(s) missing from nodes — " +
+        "pass a node frame covering every pair endpoint")
+  }
+
+  /** Union-find over collected integral edges, every root the minimum id
+    * of its component — the label-propagation fixpoint, which depends
+    * only on the edge set. Nodes on no edge keep their own id. */
+  private def localComponents(nodeIds: DataFrame, pairs: Array[Row],
+                              idCol: String): DataFrame = {
+    val spark = nodeIds.sparkSession
+    import spark.implicits._
+    def endpoint(r: Row, i: Int): Long = r.getAs[Number](i).longValue
+    // distinct endpoints in ascending order: a smaller index IS a smaller id
+    val ids = pairs.flatMap(r => Array(endpoint(r, 0), endpoint(r, 1))).distinct
+    java.util.Arrays.sort(ids)
+    def index(v: Long): Int = java.util.Arrays.binarySearch(ids, v)
+    val parent = Array.range(0, ids.length)
+    def find(v: Int): Int = {
+      var x = v
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    pairs.foreach { r =>
+      val a = find(index(endpoint(r, 0)))
+      val b = find(index(endpoint(r, 1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    val labels = ids.indices.map(i => (ids(i), ids(find(i))))
+      .toDF("id", "label")
+    requireEndpointsInNodes(labels.select("id"), nodeIds)
+    val idType = nodeIds.schema.head.dataType
+    nodeIds.join(broadcast(labels), Seq("id"), "left")
+      .select(col("id").as(idCol),
+        coalesce(col("label").cast(idType), col("id")).as("component"))
+  }
+
+  /** The Spark fixpoints: symmetrize the cached oriented edges, check
+    * the endpoints, then label propagation or star contraction. */
+  private def distributedComponents(nodeIds: DataFrame, oriented: DataFrame,
+                                    idCol: String, maxIter: Int,
+                                    algorithm: String)
+                                   (implicit scope: CacheScope): (DataFrame, Seq[Long]) = {
     // hash-partitioned by dst at cache time: the label-propagation
     // neighbor join is keyed on dst every round, so pre-partitioning the
     // cached edges pays ONE exchange instead of one per round (§2.4
@@ -701,22 +785,10 @@ object Dedup {
       oriented
         .unionByName(oriented.select(col("dst").as("src"), col("src").as("dst")))
         .repartition(col("dst")))
-    val nodeIds = nodes.select(col(idCol).as("id"))
-    // an edge endpoint missing from `nodes` would be SILENTLY ignored by the
-    // propagation joins, under-merging components — validate up front (one
-    // anti-join over the cached edge list; `nodes` may be a superset)
-    val orphans = sym.select(col("src").as("id")).distinct()
-      .join(nodeIds, Seq("id"), "left_anti").count()
-    require(orphans == 0,
-      s"connectedComponents: $orphans edge endpoint(s) missing from nodes — " +
-        "pass a node frame covering every pair endpoint")
-    val (labels, changed) = algorithm match {
-      case "label" => labelPropagation(nodeIds, sym, idCol, maxIter)
-      case "star"  => starContraction(nodeIds, sym, idCol, maxIter)
-      case other => throw new IllegalArgumentException(
-        s"unknown algorithm '$other' (want 'label' or 'star')")
-    }
-    (labels, CcStats(algorithm, changed.size, changed))
+    // one anti-join over the cached edge list; `nodes` may be a superset
+    requireEndpointsInNodes(sym.select(col("src").as("id")).distinct(), nodeIds)
+    if (algorithm == "label") labelPropagation(nodeIds, sym, idCol, maxIter)
+    else starContraction(nodeIds, sym, idCol, maxIter)
   }
 
   /** Quality-aware cluster collapse: keep the BEST member of each near-dup
@@ -736,10 +808,11 @@ object Dedup {
     * no per-cluster sort; the join back to `docs` hashes on the id. */
   def keepBestOfCluster(docs: DataFrame, idCol: String, scoreCol: String,
                         edges: DataFrame, aCol: String, bCol: String,
-                        maxIter: Int = 20, algorithm: String = "label")
+                        maxIter: Int = 20, algorithm: String = "label",
+                        localBound: Int = LocalRowBound)
                        (implicit scope: CacheScope = CacheScope.global): DataFrame = {
     val comp = connectedComponents(docs.select(col(idCol)), edges,
-      idCol, aCol, bCol, maxIter, algorithm)
+      idCol, aCol, bCol, maxIter, algorithm, localBound)
     val best = docs.select(col(idCol), col(scoreCol))
       .join(comp, Seq(idCol))
       .groupBy("component")

@@ -32,10 +32,17 @@ import graft.store.Store
   * every subsequent range filter is anchored on points that exist in
   * the data — no value can leak across a boundary between passes.
   *
-  * Scale shape: each pass is one scan + one hash agg whose wire is
-  * ≤ partitions · states · bins summary rows (map-side combined —
-  * CONSTANT in the data); the driver folds ≤ states · bins rows per
-  * pass. Nothing row-sized is ever collected. Termination: the interval
+  * Scale shape: a (group, value, weight) projection of at most
+  * `localBound` rows (default [[LocalRowBound]], 2^20) is fetched by ONE
+  * `limit(bound + 1)` collect — the size check and the fetch in one job —
+  * and answered on the driver by a sorted cumulative-weight walk, which
+  * lands on the same rank-ceil(q·n) value the passes converge to. Driver
+  * bytes: ~135 B per collected row (measured), so ~140 MB at the bound.
+  * Past the bound (or at `localBound = 0`) the refinement passes run,
+  * and `maxPasses` bounds only them: each pass is one scan + one hash agg
+  * whose wire is ≤ partitions · states · bins summary rows (map-side
+  * combined — CONSTANT in the data); the driver folds ≤ states · bins
+  * rows per pass, and nothing row-sized is collected. Termination: the interval
   * snaps to a bucket's [min, max], so it shrinks strictly unless all
   * remaining values are equal (caught by min == max and answered), and
   * a two-way `x <= lo` split guards the subnormal case where the bucket
@@ -88,13 +95,14 @@ object Quantiles {
     * row per requested quantile, `value` in the column's double image —
     * exact for integer columns up to 2^53. */
   def exactQuantiles(df: DataFrame, valueCol: String, qs: Seq[Double],
-                     bins: Int = 256, maxPasses: Int = 64)
+                     bins: Int = 256, maxPasses: Int = 64,
+                     localBound: Int = LocalRowBound)
                     (implicit scope: CacheScope = CacheScope.global): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     exactQuantilesByGroupValues(
       df.select(lit("_").as("__g"), col(valueCol)), "__g", valueCol, qs,
-      bins, maxPasses)
+      bins, maxPasses, localBound)
       .map { case (_, q, v) => (q, v) }.toDF("q", "value")
   }
 
@@ -111,7 +119,7 @@ object Quantiles {
     val spark = df.sparkSession
     import spark.implicits._
     exactQuantilesByGroupValues(df, groupCol, valueCol, Seq(q), bins,
-      maxPasses)
+      maxPasses, LocalRowBound)
       .map { case (g, _, v) => (g, v) }.toDF("group", "value")
   }
 
@@ -120,12 +128,13 @@ object Quantiles {
     * (group, q, value). */
   def exactQuantilesByGroupMulti(df: DataFrame, groupCol: String,
                                  valueCol: String, qs: Seq[Double],
-                                 bins: Int = 256, maxPasses: Int = 64)
+                                 bins: Int = 256, maxPasses: Int = 64,
+                                 localBound: Int = LocalRowBound)
                                 (implicit scope: CacheScope = CacheScope.global): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     exactQuantilesByGroupValues(df, groupCol, valueCol, qs, bins,
-      maxPasses).toDF("group", "q", "value")
+      maxPasses, localBound).toDF("group", "q", "value")
   }
 
   /** Exact per-group WEIGHTED quantile: the smallest value whose
@@ -142,7 +151,8 @@ object Quantiles {
   def exactWeightedQuantilesByGroup(df: DataFrame, groupCol: String,
                                     valueCol: String, weightCol: String,
                                     q: Double, bins: Int = 256,
-                                    maxPasses: Int = 64)
+                                    maxPasses: Int = 64,
+                                    localBound: Int = LocalRowBound)
                                    (implicit scope: CacheScope = CacheScope.global): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
@@ -151,7 +161,7 @@ object Quantiles {
           col(valueCol).cast("double").as("x"),
           integralWeight(col(weightCol)).as("wt"))
         .filter(finite(col("x")) && col("wt") > 0),
-      Seq(q), bins, maxPasses)
+      Seq(q), bins, maxPasses, localBound)
       .map { case (g, _, v) => (g, v) }.toDF("group", "value")
   }
 
@@ -159,43 +169,71 @@ object Quantiles {
     * by the global and grouped fronts, refinement in [[refine]]. */
   private def exactQuantilesByGroupValues(
       df: DataFrame, groupCol: String, valueCol: String, qs: Seq[Double],
-      bins: Int, maxPasses: Int)
+      bins: Int, maxPasses: Int, localBound: Int)
       (implicit scope: CacheScope): Seq[(String, Double, Double)] =
     refineFromProjection(
       df.select(col(groupCol).cast("string").as("g"),
           col(valueCol).cast("double").as("x"), lit(1L).as("wt"))
         .filter(finite(col("x"))),
-      qs, bins, maxPasses)
+      qs, bins, maxPasses, localBound)
 
   /** The (g, x, wt) core: rank space is cumulative WEIGHT (count = all
-    * weights 1). */
+    * weights 1). A projection of at most `localBound` rows is answered on
+    * the driver ([[localQuantiles]]); a larger one runs the refinement
+    * passes. */
   private def refineFromProjection(
-      proj: DataFrame, qs: Seq[Double], bins: Int, maxPasses: Int)
+      proj: DataFrame, qs: Seq[Double], bins: Int, maxPasses: Int,
+      localBound: Int)
       (implicit scope: CacheScope): Seq[(String, Double, Double)] = {
     require(bins >= 2, s"bins must be at least 2, got $bins")
     require(qs.nonEmpty && qs.forall(q => q > 0.0 && q <= 1.0),
       s"quantiles must lie in (0, 1], got $qs")
+    collectAtMost(proj, localBound) match {
+      case Some(rows) => localQuantiles(rows, qs)
+      case None => refineDistributed(proj, qs, bins, maxPasses)
+    }
+  }
 
+  /** `percentile_disc` per (group, q) over collected (g, x, wt) rows: sort
+    * each group by value and walk the cumulative weight to the first
+    * value reaching rank ceil(q · Σwt) — the value every refinement pass
+    * converges to. */
+  private def localQuantiles(rows: Array[Row],
+                             qs: Seq[Double]): Seq[(String, Double, Double)] =
+    rows.groupBy(_.getString(0)).toSeq.flatMap { case (g, rs) =>
+      val byX = rs.map(r => (r.getDouble(1), r.getLong(2)))
+        .sortBy(_._1)(Ordering.Double.TotalOrdering)
+      val n = byX.iterator.map(_._2).sum
+      qs.map { q =>
+        val r = math.ceil(q * n).toLong max 1L
+        var cum = 0L
+        (g, q, byX.find { case (_, wt) => cum += wt; cum >= r }.get._1)
+      }
+    }
+
+  /** The refinement passes over the projection. */
+  private def refineDistributed(
+      proj: DataFrame, qs: Seq[Double], bins: Int, maxPasses: Int)
+      (implicit scope: CacheScope): Seq[(String, Double, Double)] = {
     // Multiple bounded passes scan this projection — cache it (pure
     // optimization; the scope owner releases after the terminal action).
     val data = scope.cache(proj)
 
     // Pass 0: per-group extent. |groups| rows to the driver — the same
     // bounded-driver contract as every sketch serve. The ceiling is
-    // checked BEFORE the collect (distributed count of the agg output —
-    // a post-collect require cannot prevent the OOM it refuses).
-    val grouped = data.groupBy("g")
-      .agg(sum("wt").as("n"), min("x").as("mn"), max("x").as("mx"))
-    val nGroups = grouped.count()
-    require(nGroups * qs.size * bins <= (1L << 22),
-      s"$nGroups groups x ${qs.size} quantiles x $bins bins " +
+    // checked by the fetch itself (a post-collect require cannot prevent
+    // the OOM it refuses; one row past the ceiling is all that moves).
+    val groupCap = (1 << 22) / (qs.size * bins)
+    val extent = collectAtMost(data.groupBy("g")
+      .agg(sum("wt").as("n"), min("x").as("mn"), max("x").as("mx")), groupCap)
+    require(extent.isDefined,
+      s"more than $groupCap groups x ${qs.size} quantiles x $bins bins " +
         "exceeds the bounded-driver pass ceiling (2^22 summary rows) — " +
         "batch the groups across calls or lower bins")
-    val extent = grouped.collect()
 
     val states = scala.collection.mutable.ArrayBuffer.empty[St]
     val done = scala.collection.mutable.ArrayBuffer.empty[St]
-    for (row <- extent; q <- qs) {
+    for (row <- extent.get; q <- qs) {
       val n = row.getAs[Long]("n")
       val mn = row.getAs[Double]("mn")
       val mx = row.getAs[Double]("mx")
@@ -285,19 +323,20 @@ object Quantiles {
   }
 
   /** Load a histogram store and fold it per group on the driver, with
-    * the bounded-driver ceiling enforced BEFORE anything collects (a
-    * post-collect require cannot prevent the OOM it exists to refuse —
-    * `count()` on the merged frame is a distributed metadata-sized
-    * job). Shared by both store serves. */
+    * the bounded-driver ceiling enforced by the fetch itself: one
+    * `limit(2^22 + 1)` collect moves at most one row past the ceiling
+    * and refuses, so the OOM the ceiling exists to prevent cannot
+    * happen and no separate count job runs. Shared by both store
+    * serves. */
   private def loadMergedByGroup(spark: SparkSession, path: String)
       : (Map[String, Seq[Row]], Int) = {
     val (hist, _, _, storeBins) = loadHistogram(spark, path)
-    val nRows = hist.count()
-    require(nRows <= (1L << 22),
-      s"merged histogram at $path holds $nRows (group, bucket) rows — " +
-        "past the bounded-driver ceiling (2^22); batch the groups " +
-        "across calls")
-    (hist.collect().toSeq.groupBy(_.getAs[String]("group"))
+    val rows = collectAtMost(hist, 1 << 22)
+    require(rows.isDefined,
+      s"merged histogram at $path holds more than ${1 << 22} (group, " +
+        "bucket) rows — past the bounded-driver ceiling (2^22); batch the " +
+        "groups across calls")
+    (rows.get.toSeq.groupBy(_.getAs[String]("group"))
       .map { case (g, rs) => g -> rs.sortBy(_.getAs[Int]("bucket")) },
       storeBins)
   }
@@ -315,14 +354,14 @@ object Quantiles {
     val spark = df.sparkSession
     import spark.implicits._
     val med = exactQuantilesByGroupValues(df, groupCol, valueCol,
-      Seq(0.5), bins, maxPasses).map { case (g, _, v) => (g, v) }
+      Seq(0.5), bins, maxPasses, LocalRowBound).map { case (g, _, v) => (g, v) }
     val medDf = med.toDF("__mg", "__med")
     val dev = df.select(col(groupCol).cast("string").as("__g"),
         col(valueCol).cast("double").as("__x"))
       .join(broadcast(medDf), col("__g") === col("__mg"))
       .select(col("__g").as("g"), abs(col("__x") - col("__med")).as("d"))
     val mad = exactQuantilesByGroupValues(dev, "g", "d", Seq(0.5), bins,
-      maxPasses).map { case (g, _, v) => (g, v) }.toMap
+      maxPasses, LocalRowBound).map { case (g, _, v) => (g, v) }.toMap
     med.map { case (g, m) => (g, m, mad(g)) }
       .toDF("group", "med", "mad")
   }

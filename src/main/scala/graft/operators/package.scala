@@ -1,9 +1,25 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 package object operators {
+  /** Default row bound under which the iterative operators (BPE training,
+    * connected components, exact quantiles) run their fixpoint on the
+    * driver instead of one Spark job per round. */
+  val LocalRowBound: Int = 1 << 20
+
+  /** The rows of `df` when it holds at most `bound` of them, else None.
+    * The check and the fetch are ONE action, `limit(bound + 1).collect()`,
+    * so a bounded driver-side path pays no separate count. `bound <= 0`
+    * answers None without running anything. */
+  private[graft] def collectAtMost(df: DataFrame,
+                                   bound: Int): Option[Array[Row]] = {
+    require(bound < Int.MaxValue, s"row bound $bound leaves no room for the overflow row")
+    if (bound <= 0) None
+    else Some(df.limit(bound + 1).collect()).filter(_.length <= bound)
+  }
+
   /** Equal-element run folding IN-ROW (the guide's "aggregate before you
     * shuffle" taken to its limit for per-row keyed counts — term
     * frequency, per-doc bigram counts — where a `groupBy(id, item)` would

@@ -522,7 +522,7 @@ object CurationSoak {
         try time(s"cc_${tag}_${algo}_$n") {
           val (labels, stats) = Dedup.connectedComponentsWithStats(
             nodes, edges, "id", "a", "b", maxIter = maxIter,
-            algorithm = algo)
+            algorithm = algo, localBound = 0) // the Spark fixpoints
           val comps = labels.select("component").distinct().count()
           println(s"[soak]   $tag/$algo: rounds=${stats.rounds} " +
             s"changedPerRound=${stats.changedPerRound.mkString(",")} " +

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
-import graft.operators.{Dedup, Multimodal, Similarity}
+import graft.operators.{Dedup, LocalRowBound, Multimodal, Similarity}
 import graft.store.Store
 
 /** Property tests for the training-data-pipeline operators: soundness of the
@@ -1966,10 +1966,11 @@ class PipelineSpec extends AnyFunSuite {
     val nodes = (0L until n.toLong).toDF("id")
     val edges = Seq.fill(200)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       .filter(p => p._1 != p._2).toDF("a", "b")
+    // localBound = 0: the Spark fixpoints, not the driver's union-find
     val viaLabel = Dedup.connectedComponents(nodes, edges, "id", "a", "b",
-      maxIter = 50)
+      maxIter = 50, localBound = 0)
     val viaStar = Dedup.connectedComponents(nodes, edges, "id", "a", "b",
-      maxIter = 50, algorithm = "star")
+      maxIter = 50, algorithm = "star", localBound = 0)
     assert(viaStar.exceptAll(viaLabel).count() == 0 &&
       viaLabel.exceptAll(viaStar).count() == 0)
     // 60-node chain, diameter 59: label propagation needs ~59 rounds and
@@ -1977,11 +1978,68 @@ class PipelineSpec extends AnyFunSuite {
     val chainN = (1L to 60L).toDF("id")
     val chainE = (1L until 60L).map(i => (i, i + 1)).toDF("a", "b")
     intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(chainN, chainE, "id", "a", "b", maxIter = 10)
+      Dedup.connectedComponents(chainN, chainE, "id", "a", "b", maxIter = 10,
+        localBound = 0)
     }
     val star = Dedup.connectedComponents(chainN, chainE, "id", "a", "b",
-      maxIter = 10, algorithm = "star")
+      maxIter = 10, algorithm = "star", localBound = 0)
     assert(star.filter(col("component") === 1L).count() == 60)
+    // on the driver maxIter bounds nothing: the chain is one component
+    val local = Dedup.connectedComponents(chainN, chainE, "id", "a", "b",
+      maxIter = 10)
+    assert(local.filter(col("component") === 1L).count() == 60)
+  }
+
+  test("connected components on the driver equal the Spark fixpoints: negative, Long.MinValue and String ids; fallback over the bound") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(9)
+    val ids = Seq(Long.MinValue, Long.MinValue + 1, -7L, -1L, 0L, 3L,
+      Long.MaxValue) ++ Seq.fill(40)(rnd.nextInt(200).toLong - 100)
+    val edges = Seq.fill(50)((ids(rnd.nextInt(ids.size)),
+      ids(rnd.nextInt(ids.size)))).toDF("a", "b")
+    val nodes = (ids :+ 1000L).distinct.toDF("id")
+    def cc(n: org.apache.spark.sql.DataFrame, e: org.apache.spark.sql.DataFrame,
+           bound: Int, algorithm: String = "label") = {
+      val (df, stats) = Dedup.connectedComponentsWithStats(n, e, "id", "a",
+        "b", algorithm = algorithm, localBound = bound)
+      (df.collect().map(r => r.get(0) -> r.get(1)).toMap,
+        df.schema.map(f => f.name -> f.dataType), stats)
+    }
+    val (local, localSchema, localStats) = cc(nodes, edges, LocalRowBound)
+    assert(localStats == Dedup.CcStats("local", 0, Nil))
+    for (algorithm <- Seq("label", "star")) {
+      val (dist, distSchema, stats) = cc(nodes, edges, 0, algorithm)
+      assert(stats.algorithm == algorithm && dist == local &&
+        distSchema == localSchema, (algorithm, distSchema, localSchema))
+    }
+    assert(local(1000L) == 1000L && local(Long.MinValue) == Long.MinValue)
+    // Int ids keep their type on the driver path
+    val (intLocal, intSchema, _) = cc(Seq(5, -3, 9, 11).toDF("id"),
+      Seq((9, -3), (5, 9)).toDF("a", "b"), LocalRowBound)
+    assert(intLocal == Map(5 -> -3, -3 -> -3, 9 -> -3, 11 -> 11) &&
+      intSchema == cc(Seq(5, -3, 9, 11).toDF("id"),
+        Seq((9, -3), (5, 9)).toDF("a", "b"), 0)._2, intSchema)
+    // String ids take the Spark rounds and agree with them
+    val (strOut, _, strStats) = cc(Seq("b", "a", "c", "d").toDF("id"),
+      Seq(("b", "c"), ("c", "a")).toDF("a", "b"), LocalRowBound)
+    assert(strStats.algorithm == "label" &&
+      strOut == Map("a" -> "a", "b" -> "a", "c" -> "a", "d" -> "d"))
+    // 4 edges: bound 3 falls back to label propagation, bound 4 does not
+    val four = Seq((1L, 2L), (2L, 3L), (5L, 6L), (6L, 3L)).toDF("a", "b")
+    val six = (1L to 7L).toDF("id")
+    assert(cc(six, four, 3)._3.algorithm == "label" &&
+      cc(six, four, 4)._3.algorithm == "local" &&
+      cc(six, four, 3)._1 == cc(six, four, 4)._1)
+    // both paths refuse orphan endpoints with the same message, and null
+    // endpoints take the Spark path's refusal
+    val orphan = Seq((1L, 99L)).toDF("a", "b")
+    val msgs = Seq(LocalRowBound, 0).map { b =>
+      intercept[IllegalArgumentException](cc(six, orphan, b)).getMessage }
+    assert(msgs.distinct.size == 1 && msgs.head.contains("1 edge endpoint"),
+      msgs)
+    val withNull = Seq((Some(1L), Option.empty[Long])).toDF("a", "b")
+    intercept[IllegalArgumentException](cc(six, withNull, LocalRowBound))
+    graft.operators.CacheScope.global.release()
   }
 
   test("tfidf top terms: k per doc, corpus-wide terms score zero, maxDf prunes them") {
@@ -2021,7 +2079,8 @@ class PipelineSpec extends AnyFunSuite {
     val longChain = (1L to 12L).toDF("id")
     val chainEdges = (1L until 12L).map(i => (i, i + 1)).toDF("a", "b")
     intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(longChain, chainEdges, "id", "a", "b", maxIter = 2)
+      Dedup.connectedComponents(longChain, chainEdges, "id", "a", "b",
+        maxIter = 2, localBound = 0)
     }
     // and the same graph converges with an adequate bound
     val ok = Dedup.connectedComponents(longChain, chainEdges, "id", "a", "b")

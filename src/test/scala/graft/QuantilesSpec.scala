@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.operators.Quantiles
+import graft.operators.{LocalRowBound, Quantiles}
 
 /** Exact-quantile refinement: answers must equal the sort-based
   * percentile_disc truth EXACTLY (no epsilon — the operator's whole
@@ -36,17 +36,22 @@ class QuantilesSpec extends AnyFunSuite {
   }
 
   test("adjacent-double and subnormal-width intervals still converge exactly") {
-    // hi − lo = one ulp: bucket width is normal but tiny
-    val a = Seq.fill(10)(1.0) ++ Seq.fill(10)(math.nextUp(1.0))
-    val gotA = Quantiles.exactQuantiles(a.toDF("v"), "v", Seq(0.5, 0.9),
-      bins = 4).collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-    assert(gotA(0.5) == disc(a, 0.5) && gotA(0.9) == disc(a, 0.9))
-    // hi − lo subnormal enough that width/bins underflows to 0: the
-    // two-way x <= lo split must take over and still give the exact rank
-    val b = Seq.fill(7)(0.0) ++ Seq.fill(3)(java.lang.Double.MIN_VALUE)
-    val gotB = Quantiles.exactQuantiles(b.toDF("v"), "v", Seq(0.5, 0.8),
-      bins = 256).collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
-    assert(gotB(0.5) == disc(b, 0.5) && gotB(0.8) == disc(b, 0.8))
+    // bound 0 runs the refinement passes this test is about
+    for (bound <- Seq(0, LocalRowBound)) {
+      // hi − lo = one ulp: bucket width is normal but tiny
+      val a = Seq.fill(10)(1.0) ++ Seq.fill(10)(math.nextUp(1.0))
+      val gotA = Quantiles.exactQuantiles(a.toDF("v"), "v", Seq(0.5, 0.9),
+        bins = 4, localBound = bound)
+        .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+      assert(gotA(0.5) == disc(a, 0.5) && gotA(0.9) == disc(a, 0.9))
+      // hi − lo subnormal enough that width/bins underflows to 0: the
+      // two-way x <= lo split must take over and still give the exact rank
+      val b = Seq.fill(7)(0.0) ++ Seq.fill(3)(java.lang.Double.MIN_VALUE)
+      val gotB = Quantiles.exactQuantiles(b.toDF("v"), "v", Seq(0.5, 0.8),
+        bins = 256, localBound = bound)
+        .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+      assert(gotB(0.5) == disc(b, 0.5) && gotB(0.8) == disc(b, 0.8))
+    }
     graft.operators.CacheScope.global.release()
   }
 
@@ -259,13 +264,66 @@ class QuantilesSpec extends AnyFunSuite {
       Quantiles.exactQuantiles(Seq(1.0).toDF("v"), "v", Seq(1.1))
     }
     // two tight clusters a huge gulf apart: early passes collapse one
-    // side into single buckets — must still land exactly
+    // side into single buckets — must still land exactly (bound 0: the
+    // refinement passes)
     val vals = (0 until 100).map(i => 1e-9 + i * 1e-18) ++
       (0 until 100).map(i => 1e9 + i)
-    val got = Quantiles.exactQuantiles(vals.toDF("v"), "v", Seq(0.5),
-        bins = 4)
-      .collect().head.getDouble(1)
-    assert(got == disc(vals, 0.5))
+    for (bound <- Seq(0, LocalRowBound)) {
+      val got = Quantiles.exactQuantiles(vals.toDF("v"), "v", Seq(0.5),
+          bins = 4, localBound = bound)
+        .collect().head.getDouble(1)
+      assert(got == disc(vals, 0.5))
+    }
+    graft.operators.CacheScope.global.release()
+  }
+
+  test("driver-local quantiles equal the refinement passes: ties, signed zeros, weights, fallback over the bound") {
+    val rnd = new scala.util.Random(5)
+    val rows = (0 until 400).map { i =>
+      val v = i % 7 match {
+        case 0 => -0.0
+        case 1 => 0.0
+        case 2 => rnd.nextInt(5).toDouble // heavy ties
+        case _ => rnd.nextGaussian() * 100
+      }
+      (s"g${i % 3}", v, (i % 4).toDouble) // weight 0 rows are excluded
+    }
+    val df = rows.toDF("g", "v", "w")
+    val qs = Seq(0.01, 0.25, 0.5, 0.75, 1.0)
+    def multi(bound: Int) =
+      Quantiles.exactQuantilesByGroupMulti(df, "g", "v", qs, bins = 8,
+          localBound = bound)
+        .collect().map(r => (r.getString(0), r.getDouble(1)) -> r.getDouble(2))
+        .toMap
+    def weighted(bound: Int) =
+      Quantiles.exactWeightedQuantilesByGroup(df, "g", "v", "w", 0.5,
+          bins = 8, localBound = bound)
+        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    val truth = rows.groupBy(_._1).flatMap { case (g, rs) =>
+      qs.map(q => (g, q) -> disc(rs.map(_._2), q)) }
+    assert(multi(LocalRowBound) == truth && multi(0) == truth)
+    assert(weighted(LocalRowBound) == weighted(0))
+    // 4 rows: bound 3 falls back to the passes (more jobs), bound 4
+    // answers on the driver in at most 2 jobs
+    val four = Seq(3.0, -0.0, 0.0, 3.0).toDF("v")
+    def global(bound: Int) = SparkSpec.jobsStartedBy(
+      Quantiles.exactQuantiles(four, "v", Seq(0.25, 0.5, 1.0), bins = 4,
+        localBound = bound).collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap)
+    val (atBound, localJobs) = global(4)
+    val (overBound, passJobs) = global(3)
+    assert(atBound == overBound &&
+      atBound == Map(0.25 -> 0.0, 0.5 -> 0.0, 1.0 -> 3.0), atBound)
+    assert(localJobs <= 2 && passJobs > localJobs, (localJobs, passJobs))
+    // a fractional weight still refuses loudly on the driver path
+    val e = intercept[Exception] {
+      Quantiles.exactWeightedQuantilesByGroup(
+        Seq(("g0", 1.0, 2.0), ("g0", 2.0, 0.5)).toDF("g", "v", "w"),
+        "g", "v", "w", 0.5).collect()
+    }
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => x.getMessage +: msgs(x.getCause))
+    assert(msgs(e).exists(m => m != null && m.contains("non-integer weight")),
+      s"unexpected error: ${e.getMessage}")
     graft.operators.CacheScope.global.release()
   }
 }

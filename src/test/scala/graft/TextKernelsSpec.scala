@@ -268,6 +268,34 @@ class TextKernelsSpec extends AnyFunSuite {
     }
   }
 
+  test("Bpe.train on the driver equals the Spark rounds: UTF-8 tie-break, overlaps, fallback over the bound") {
+    import graft.operators.Bpe
+    def merges(docs: org.apache.spark.sql.DataFrame, n: Int, bound: Int) =
+      Bpe.train(docs, "text", n, localBound = bound).collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
+        .sortBy(_._1).toSeq
+    // (ﬀ, ﬀ) and (𝟘, 𝟘) tie on count 2: UTF-8 binary order puts U+FB00
+    // (EF AC 80) first, UTF-16 order the surrogate pair (D835 …) first
+    val ff = "\uFB00"
+    val zero = new String(Character.toChars(0x1D7D8))
+    val docs = Seq((1L, s"$ff$ff $zero$zero $ff$ff aaaa ab"),
+      (2L, s"$zero$zero aaab abab ba"), (3L, "aaaa")).toDF("doc_id", "text")
+    val local = merges(docs, 8, graft.operators.LocalRowBound)
+    assert(local == merges(docs, 8, 0))
+    assert(local.head == ((1, "a", "a", 8L)), local)
+    val rankOf = local.map(m => (m._2, m._3) -> m).toMap
+    assert(rankOf((ff, ff))._4 == rankOf((zero, zero))._4 &&
+      rankOf((ff, ff))._1 < rankOf((zero, zero))._1, local)
+    // 4 distinct words: bound 3 must fall back to the Spark rounds (more
+    // jobs), bound 4 answers on the driver; both equal the forced rounds
+    val four = Seq((1L, "abc bcd abcd"), (2L, "cab")).toDF("doc_id", "text")
+    val (atBound, localJobs) = SparkSpec.jobsStartedBy(merges(four, 4, 4))
+    val (overBound, roundJobs) = SparkSpec.jobsStartedBy(merges(four, 4, 3))
+    assert(atBound == merges(four, 4, 0) && overBound == atBound)
+    assert(localJobs <= 2 && roundJobs > localJobs, (localJobs, roundJobs))
+    graft.operators.CacheScope.global.release()
+  }
+
   test("gramArray equals slidingJoin's zip_with chain, null propagation included") {
     val df = adversarialDocs.toDF("text")
       .withColumn("__w", TF.tokens(col("text")))
