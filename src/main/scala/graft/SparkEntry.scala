@@ -1087,7 +1087,9 @@ object SparkEntry {
 
   // Staged full-corpus dedup: exact collapse → MinHash+LSH on
   // representatives → greedy keep. 7.7× faster than sketching the raw
-  // corpus on a 10×-duplicated soak (see NOTES.md).
+  // corpus on a 10×-duplicated soak (see NOTES.md). Bound 0: d2 answers
+  // minHashLsh on the driver, so this gate keeps its Spark plan (band
+  // self-join, verify join) under the oracle.
   define("d7_dedup_corpus",
     """WITH fp AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text),
          '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g')) AS norm FROM documents),
@@ -1108,7 +1110,7 @@ object SparkEntry {
          (m.id = m.rep AND dropped.rep IS NULL) AS keep
        FROM m LEFT JOIN dropped ON m.rep = dropped.rep""") { (s, d) =>
     graft.operators.Dedup.dedupCorpus(t(s, d, "documents"), "text", "doc_id",
-      threshold = 0.5)
+      threshold = 0.5, localBound = 0)
   }
 
   // ==================================================================
@@ -5929,7 +5931,8 @@ object SparkEntry {
       graft.functions.TextFunctions.tokenCount(col("text")).cast("long")
         .as("n_tokens"))
     val edges = Dedup.ngramJaccard(docs, "text", "doc_id",
-      threshold = 0.5, shingleSize = 2, maxDf = 1000000L)
+      threshold = 0.5, shingleSize = 2, maxDf = 1000000L,
+      localBound = localBound)
     Dedup.keepBestOfCluster(scored, "doc_id", "n_tokens", edges,
       "a_id", "b_id", algorithm = algorithm, localBound = localBound)
       .select("doc_id", "n_tokens", "component", "n_members")
@@ -5944,9 +5947,10 @@ object SparkEntry {
   // UNKNOWN graph topology — label propagation's O(diameter) rounds lose
   // 5.5× already at diameter 200, while near-dup clusters (tiny diameter)
   // favor label's smaller per-round shuffle. Benched alongside d17 so the
-  // round-over-round numbers carry BOTH defaults. Bound 0: d17's graph
-  // is answered on the driver, so this gate keeps star contraction
-  // itself under the oracle.
+  // round-over-round numbers carry BOTH defaults. Bound 0: d17's edges
+  // and graph are answered on the driver, so this gate keeps the
+  // ngramJaccard posting self-join and star contraction themselves
+  // under the oracle.
   define("d18_best_of_cluster_star", bestOfClusterSql) { (s, d) =>
     bestOfCluster(s, d, "star", localBound = 0)
   }

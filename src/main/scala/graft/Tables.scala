@@ -23,8 +23,11 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The table `name` under `sfDir`. Its schema comes from the file's
+    * parquet footer on the driver ([[graft.store.Store.readTable]]), so a
+    * load starts no Spark job. */
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.store.Store.readTable(spark, s"$sfDir/$name.parquet")
 
   // ---- events.ts physical-encoding normalizers -------------------------
   // The generated `events.parquet` has shipped with two different physical

@@ -1,8 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+import org.apache.spark.sql.types._
 
 import graft.functions.{TextFunctions => TF, VectorFunctions => VF}
 import graft.store.Store
@@ -81,15 +84,93 @@ object Dedup {
     * scores them as the near-dups they are (a normalized fingerprint here
     * would stamp Jaccard 1.0 onto pairs whose raw shingle sets differ,
     * silently changing the answer). The shuffle carries 8-byte keys — same
-    * collision stance as [[exact]].
+    * collision stance as [[exact]]. The proof assumes unique non-null ids:
+    * a null-id member of a rep's group pairs with the OTHER side's member
+    * as `least`/`greatest` skip the null.
+    *
+    * Driver path: with integral ids, ONE `limit(localBound + 1)` collect
+    * fetches every document's distinct shingle strings and its
+    * `MinHashBandHashes` band keys as one posting row each (default
+    * [[LocalRowBound]], 2^20 postings — postings, not documents, so a few
+    * huge documents cannot slip a large collect past it). The candidates
+    * are the distinct id pairs sharing a (band, bucket) key
+    * ([[sharedKeyCounts]]), each checked with the exact string-set
+    * Jaccard that `verifyJaccard` computes, once per pair of their rows
+    * as its join does — the ungrouped answer, which the argument above
+    * shows equal to the `groupExact` one. It refuses, and the Spark plan
+    * below runs, when the bucket self-join would produce more than
+    * `localBound` posting pairs (Σ C(n_bucket, 2)), when a candidate's
+    * union is empty (two shingle-less documents share every bucket;
+    * Spark's ANSI division raises there), or under `groupExact` when an
+    * id is null or repeated (the grouped answer then differs). Driver
+    * bytes: ~170 B per collected posting (measured, 3-word shingles on
+    * 60% of the rows), so ~170 MB at the bound. The result is a local
+    * frame with the Spark plan's schema. String ids, more postings or
+    * pairs, or `localBound = 0` run the Spark plan below.
     */
   def minHashLsh(docs: DataFrame, textCol: String, idCol: String,
                  threshold: Double, shingleSize: Int = 3,
                  numHashes: Int = 128, bands: Int = 32,
-                 groupExact: Boolean = true)
+                 groupExact: Boolean = true,
+                 localBound: Int = LocalRowBound)
                 (implicit scope: CacheScope = CacheScope.global): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    val base = spread(docs.select(col(idCol).as("id"), col(textCol).as("text")))
+    val byId = docs.select(col(idCol).as("id"), col(textCol).as("text"))
+    // one row per posting, tagged with its document row: a repeated id's
+    // rows are verified separately, as the Spark join does
+    val sh = array_distinct(TF.shingles(col("text"), shingleSize))
+    val posting = ArrayType(new StructType()
+      .add("s", StringType).add("band", IntegerType).add("bucket", LongType))
+    val postings = byId
+      .select(monotonically_increasing_id().as("doc"), col("id"), sh.as("sh"))
+      .select(col("doc"), col("id"), explode(concat(
+          transform(col("sh"),
+            s => struct(s, lit(null), lit(null))).cast(posting),
+          transform(VF.minhashBandHashes(col("sh"), numHashes, bands),
+            (h, b) => struct(lit(null), b, h)).cast(posting))).as("p"))
+      .select("doc", "id", "p.s", "p.band", "p.bucket")
+    val idField = byId.schema.head
+    collectIntegral(postings, idField, localBound)
+      .flatMap(minHashLocal(_, threshold, groupExact, localBound))
+      .map(pairFrame(byId.sparkSession, idField, _))
+      .getOrElse(minHashLshSpark(byId, threshold, shingleSize, numHashes,
+        bands, groupExact))
+  }
+
+  /** [[minHashLsh]] on the driver over its collected (doc, id, shingle,
+    * band, bucket) postings; None where the Spark plan must answer. */
+  private def minHashLocal(rows: Array[Row], threshold: Double,
+                           groupExact: Boolean,
+                           pairWorkBound: Long): Option[Seq[(Long, Long, Double)]] = {
+    val (ids, idx) = denseIds(rows, 1)
+    // each document row: (dense id index, distinct shingle set)
+    val docRows = rows.indices.groupBy(p => rows(p).getLong(0)).values
+      .map(ps => (idx(ps.head), ps.iterator.filter(!rows(_).isNullAt(2))
+        .map(rows(_).getString(2)).toSet))
+      .toSeq
+    if (groupExact && (docRows.exists(_._1 < 0) || docRows.size > ids.length))
+      return None
+    val shOf = docRows.filter(_._1 >= 0).groupMap(_._1)(_._2)
+    val bandKeys = rows.indices.iterator.collect {
+      case p if idx(p) >= 0 && !rows(p).isNullAt(3) =>
+        ((rows(p).getInt(3), rows(p).getLong(4)), idx(p))
+    }
+    sharedKeyCounts(bandKeys, ids.length, pairWorkBound).flatMap { cands =>
+      keepJaccard(ids, threshold, for {
+        (a, b, _) <- cands; sa <- shOf(a); sb <- shOf(b)
+      } yield {
+        val inter = if (sa.size <= sb.size) sa.count(sb) else sb.count(sa)
+        (a, b, inter.toLong, (sa.size + sb.size - inter).toLong)
+      })
+    }
+  }
+
+  /** The Spark plan of [[minHashLsh]] over its (id, text) projection. */
+  private def minHashLshSpark(byId: DataFrame, threshold: Double,
+                              shingleSize: Int, numHashes: Int, bands: Int,
+                              groupExact: Boolean)
+                             (implicit scope: CacheScope): DataFrame = {
+    val base = spread(byId)
 
     // stage 0 (optional): exact-dup collapse. The cached frames are tiny id
     // maps (16–24 bytes/row); the corpus text is deliberately NOT cached (it
@@ -469,15 +550,28 @@ object Dedup {
     * `maxDf` drops shingles present in more than that many documents —
     * the skew guard that keeps the shingle-join shuffle bounded at corpus
     * scale (a stopword shingle would otherwise produce a quadratic bucket).
+    *
+    * Driver path: with integral ids, ONE `limit(localBound + 1)` collect
+    * of the (id, xxhash64(shingle)) postings is both the size check and
+    * the fetch (default [[LocalRowBound]], 2^20 postings — postings, not
+    * documents, so a few huge documents cannot slip a large collect past
+    * it). The join then runs on the driver ([[sharedKeyCounts]]): the
+    * same `maxDf` guard with df counted over every posting (null ids
+    * included), |sh(doc)| as the doc's posting count, and the same
+    * double division. It refuses, and the Spark plan below runs, when
+    * the self-join would produce more than `localBound` posting pairs
+    * (Σ C(n_shingle, 2)), or when a pair's denominator is zero (only a
+    * repeated id can do that; Spark's ANSI division raises there). Driver
+    * bytes: ~110 B per collected posting (measured), so ~110 MB at the
+    * bound. The result is a local frame with the Spark plan's schema.
+    * String ids, more postings or pairs, or `localBound = 0` run the
+    * Spark plan below.
     */
   def ngramJaccard(docs: DataFrame, textCol: String, idCol: String,
                    threshold: Double, shingleSize: Int = 2,
-                   maxDf: Long = 1000L)
+                   maxDf: Long = 1000L, localBound: Int = LocalRowBound)
                   (implicit scope: CacheScope = CacheScope.global): DataFrame = {
-    // ONE scan + shingle explode, cached — the df guard, the anti-join,
-    // BOTH self-join sides AND the per-doc set sizes all read it (the
-    // previous shape re-ran the scan + regex shingling four times: once
-    // for the guard, once into the cache, twice for the sizes joins).
+    val byId = docs.select(col(idCol).as("id"), col(textCol))
     // Postings carry xxhash64(shingle), not the gram text: an 8-byte key
     // roughly halves the posting row and the self-join's key compares.
     // Collisions could merge two distinct shingles' postings (overcount
@@ -486,12 +580,47 @@ object Dedup {
     // the d4/d8/d17/d18 oracles group by the gram TEXT, so a collision
     // would surface as a gate mismatch (the duplicateWindowSpans
     // convention).
-    val inv = scope.cache(
-      spread(docs.select(col(idCol).as("id"), col(textCol)))
-        .select(col("id"),
+    def postings(df: DataFrame): DataFrame =
+      df.select(col("id"),
           explode(array_distinct(TF.shingles(col(textCol), shingleSize)))
             .as("__s"))
-        .select(col("id"), xxhash64(col("__s")).as("shingle")))
+        .select(col("id"), xxhash64(col("__s")).as("shingle"))
+    val idField = byId.schema.head
+    collectIntegral(postings(byId), idField, localBound)
+      .flatMap(ngramJaccardLocal(_, threshold, maxDf, localBound))
+      .map(pairFrame(byId.sparkSession, idField, _))
+      .getOrElse(ngramJaccardSpark(postings(spread(byId)), threshold, maxDf))
+  }
+
+  /** [[ngramJaccard]] on the driver over its collected (id, shingle)
+    * postings; None where the Spark plan must answer instead. */
+  private def ngramJaccardLocal(rows: Array[Row], threshold: Double,
+                                maxDf: Long,
+                                pairWorkBound: Long): Option[Seq[(Long, Long, Double)]] = {
+    val (ids, idx) = denseIds(rows, 0)
+    val size = new Array[Long](ids.length)
+    idx.foreach(i => if (i >= 0) size(i) += 1)
+    val df = mutable.LongMap.empty[Int]
+    rows.foreach(r => df(r.getLong(1)) = df.getOrElse(r.getLong(1), 0) + 1)
+    val kept = rows.indices.iterator.collect {
+      case p if idx(p) >= 0 && df(rows(p).getLong(1)) <= maxDf =>
+        (rows(p).getLong(1), idx(p))
+    }
+    sharedKeyCounts(kept, ids.length, pairWorkBound).flatMap { shared =>
+      keepJaccard(ids, threshold, shared.map { case (a, b, inter) =>
+        (a, b, inter.toLong, size(a) + size(b) - inter) })
+    }
+  }
+
+  /** The Spark plan of [[ngramJaccard]] over its (id, shingle) postings. */
+  private def ngramJaccardSpark(postings: DataFrame, threshold: Double,
+                                maxDf: Long)
+                               (implicit scope: CacheScope): DataFrame = {
+    // ONE scan + shingle explode, cached — the df guard, the anti-join,
+    // BOTH self-join sides AND the per-doc set sizes all read it (the
+    // previous shape re-ran the scan + regex shingling four times: once
+    // for the guard, once into the cache, twice for the sizes joins).
+    val inv = scope.cache(postings)
     // |sh(doc)| derived from the SAME cached postings (rows are distinct
     // per doc by construction) — docs with zero shingles have no rows,
     // which is fine: they can never appear in a candidate pair, and both
@@ -518,6 +647,119 @@ object Dedup {
         (col("inter").cast("double") /
           (col("n_a") + col("n_b") - col("inter")).cast("double")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
+  }
+
+  // ------------------------------------------------------------------
+  // Driver half of the bucket-join detectors
+  // ------------------------------------------------------------------
+
+  private def isIntegral(t: DataType): Boolean =
+    Seq(ByteType, ShortType, IntegerType, LongType).contains(t)
+
+  /** The posting rows when the id type is integral and they fit
+    * `bound` ([[collectAtMost]]); else None. */
+  private def collectIntegral(postings: DataFrame, idField: StructField,
+                              bound: Int): Option[Array[Row]] =
+    if (isIntegral(idField.dataType)) collectAtMost(postings, bound) else None
+
+  /** The distinct non-null integral ids of column `i`, ascending, and
+    * each row's index into them (-1 for a null id): a smaller index IS a
+    * smaller id. */
+  private def denseIds(rows: Array[Row], i: Int): (Array[Long], Array[Int]) = {
+    val ids = rows.iterator.filter(!_.isNullAt(i))
+      .map(_.getAs[Number](i).longValue).toArray.distinct
+    java.util.Arrays.sort(ids)
+    (ids, rows.map(r =>
+      if (r.isNullAt(i)) -1
+      else java.util.Arrays.binarySearch(ids, r.getAs[Number](i).longValue)))
+  }
+
+  /** The driver spelling of the self-join both detectors run,
+    * `a.key = b.key AND a.id < b.id` grouped by (a.id, b.id) and counted:
+    * for every pair of dense id indices a < b sharing a key, how many
+    * (posting of a, posting of b) pairs share one. `postings` are
+    * (key, dense id index); a repeated id or key repeats its posting.
+    * Before counting anything it refuses with None when that join would
+    * produce more than `pairWorkBound` rows (Σ C(n_key, 2)), which
+    * bounds both the driver time and the pairs it returns. Each id
+    * accumulates its counts in one dense array over the keys it posts
+    * to, so the work is that join's row count and nothing holds a pair
+    * map. */
+  private def sharedKeyCounts[K](postings: Iterator[(K, Int)], nIds: Int,
+                                 pairWorkBound: Long): Option[Seq[(Int, Int, Int)]] = {
+    val byKey = mutable.HashMap.empty[K, mutable.ArrayBuilder.ofInt]
+    postings.foreach { case (k, i) =>
+      byKey.getOrElseUpdate(k, new mutable.ArrayBuilder.ofInt) += i }
+    val buckets = byKey.valuesIterator.map(_.result()).filter(_.length > 1).toArray
+    if (buckets.iterator.map(b => b.length.toLong * (b.length - 1) / 2).sum >
+        pairWorkBound) return None
+    buckets.foreach(java.util.Arrays.sort(_))
+    // CSR: the buckets each id posts to, one entry per posting
+    val start = new Array[Int](nIds + 1)
+    buckets.foreach(_.foreach(i => start(i + 1) += 1))
+    for (i <- 0 until nIds) start(i + 1) += start(i)
+    val next = start.clone()
+    val bucketOf = new Array[Int](start(nIds))
+    buckets.indices.foreach(k => buckets(k).foreach { i =>
+      bucketOf(next(i)) = k; next(i) += 1 })
+    val count = new Array[Int](nIds)
+    val touched = new Array[Int](nIds)
+    val out = mutable.ArrayBuffer.empty[(Int, Int, Int)]
+    for (a <- 0 until nIds) {
+      var nTouched = 0
+      for (p <- start(a) until start(a + 1)) {
+        val bucket = buckets(bucketOf(p))
+        // first entry above a: the bucket is sorted
+        var lo = 0
+        var hi = bucket.length
+        while (lo < hi) {
+          val m = (lo + hi) >>> 1
+          if (bucket(m) <= a) lo = m + 1 else hi = m
+        }
+        while (lo < bucket.length) {
+          val b = bucket(lo)
+          if (count(b) == 0) { touched(nTouched) = b; nTouched += 1 }
+          count(b) += 1
+          lo += 1
+        }
+      }
+      for (t <- 0 until nTouched) {
+        out += ((a, touched(t), count(touched(t))))
+        count(touched(t)) = 0
+      }
+    }
+    Some(out.toSeq)
+  }
+
+  /** The id pairs whose Jaccard, intersection / denominator in double as
+    * the Spark plans divide, is at least `threshold`; `scored` holds
+    * (a, b, intersection, denominator) over dense id indices. None when a
+    * denominator is zero: Spark's ANSI division raises there, so the
+    * Spark plan must answer. */
+  private def keepJaccard(ids: Array[Long], threshold: Double,
+                          scored: Seq[(Int, Int, Long, Long)]): Option[Seq[(Long, Long, Double)]] =
+    if (scored.exists(_._4 == 0)) None
+    else Some(scored.iterator
+      .map { case (a, b, inter, d) => (ids(a), ids(b), inter.toDouble / d.toDouble) }
+      .filter(_._3 >= threshold).toSeq)
+
+  /** A driver-computed (a_id, b_id, jaccard) result as a local frame
+    * with the Spark plans' schema: both ids of the input id's type and
+    * nullability, jaccard a nullable double. */
+  private def pairFrame(spark: SparkSession, idField: StructField,
+                        pairs: Seq[(Long, Long, Double)]): DataFrame = {
+    def box(v: Long): Any = idField.dataType match {
+      case ByteType => v.toByte
+      case ShortType => v.toShort
+      case IntegerType => v.toInt
+      case _ => v
+    }
+    val schema = new StructType()
+      .add("a_id", idField.dataType, idField.nullable)
+      .add("b_id", idField.dataType, idField.nullable)
+      .add("jaccard", DoubleType)
+    spark.createDataFrame(
+      pairs.map { case (a, b, j) => Row(box(a), box(b), j) }.asJava, schema)
   }
 
   /** Train→eval n-gram contamination check — the "did benchmark data leak
@@ -601,11 +843,13 @@ object Dedup {
     * Returns (id, rep, keep): every document, its exact-content
     * representative, and whether it survives dedup. Soak-measured 10×
     * faster than sketching the raw corpus on a 10×-duplicated 50k-doc
-    * input.
+    * input. `localBound` goes to [[minHashLsh]] and, with `transitive`,
+    * to [[connectedComponents]]: 0 runs both on Spark.
     */
   def dedupCorpus(docs: DataFrame, textCol: String, idCol: String,
                   threshold: Double, shingleSize: Int = 3,
-                  transitive: Boolean = false)
+                  transitive: Boolean = false,
+                  localBound: Int = LocalRowBound)
                  (implicit scope: CacheScope = CacheScope.global): DataFrame = {
     val fp = spread(docs.select(col(idCol).as("id"), col(textCol).as("text")))
       .withColumn("fp", TF.fingerprint(col("text")))
@@ -616,11 +860,11 @@ object Dedup {
       .select(col("id"), col("text"))
     // groupExact=false: this input is already exact-deduped (stage 1), so
     // the sketch's own collapse stage would only re-fingerprint singletons
-    val nearPairs =
-      minHashLsh(repDocs, "text", "id", threshold, shingleSize, groupExact = false)
+    val nearPairs = minHashLsh(repDocs, "text", "id", threshold, shingleSize,
+      groupExact = false, localBound = localBound)
     if (transitive) {
       val comp = connectedComponents(repDocs.select("id"), nearPairs,
-        "id", "a_id", "b_id")
+        "id", "a_id", "b_id", localBound = localBound)
         .select(col("id").as("rep"), col("component").as("__comp"))
       withRep.join(comp, Seq("rep"))
         .select(col("id"), col("rep"),
@@ -713,7 +957,7 @@ object Dedup {
       edges.select(col(aCol).as("src"), col(bCol).as("dst")))
     val nodeIds = nodes.select(col(idCol).as("id"))
     val integral = Seq(nodeIds, oriented).flatMap(_.schema.fields)
-      .forall(f => Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType))
+      .forall(f => isIntegral(f.dataType))
     val local =
       if (!integral) None
       else collectAtMost(oriented, localBound)

@@ -6,7 +6,11 @@ import org.apache.spark.sql.functions._
 package object operators {
   /** Default row bound under which the iterative operators (BPE training,
     * connected components, exact quantiles) run their fixpoint on the
-    * driver instead of one Spark job per round. */
+    * driver instead of one Spark job per round, and the bucket-join
+    * detectors (`Dedup.ngramJaccard`, `Dedup.minHashLsh`) their posting
+    * self-join: there it bounds both the collected postings and the
+    * pairs the join would produce (Σ C(n_key, 2)). Each operator takes
+    * it as a `localBound` parameter; 0 forces the Spark path. */
   val LocalRowBound: Int = 1 << 20
 
   /** The rows of `df` when it holds at most `bound` of them, else None.

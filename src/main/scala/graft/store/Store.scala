@@ -7,11 +7,12 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.FileStatus
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -85,21 +86,22 @@ object Store {
 
   /** The pointer-resolved read of `sub`. */
   def read(spark: SparkSession, path: String, sub: String): DataFrame =
-    readDir(spark, resolveDataDir(path, sub))
+    readTable(spark, resolveDataDir(path, sub))
 
-  /** Read the parquet table at `dir` with the schema Spark wrote into one
-    * part file's footer: Spark's own inference would run a job to read
-    * that same footer. Hive `cell=` partitions are still discovered from
-    * the directory names. A dir with no Spark-written part file falls
-    * back to Spark's read, and to its error for a missing dir. */
-  private def readDir(spark: SparkSession, dir: String): DataFrame = {
+  /** Read the parquet table at `path` (a directory or one file) with the
+    * schema [[footerSchema]] takes from its first part file: Spark's own
+    * inference would run a job to read that same footer. Hive `cell=`
+    * partitions are still discovered from the directory names. A dir
+    * with no part file falls back to Spark's read, and to its error for
+    * a missing path. */
+  private[graft] def readTable(spark: SparkSession, path: String): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val first =
-      try partFiles(dir, conf).nextOption()
+      try partFiles(path, conf).nextOption()
       catch { case _: java.io.FileNotFoundException => None }
-    first.flatMap(footerSchema(_, conf)) match {
-      case Some(schema) => spark.read.schema(schema).parquet(dir)
-      case None => spark.read.parquet(dir)
+    first.map(footerSchema(spark, _, conf)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
     }
   }
 
@@ -136,9 +138,7 @@ object Store {
     val conf = spark.sessionState.newHadoopConf()
     val parts = partFiles(resolveDataDir(path, Params), conf).toSeq
     require(parts.nonEmpty, s"no params part files under $path")
-    val schema = footerSchema(parts.head, conf).getOrElse(
-      throw new IllegalStateException(s"params under $path carry no " +
-        s"Spark schema in their parquet footer ($SparkRowMetadata)"))
+    val schema = footerSchema(spark, parts.head, conf)
     val fields = schema.fields.map(_.copy(nullable = true))
     val group = parts.iterator.map { part =>
       val reader = ParquetReader.builder(new GroupReadSupport, part.getPath)
@@ -385,7 +385,7 @@ object Store {
       if (Files.isDirectory(Paths.get(live)))
         commitGeneration(path, sub,
             Some(openEpochs.getOrElse(sub, readEpoch(path, sub)))) { dir =>
-          val df = readDir(spark, live)
+          val df = readTable(spark, live)
           if (df.columns.contains("cell"))
             df.repartition(col("cell"))
               .write.mode("overwrite").partitionBy("cell").parquet(dir)
@@ -461,32 +461,35 @@ object Store {
         catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
     }
 
-  /** The key under which Spark records a table's schema in each parquet
-    * footer it writes. */
-  private val SparkRowMetadata = "org.apache.spark.sql.parquet.row.metadata"
-
-  /** The parquet part files under `dir`, recursively (hive partition
+  /** The parquet part files under `path`, recursively (hive partition
     * dirs), skipping what Spark's reader skips: any `_`- or `.`-prefixed
-    * name on the way (committer markers, checksums, `_temporary`). */
-  private def partFiles(dir: String, conf: Configuration): Iterator[FileStatus] = {
-    val root = new org.apache.hadoop.fs.Path(dir)
+    * name on the way (committer markers, checksums, `_temporary`). A
+    * file `path` is its own only part. */
+  private def partFiles(path: String, conf: Configuration): Iterator[FileStatus] = {
+    val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
     val prefix = fs.makeQualified(root).toUri.getPath.stripSuffix("/") + "/"
     val it = fs.listFiles(root, true)
     Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).filter { s =>
       val rel = s.getPath.toUri.getPath.stripPrefix(prefix)
+      val names = if (rel == s.getPath.toUri.getPath)
+        Array(s.getPath.getName) else rel.split('/')
       s.getPath.getName.endsWith(".parquet") &&
-        rel.split('/').forall(n => !n.startsWith("_") && !n.startsWith("."))
+        names.forall(n => !n.startsWith("_") && !n.startsWith("."))
     }
   }
 
-  /** The schema Spark wrote into `part`'s footer; None for a file that
-    * some other writer produced. */
-  private def footerSchema(part: FileStatus,
-                           conf: Configuration): Option[StructType] = {
+  /** The schema a Spark read infers from `part` (mergeSchema off), read
+    * on the driver by Spark's own footer rule: the schema Spark wrote
+    * into the footer when there is one, else the parquet schema
+    * converted under the session's SQL conf — so a file another writer
+    * produced maps as Spark maps it (`nanosAsLong`, binary-as-string). */
+  private def footerSchema(spark: SparkSession, part: FileStatus,
+                           conf: Configuration): StructType = {
     val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(part, conf))
-    try Option(reader.getFileMetaData.getKeyValueMetaData.get(SparkRowMetadata))
-      .map(DataType.fromJson(_).asInstanceOf[StructType])
+    try ParquetFileFormat.readSchemaFromFooter(
+      new Footer(part.getPath, reader.getFooter),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
     finally reader.close()
   }
 

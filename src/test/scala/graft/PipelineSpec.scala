@@ -279,15 +279,19 @@ class PipelineSpec extends AnyFunSuite {
       baseDocs.select((col("doc_id") + 100000).as("doc_id"), col("text")))
       .unionByName(baseDocs.limit(30).select(
         (col("doc_id") + 200000).as("doc_id"), upper(col("text")).as("text")))
-    def pairs(groupExact: Boolean) =
-      Dedup.minHashLsh(dupped, "text", "doc_id", threshold = 0.5,
-          groupExact = groupExact)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val grouped = pairs(groupExact = true)
-    val ungrouped = pairs(groupExact = false)
-    assert(grouped == ungrouped)
-    // sanity: the duplication itself must have produced J=1.0 pairs
-    assert(grouped.exists(_._3 == 1.0))
+    // bound 0 runs the Spark plans, where stage 0 exists; the driver path
+    // (default bound) answers ungrouped under both settings
+    for (bound <- Seq(0, LocalRowBound)) {
+      def pairs(groupExact: Boolean) =
+        Dedup.minHashLsh(dupped, "text", "doc_id", threshold = 0.5,
+            groupExact = groupExact, localBound = bound)
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      val grouped = pairs(groupExact = true)
+      val ungrouped = pairs(groupExact = false)
+      assert(grouped == ungrouped)
+      // sanity: the duplication itself must have produced J=1.0 pairs
+      assert(grouped.exists(_._3 == 1.0))
+    }
   }
 
   test("simhash near-dup: pigeonhole blocking is EXACT for hamming ≤ 3") {
@@ -385,7 +389,9 @@ class PipelineSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col => c}
     val before = spark.sparkContext.getPersistentRDDs.keySet
     implicit val scope: graft.operators.CacheScope = new graft.operators.CacheScope
-    Dedup.minHashLsh(docs.limit(50), "text", "doc_id", threshold = 0.5).count()
+    // bound 0: the Spark plan is the one that persists its shingle sets
+    Dedup.minHashLsh(docs.limit(50), "text", "doc_id", threshold = 0.5,
+      localBound = 0).count()
     assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty)
     scope.release()
     scope.release() // idempotent
@@ -2039,6 +2045,126 @@ class PipelineSpec extends AnyFunSuite {
       msgs)
     val withNull = Seq((Some(1L), Option.empty[Long])).toDF("a", "b")
     intercept[IllegalArgumentException](cc(six, withNull, LocalRowBound))
+    graft.operators.CacheScope.global.release()
+  }
+
+  /** A detector's answer as a multiset of rows, its schema and the jobs
+    * it started, result collect included. */
+  private def pairRun(run: => org.apache.spark.sql.DataFrame) =
+    SparkSpec.jobsStartedBy {
+      val df = run
+      (df.collect().toSeq.map(_.toSeq).groupBy(identity).view
+        .mapValues(_.size).toMap, df.schema)
+    } match { case ((bag, schema), jobs) => (bag, schema, jobs) }
+
+  test("ngramJaccard on the driver equals the Spark self-join: repeated, null and extreme ids, maxDf, both bounds") {
+    import spark.implicits._
+    val texts = Seq(
+      Some(1L) -> "a b c d", Some(1L) -> "a b c e", Some(2L) -> "a b c d",
+      None -> "a b c d", Some(Long.MinValue) -> "x y z", Some(-3L) -> "a b",
+      Some(Long.MaxValue) -> "x y z w", Some(3L) -> null, Some(4L) -> "",
+      Some(5L) -> "a", Some(6L) -> "x y q")
+    val corpus = texts.toDF("doc_id", "text")
+    def ngram(df: org.apache.spark.sql.DataFrame, bound: Int,
+              maxDf: Long = 1000L) = pairRun(Dedup.ngramJaccard(df, "text",
+      "doc_id", threshold = 0.2, shingleSize = 2, maxDf = maxDf,
+      localBound = bound))
+    // "b c" has df 4 (id 1 twice, id 2, the null id) and "a b" df 5:
+    // maxDf 4 drops "a b", maxDf 3 both
+    for (maxDf <- Seq(1000L, 4L, 3L)) {
+      val (local, localSchema, localJobs) = ngram(corpus, LocalRowBound, maxDf)
+      val (dist, distSchema, _) = ngram(corpus, 0, maxDf)
+      assert(local == dist && localSchema == distSchema, (maxDf, local, dist))
+      assert(localJobs <= 3, s"driver path started $localJobs jobs")
+    }
+    assert(ngram(corpus, LocalRowBound)._1.keySet.exists(_.head == Long.MinValue))
+    // Int ids keep their type; String ids take the Spark plan
+    val ints = Seq((7, "p q r"), (-2, "p q s"), (9, "p q r")).toDF("doc_id", "text")
+    val (intLocal, intSchema, _) = ngram(ints, LocalRowBound)
+    val (intDist, intDistSchema, _) = ngram(ints, 0)
+    assert(intLocal == intDist && intSchema == intDistSchema &&
+      intLocal.nonEmpty, intSchema)
+    val strs = Seq(("b", "p q r"), ("a", "p q r")).toDF("doc_id", "text")
+    val (strOut, _, strJobs) = ngram(strs, LocalRowBound)
+    assert(strOut == ngram(strs, 0)._1 && strJobs > 3, strJobs)
+    // postings bound: 5 docs of one bigram each are 5 postings, and
+    // their C(5, 2) = 10 shared pairs the pair-work bound
+    val five = (1L to 5L).map(i => (i, "s t")).toDF("doc_id", "text")
+    val (at5, _, jobs5) = ngram(five, 5)
+    val (at10, _, jobs10) = ngram(five, 10)
+    val (at4, _, jobs4) = ngram(five, 4)
+    assert(at5 == at10 && at4 == at10 && at10.size == 10)
+    assert(jobs10 <= 3 && jobs5 > 3 && jobs4 > 3, (jobs4, jobs5, jobs10))
+    // a zero denominator (repeated ids only) raises on both paths
+    val zero = Seq((1L, "s t"), (1L, "s t"), (2L, "s t"), (2L, "s t"))
+      .toDF("doc_id", "text")
+    for (bound <- Seq(0, LocalRowBound)) {
+      val e = intercept[ArithmeticException](
+        ngram(zero, bound))
+      assert(e.getMessage.contains("DIVIDE_BY_ZERO"))
+    }
+    // the whole detector on the test corpus: load, collect, answer
+    val (_, _, sfJobs) = pairRun(Dedup.ngramJaccard(
+      Tables.load(spark, sf, "documents"), "text", "doc_id", threshold = 0.5,
+      shingleSize = 2, maxDf = 1000000L))
+    assert(sfJobs <= 3, s"ngramJaccard at sf started $sfJobs jobs")
+    graft.operators.CacheScope.global.release()
+  }
+
+  test("minHashLsh on the driver equals the Spark plan: repeated, null and extreme ids, empty texts, both bounds") {
+    import spark.implicits._
+    val texts = Seq(
+      Some(1L) -> "a b c d e f", Some(1L) -> "a b c d e g", Some(2L) -> "a b c d e f",
+      Some(Long.MinValue) -> "p q r s t", Some(Long.MaxValue) -> "p q r s t u",
+      Some(3L) -> "a b c d e g h", Some(4L) -> "", Some(6L) -> "p q r s t")
+    val withNull = texts :+ (None -> "a b c d e f")
+    def mh(df: org.apache.spark.sql.DataFrame, bound: Int,
+           groupExact: Boolean = true, numHashes: Int = 128, bands: Int = 32) =
+      pairRun(Dedup.minHashLsh(df, "text", "doc_id", threshold = 0.3,
+        numHashes = numHashes, bands = bands, groupExact = groupExact,
+        localBound = bound))
+    for (input <- Seq(texts, withNull); groupExact <- Seq(false, true)) {
+      val corpus = input.toDF("doc_id", "text")
+      val (local, localSchema, localJobs) = mh(corpus, LocalRowBound, groupExact)
+      val (dist, distSchema, _) = mh(corpus, 0, groupExact)
+      assert(local == dist && localSchema == distSchema,
+        (input.size, groupExact, local, dist))
+      // a repeated id under groupExact takes the Spark plan
+      assert((localJobs <= 3) == !groupExact, (groupExact, localJobs))
+    }
+    val unique = texts.filter(_._1 != Some(1L)).toDF("doc_id", "text")
+    val (uLocal, _, uJobs) = mh(unique, LocalRowBound)
+    assert(uLocal == mh(unique, 0)._1 && uJobs <= 3 &&
+      uLocal.keySet.exists(_.head == Long.MinValue), uLocal)
+    // a null text, "" and "one" have no shingles: two or more share every
+    // band bucket and 0/0 raises on both paths
+    val empties = Seq((1L, ""), (2L, null), (3L, "one"), (4L, "a b c d"))
+      .toDF("doc_id", "text")
+    for (bound <- Seq(0, LocalRowBound)) {
+      val e = intercept[ArithmeticException](
+        mh(empties, bound, groupExact = false))
+      assert(e.getMessage.contains("DIVIDE_BY_ZERO"))
+    }
+    // Int ids keep their type; String ids take the Spark plan
+    val ints = Seq((7, "p q r s"), (-2, "p q r t"), (9, "p q r s")).toDF("doc_id", "text")
+    val (intLocal, intSchema, _) = mh(ints, LocalRowBound)
+    val (intDist, intDistSchema, _) = mh(ints, 0)
+    assert(intLocal == intDist && intSchema == intDistSchema && intLocal.nonEmpty)
+    val strs = Seq(("b", "p q r s"), ("a", "p q r s")).toDF("doc_id", "text")
+    val (strOut, _, strJobs) = mh(strs, LocalRowBound)
+    assert(strOut == mh(strs, 0)._1 && strJobs > 3, strJobs)
+    // postings bound: 6 copies of "a b c" post 1 shingle and 2 band keys
+    // each (18 postings); the 2 shared buckets make 2·C(6, 2) = 30 pairs
+    val six = (1L to 6L).map(i => (i, "a b c")).toDF("doc_id", "text")
+    def small(bound: Int) = mh(six, bound, numHashes = 4, bands = 2)
+    val (at30, _, jobs30) = small(30)
+    val (at18, _, jobs18) = small(18)
+    val (at17, _, jobs17) = small(17)
+    assert(at30 == at18 && at17 == at18 && at30.size == 15)
+    assert(jobs30 <= 3 && jobs18 > 3 && jobs17 > 3, (jobs17, jobs18, jobs30))
+    val (_, _, sfJobs) = pairRun(Dedup.minHashLsh(
+      Tables.load(spark, sf, "documents"), "text", "doc_id", threshold = 0.5))
+    assert(sfJobs <= 3, s"minHashLsh at sf started $sfJobs jobs")
     graft.operators.CacheScope.global.release()
   }
 

@@ -105,4 +105,18 @@ class StoreSpec extends AnyFunSuite {
       assert(served._1.count() > 0)
     }
   }
+
+  test("Tables.load reads every table's schema from its footer: Spark's schema, no job") {
+    // the test tables are written by arrow, not Spark: their footers
+    // carry no Spark schema, so the parquet schema is converted under the
+    // session conf, as Spark's inference converts it (events.ts, a
+    // TIMESTAMP(MICROS) without UTC adjustment, reads as TIMESTAMP_NTZ)
+    for (name <- Tables.names) {
+      val path = s"$sf/$name.parquet"
+      val (df, jobs) = SparkSpec.jobsStartedBy(Tables.load(spark, sf, name))
+      assert(jobs == 0, s"Tables.load($name) started $jobs Spark job(s)")
+      assert(df.schema == spark.read.parquet(path).schema,
+        s"$name: ${df.schema.simpleString}")
+    }
+  }
 }
